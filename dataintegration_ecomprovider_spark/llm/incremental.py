@@ -121,12 +121,12 @@ def maintain_dedup_index(
     no shingles — retract the (id) signature row and all `bands` (id,
     band) rows (the band-key set per id is fixed, so upserts replace in
     place and delete markers enumerate range(bands) without reading the
-    index).  Each refresh is one merge-on-read commit per side table:
-    O(changed rows) read (CDC, bridged across compactions) and write.
-    The signature table commits FIRST: a reader between the two commits
-    sees stale band rows whose candidates die in the inner sig join
-    (deleted docs can't match) — never the reverse, where a deleted
-    document would still score.
+    index).  Each refresh commits both side tables in ONE merge-on-read
+    version (merge_many_mor): O(changed rows) read (CDC, bridged across
+    compactions) and write, and no reader ever sees new signatures
+    beside stale bands.  The documents feed is the shared span feed
+    (materialize.span_change_feed), so the postings and doc-length
+    views of the same span pay no second diff.
 
     First call seeds both tables from the corpus at the watermarked
     version; the watermark lives in the store sync-state under
@@ -175,10 +175,14 @@ def maintain_dedup_index(
         return {"dst": dst, "from_version": last, "to_version": src_version,
                 "mode": "noop"}
     else:
+        from dataintegration_ecomprovider_spark.plans import materialize
+
         try:
-            changes = publish.read_changes(
-                spark, root, src, from_version=last, to_version=src_version,
-                keys=[id_col],
+            # the documents feed comes from the shared span cache: the
+            # postings and doc-length views of the same span (refreshing
+            # beside this one) reuse one diff + count
+            changes, n_changed = materialize.span_change_feed(
+                spark, root, src, last, src_version, [id_col],
             )
         except KeyError:
             # consumed-from version vacuumed — delta unrecoverable
@@ -188,8 +192,6 @@ def maintain_dedup_index(
 
             with runtime.job_scope() as scope:
                 try:
-                    changes = runtime.track(changes.persist())
-                    n_changed = changes.count()
                     if n_changed == 0:
                         mode = "empty"
                     else:
@@ -199,13 +201,17 @@ def maintain_dedup_index(
                         # near-empty file per shuffle partition (MoR reads
                         # replay every delta file)
                         nparts = max(1, math.ceil(n_changed / 500_000))
-                        new_sigs, new_bands = _build(
+                        new_sigs, _ = _build(
                             changes.filter(F.col("change_type") != "delete")
                         )
                         new_sigs = runtime.track(
                             new_sigs.coalesce(nparts).persist()
                         )
-                        new_bands = new_bands.coalesce(nparts)
+                        # bands from the persisted sigs: the two deltas
+                        # stage concurrently and share one shingling pass
+                        new_bands = dedup.band_buckets(
+                            new_sigs, num_hashes, bands, portable
+                        )
                         # retract deletes AND changed docs whose new text
                         # shingles to nothing (they have no sig row, so an
                         # upsert alone would leave the old one standing)
@@ -214,20 +220,19 @@ def maintain_dedup_index(
                             .distinct()
                             .join(new_sigs.select("id"), "id", "left_anti")
                         )
-                        publish.merge_into_mor(
-                            spark, root, dst, new_sigs,
-                            keys=["id"], deletes=del_ids,
-                        )
                         del_band_rows = del_ids.select(
                             "id",
                             F.explode(
                                 F.sequence(F.lit(0), F.lit(bands - 1))
                             ).alias("band"),
                         )
-                        publish.merge_into_mor(
-                            spark, root, bands_table, new_bands,
-                            keys=["id", "band"], deletes=del_band_rows,
-                        )
+                        publish.merge_many_mor(spark, root, {
+                            dst: {"staging": new_sigs, "keys": ["id"],
+                                  "deletes": del_ids},
+                            bands_table: {"staging": new_bands,
+                                          "keys": ["id", "band"],
+                                          "deletes": del_band_rows},
+                        })
                         mode = "delta"
                 finally:
                     scope.release(spark)

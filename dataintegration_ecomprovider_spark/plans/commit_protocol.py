@@ -128,6 +128,10 @@ class CommitProtocol:
 # read until the next commit.
 _JSON_DOC_CACHE: dict[str, tuple[tuple, object]] = {}
 _JSON_DOC_CACHE_MAX = 1024
+# several driver threads read manifests at once (concurrent view refresh,
+# concurrent staging): inserts and evictions hold this lock, because
+# eviction iterates the dict another thread may be growing
+_JSON_DOC_LOCK = threading.Lock()
 
 
 def _cached_json_doc(path: str):
@@ -148,9 +152,10 @@ def _cached_json_doc(path: str):
         # aux file): absent, same as the stat miss
         _JSON_DOC_CACHE.pop(path, None)
         return None
-    _JSON_DOC_CACHE[path] = (sig, doc)
-    while len(_JSON_DOC_CACHE) > _JSON_DOC_CACHE_MAX:
-        _JSON_DOC_CACHE.pop(next(iter(_JSON_DOC_CACHE)))
+    with _JSON_DOC_LOCK:
+        _JSON_DOC_CACHE[path] = (sig, doc)
+        while len(_JSON_DOC_CACHE) > _JSON_DOC_CACHE_MAX:
+            _JSON_DOC_CACHE.pop(next(iter(_JSON_DOC_CACHE)))
     return doc
 
 

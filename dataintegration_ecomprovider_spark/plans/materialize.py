@@ -38,8 +38,10 @@ and mirrored in every oracle.
 
 from __future__ import annotations
 
+import concurrent.futures
 import json
 import os
+import threading
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,12 +69,27 @@ COUNT_COL = "cnt"
 # ends (its data paths carry globally unique txids), so a re-minted
 # store at the same filesystem path can never hit a stale feed, and a
 # vacuumed span drops via the publish uncache hook below.  The cache —
-# not any job scope — owns the persists; it is capped (evictions
+# not any job scope — owns the persists; it is capped (LRU evictions
 # unpersist) and runtime.release_caches() clears it, so bench reps and
 # long-lived drivers start clean.
+#
+# Declared views refresh concurrently (refresh_declared_views), so the
+# cache is lock-guarded and SINGLE-FLIGHT: siblings asking for one span
+# at the same moment wait for the first caller's diff instead of each
+# running their own.
 
 _SPAN_FEEDS: "dict[tuple, tuple[object, DataFrame, int]]" = {}
 _SPAN_FEEDS_MAX = 6
+_SPAN_FEEDS_LOCK = threading.Lock()
+_SPAN_INFLIGHT: "dict[tuple, concurrent.futures.Future]" = {}
+
+
+def _unpersist_all(dfs, blocking: bool = False) -> None:
+    for df in dfs:
+        try:
+            df.unpersist(blocking)
+        except Exception:
+            pass
 
 
 def span_change_feed(
@@ -87,19 +104,25 @@ def span_change_feed(
 ) -> tuple[DataFrame, int]:
     """The PERSISTED CDC feed and its row count for one immutable version
     span of `src` — computed once per (span, feed shape) and shared by
-    every maintainer refreshing a view of that source in the same pass.
-    Raises KeyError exactly where read_changes would (span end vacuumed /
-    table absent), so callers keep their re-seed fallback unchanged.
+    every maintainer refreshing a view of that source in the same pass,
+    including maintainers asking concurrently (they wait for the one
+    diff in flight).  Raises KeyError exactly where read_changes would
+    (span end vacuumed / table absent), so callers keep their re-seed
+    fallback unchanged.
 
     The key is the pair of `src` MANIFEST ENTRIES at the span ends, not
     the version numbers: sibling views watermark at slightly shifted
     versions (each view's own commits advance the store), but a span
-    over which `src`'s entry did not move carries the identical feed —
-    the diff plan is a pure function of the two entries (the fast path's
-    delta suffix is their delta-list difference; entries can never
-    revert to an earlier value because data paths carry fresh txids).
-    `where`-scoped feeds keep the raw versions in the key (their scan
-    resolution is version-addressed)."""
+    over which `src`'s entry did not move carries the identical feed.
+    That is safe because the diff plan is a pure function of the two
+    entries: every data path an entry names is an immutable directory
+    with a fresh txid, so equal entries denote equal table states.  An
+    entry CAN recur at a later version — rollback re-commits an older
+    version's table map verbatim — and a recurring entry still denotes
+    the same state, so a hit stays exact.  `where`-scoped feeds also key
+    on the raw versions (their scan resolution is version-addressed);
+    the where SHAPE and the versions are separate key parts, so a newer
+    span of one (source, shape) supersedes the older one."""
     import weakref
 
     ident = (
@@ -110,70 +133,75 @@ def span_change_feed(
             publish.tables_at(root, to_version).get(src), sort_keys=True
         ),
     )
+    # (session, store, source, span entries, keys, include_old, where
+    # shape, where-scoped versions); the supersede test below compares
+    # every part but the two span parts, 3 and 7
     key = (
         id(spark), os.path.realpath(root), src, ident, tuple(keys),
-        bool(include_old),
-        (repr(tuple(where)), int(from_version), int(to_version))
-        if where else None,
+        bool(include_old), repr(tuple(where)) if where else None,
+        (int(from_version), int(to_version)) if where else None,
     )
-    hit = _SPAN_FEEDS.get(key)
-    if hit is not None:
-        ref, df, n = hit
-        if ref() is spark:
-            return df, n
-        del _SPAN_FEEDS[key]
-    changes = publish.read_changes(
-        spark, root, src, from_version=from_version, to_version=to_version,
-        keys=list(keys), include_old=include_old, where=where,
-    ).persist()
-    n = changes.count()
-    # supersede: a NEW span for the same (source, shape) means the store
-    # advanced past the old one — no sibling will ask for it again, and
-    # every lingering persisted plan costs all later actions a
-    # CacheManager plan-comparison walk (plus executor storage at scale)
-    stale = [
-        k for k in _SPAN_FEEDS
-        if (k[0], k[1], k[2], k[4], k[5], k[6]) ==
-           (key[0], key[1], key[2], key[4], key[5], key[6])
-    ]
-    for k in stale:
-        _, old_df, _ = _SPAN_FEEDS.pop(k)
-        try:
-            old_df.unpersist()
-        except Exception:
-            pass
-    _SPAN_FEEDS[key] = (weakref.ref(spark), changes, n)
-    while len(_SPAN_FEEDS) > _SPAN_FEEDS_MAX:
-        _, old_df, _ = _SPAN_FEEDS.pop(next(iter(_SPAN_FEEDS)))
-        try:
-            old_df.unpersist()
-        except Exception:
-            pass
+    shape = key[:3] + key[4:7]
+    with _SPAN_FEEDS_LOCK:
+        hit = _SPAN_FEEDS.pop(key, None)
+        if hit is not None and hit[0]() is spark:
+            _SPAN_FEEDS[key] = hit  # re-insert: most recently used last
+            return hit[1], hit[2]
+        pending = _SPAN_INFLIGHT.get(key)
+        owner = pending is None
+        if owner:
+            pending = _SPAN_INFLIGHT[key] = concurrent.futures.Future()
+    if not owner:
+        return pending.result()  # re-raises the computing caller's error
+    try:
+        changes = publish.read_changes(
+            spark, root, src, from_version=from_version,
+            to_version=to_version, keys=list(keys),
+            include_old=include_old, where=where,
+        ).persist()
+        n = changes.count()
+    except BaseException as e:
+        with _SPAN_FEEDS_LOCK:
+            del _SPAN_INFLIGHT[key]
+        pending.set_exception(e)
+        raise
+    with _SPAN_FEEDS_LOCK:
+        del _SPAN_INFLIGHT[key]
+        # supersede: a NEW span for the same (source, shape) means the
+        # store advanced past the old one — no sibling will ask for it
+        # again, and every lingering persisted plan costs all later
+        # actions a CacheManager plan-comparison walk (plus executor
+        # storage at scale)
+        evicted = [
+            _SPAN_FEEDS.pop(k)[1] for k in list(_SPAN_FEEDS)
+            if k[:3] + k[4:7] == shape
+        ]
+        _SPAN_FEEDS[key] = (weakref.ref(spark), changes, n)
+        while len(_SPAN_FEEDS) > _SPAN_FEEDS_MAX:
+            evicted.append(_SPAN_FEEDS.pop(next(iter(_SPAN_FEEDS)))[1])
+    pending.set_result((changes, n))
+    _unpersist_all(evicted)
     return changes, n
 
 
 def clear_span_feeds(blocking: bool = False) -> None:
     """Unpersist and drop every cached span feed (release_caches hook)."""
-    while _SPAN_FEEDS:
-        _, df, _ = _SPAN_FEEDS.pop(next(iter(_SPAN_FEEDS)))
-        try:
-            df.unpersist(blocking)
-        except Exception:
-            pass
+    with _SPAN_FEEDS_LOCK:
+        dfs = [df for _, df, _ in _SPAN_FEEDS.values()]
+        _SPAN_FEEDS.clear()
+    _unpersist_all(dfs, blocking)
 
 
 def _drop_span_feeds_under(path_prefix: str) -> None:
     """Vacuum/compact deleted data dirs under this path: drop any feed
     whose store root contains them (publish uncache hook)."""
     pp = os.path.realpath(path_prefix)
-    for k in [
-        k for k in _SPAN_FEEDS if pp.startswith(k[1]) or k[1].startswith(pp)
-    ]:
-        _, df, _ = _SPAN_FEEDS.pop(k)
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    with _SPAN_FEEDS_LOCK:
+        dropped = [
+            _SPAN_FEEDS.pop(k)[1] for k in list(_SPAN_FEEDS)
+            if pp.startswith(k[1]) or k[1].startswith(pp)
+        ]
+    _unpersist_all(dropped)
 
 
 from dataintegration_ecomprovider_spark import runtime as _runtime  # noqa: E402
@@ -1571,62 +1599,104 @@ def _view_refresh_order(views: dict) -> list[str]:
     return order
 
 
+def _view_maintainer(kind: str):
+    """The maintain_* function for a declared view kind, looked up at
+    call time (local imports: those modules import publish, not this
+    module)."""
+    if kind == "topics":
+        from dataintegration_ecomprovider_spark.llm.similarity import (
+            maintain_topic_assignments as fn,
+        )
+    elif kind == "minhash":
+        from dataintegration_ecomprovider_spark.llm.incremental import (
+            maintain_dedup_index as fn,
+        )
+    elif kind == "ivf":
+        from dataintegration_ecomprovider_spark.llm.similarity import (
+            maintain_ivf_cells as fn,
+        )
+    elif kind == "postings":
+        from dataintegration_ecomprovider_spark.llm.search import (
+            maintain_text_index as fn,
+        )
+    elif kind == "doc_lengths":
+        from dataintegration_ecomprovider_spark.llm.search import (
+            maintain_doc_lengths as fn,
+        )
+    elif kind == "term_df":
+        from dataintegration_ecomprovider_spark.llm.search import (
+            maintain_term_df as fn,
+        )
+    elif kind == "shingles":
+        from dataintegration_ecomprovider_spark.llm.curation import (
+            maintain_corpus_shingles as fn,
+        )
+    elif kind == "contamination":
+        from dataintegration_ecomprovider_spark.llm.curation import (
+            maintain_contamination as fn,
+        )
+    elif kind == "pq_codes":
+        from dataintegration_ecomprovider_spark.llm.similarity import (
+            maintain_pq_codes as fn,
+        )
+    elif kind == "ivfpq":
+        from dataintegration_ecomprovider_spark.llm.similarity import (
+            maintain_ivfpq_codes as fn,
+        )
+    elif kind == "projection":
+        fn = maintain_projection
+    else:
+        fn = maintain_aggregate if kind == "aggregate" else maintain_join
+    return fn
+
+
 def refresh_declared_views(spark: SparkSession, root: str) -> dict:
-    """Refresh every declared view in DEPENDENCY order (see
-    _view_refresh_order), isolating per-view failures.
-    Returns {"views": {dst: maintain_* result}, "errors": {dst: str}}."""
-    report: dict = {"views": {}, "errors": {}}
+    """Refresh every declared view, CONCURRENTLY along the view DAG:
+    each view starts as soon as every declared view it reads has
+    finished (no wait for a whole dependency level), and independent
+    maintainers overlap on a runtime.context_pool — so a pass costs its
+    longest dependency chain (postings → term_df), not the sum of its
+    views.  Workers run in a copy of the caller's contextvars context,
+    so persists a maintainer tracks outside its own job_scope land in
+    the caller's scope.  Per-view failures are isolated: a failed view
+    lands in ``errors`` and its dependents still refresh, exactly as a
+    sequential pass would.  Returns {"views": {dst: maintain_* result},
+    "errors": {dst: str}}, both in dependency order
+    (_view_refresh_order) whatever order the views finished in."""
+    from dataintegration_ecomprovider_spark import runtime
+
     views = declared_views(root)
-    for dst in _view_refresh_order(views):
+    order = _view_refresh_order(views)
+    waits = {
+        dst: {s for s in _view_sources(views[dst]) if s in views}
+        for dst in order
+    }
+
+    def _refresh(dst: str):
         spec = dict(views[dst])
-        kind = spec.pop("kind")
-        if kind == "topics":
-            # local import: similarity imports publish, not this module
-            from dataintegration_ecomprovider_spark.llm.similarity import (
-                maintain_topic_assignments as fn,
-            )
-        elif kind == "minhash":
-            from dataintegration_ecomprovider_spark.llm.incremental import (
-                maintain_dedup_index as fn,
-            )
-        elif kind == "ivf":
-            from dataintegration_ecomprovider_spark.llm.similarity import (
-                maintain_ivf_cells as fn,
-            )
-        elif kind == "postings":
-            from dataintegration_ecomprovider_spark.llm.search import (
-                maintain_text_index as fn,
-            )
-        elif kind == "doc_lengths":
-            from dataintegration_ecomprovider_spark.llm.search import (
-                maintain_doc_lengths as fn,
-            )
-        elif kind == "term_df":
-            from dataintegration_ecomprovider_spark.llm.search import (
-                maintain_term_df as fn,
-            )
-        elif kind == "shingles":
-            from dataintegration_ecomprovider_spark.llm.curation import (
-                maintain_corpus_shingles as fn,
-            )
-        elif kind == "contamination":
-            from dataintegration_ecomprovider_spark.llm.curation import (
-                maintain_contamination as fn,
-            )
-        elif kind == "pq_codes":
-            from dataintegration_ecomprovider_spark.llm.similarity import (
-                maintain_pq_codes as fn,
-            )
-        elif kind == "ivfpq":
-            from dataintegration_ecomprovider_spark.llm.similarity import (
-                maintain_ivfpq_codes as fn,
-            )
-        elif kind == "projection":
-            fn = maintain_projection
-        else:
-            fn = maintain_aggregate if kind == "aggregate" else maintain_join
+        fn = _view_maintainer(spec.pop("kind"))
         try:
-            report["views"][dst] = fn(spark, root, **spec)
+            return fn(spark, root, **spec), None
         except Exception as e:  # noqa: BLE001 — per-view isolation
-            report["errors"][dst] = f"{type(e).__name__}: {e}"
+            return None, f"{type(e).__name__}: {e}"
+
+    outcome: dict = {}
+    pending, running = list(order), {}
+    with runtime.context_pool(len(order)) as pool:
+        while pending or running:
+            for dst in [d for d in pending if waits[d] <= outcome.keys()]:
+                pending.remove(dst)
+                running[pool.submit(_refresh, dst)] = dst
+            done, _ = concurrent.futures.wait(
+                running, return_when=concurrent.futures.FIRST_COMPLETED
+            )
+            for fut in done:
+                outcome[running.pop(fut)] = fut.result()
+    report: dict = {"views": {}, "errors": {}}
+    for dst in order:
+        result, error = outcome[dst]
+        if error is None:
+            report["views"][dst] = result
+        else:
+            report["errors"][dst] = error
     return report

@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections.abc import Callable, Mapping, Sequence
@@ -31,6 +32,7 @@ from collections.abc import Callable, Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataintegration_ecomprovider_spark import runtime
 from dataintegration_ecomprovider_spark.plans.commit_protocol import (
     CommitConflict,
     protocol_for,
@@ -139,6 +141,9 @@ def _read_entry(spark: SparkSession, entry) -> DataFrame:
 
 _PARQUET_PLAN_CACHE: "dict[tuple[int, str], tuple[object, DataFrame]]" = {}
 _PARQUET_PLAN_CACHE_MAX = 512
+# declared views refresh on several driver threads: every access to the
+# cache (its FIFO eviction and prefix sweep iterate it) holds this lock
+_PARQUET_PLAN_LOCK = threading.Lock()
 
 
 def _footer_spark_schema(path: str):
@@ -164,6 +169,10 @@ def _footer_spark_schema(path: str):
         from pyspark.sql.pandas.types import from_arrow_type
         from pyspark.sql.types import StructField, StructType
 
+        # prefer_timestamp_ntz: Spark's parquet scanner reads a tz-naive
+        # (isAdjustedToUTC=false) timestamp as TIMESTAMP_NTZ;
+        # from_arrow_schema's default would report TimestampType and
+        # silently diverge from read_table's schema
         return StructType(
             [
                 StructField(
@@ -198,20 +207,24 @@ def _cached_parquet(spark: SparkSession, path: str) -> DataFrame:
     import weakref
 
     key = (id(spark), path)
-    hit = _PARQUET_PLAN_CACHE.get(key)
-    if hit is not None:
-        ref, df = hit
-        if ref() is spark:
-            return df
-        del _PARQUET_PLAN_CACHE[key]
+    with _PARQUET_PLAN_LOCK:
+        hit = _PARQUET_PLAN_CACHE.get(key)
+        if hit is not None:
+            ref, df = hit
+            if ref() is spark:
+                return df
+            del _PARQUET_PLAN_CACHE[key]
+    # resolve outside the lock: two threads missing on one path both
+    # build a plan, and the later insert wins — harmless, plans are equal
     schema = _footer_spark_schema(path)
     if schema is not None and len(schema.fields):
         df = spark.read.schema(schema).parquet(path)
     else:
         df = spark.read.parquet(path)
-    _PARQUET_PLAN_CACHE[key] = (weakref.ref(spark), df)
-    while len(_PARQUET_PLAN_CACHE) > _PARQUET_PLAN_CACHE_MAX:
-        _PARQUET_PLAN_CACHE.pop(next(iter(_PARQUET_PLAN_CACHE)))
+    with _PARQUET_PLAN_LOCK:
+        _PARQUET_PLAN_CACHE[key] = (weakref.ref(spark), df)
+        while len(_PARQUET_PLAN_CACHE) > _PARQUET_PLAN_CACHE_MAX:
+            _PARQUET_PLAN_CACHE.pop(next(iter(_PARQUET_PLAN_CACHE)))
     return df
 
 
@@ -230,8 +243,11 @@ def _uncache_parquet_prefix(path_prefix: str) -> None:
     """Drop cached plans under `path_prefix` — vacuum/compact call this
     after DELETING data dirs so a later read of a same-named path (never
     minted in practice; belt-and-braces) cannot resolve a dead plan."""
-    for key in [k for k in _PARQUET_PLAN_CACHE if k[1].startswith(path_prefix)]:
-        _PARQUET_PLAN_CACHE.pop(key, None)
+    with _PARQUET_PLAN_LOCK:
+        for key in [
+            k for k in _PARQUET_PLAN_CACHE if k[1].startswith(path_prefix)
+        ]:
+            del _PARQUET_PLAN_CACHE[key]
     for fn in list(_uncache_hooks):
         try:
             fn(path_prefix)
@@ -259,6 +275,57 @@ def _staged_has_columns(entry) -> bool | None:
         return None
 
 
+def _entry_physical_schema(entry) -> "StructType | None":
+    """Driver-side PHYSICAL schema of a committed entry — the file column
+    names, before its rename/drop map — from the entry's widened
+    ``schema_json`` or else one parquet footer.  None when that could be
+    wrong: hive-partitioned layout, no data files, unreadable footer."""
+    from pyspark.sql.types import StructType
+
+    if isinstance(entry, dict) and entry.get("partition_by"):
+        return None
+    if isinstance(entry, dict) and entry.get("schema_json"):
+        try:
+            return StructType.fromJson(json.loads(entry["schema_json"]))
+        except Exception:
+            return None
+    return _footer_spark_schema(
+        entry["path"] if isinstance(entry, dict) else entry
+    )
+
+
+def _as_nullable(dt):
+    """`dt` with every field, array element and map value nullable — the
+    form Spark gives any file-source schema it reads."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True)
+             for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
+def _entry_read_schema(spark: SparkSession, entry):
+    """The schema `_read_entry(spark, entry)` resolves to (physical
+    names), answered driver-side where possible: building a merge-on-read
+    reconstruction plan only to read its ``.schema`` costs tens of ms of
+    py4j/Catalyst time per call.  Catalog-backed (bucketed) entries and
+    anything _entry_physical_schema cannot answer take the full read."""
+    if not (isinstance(entry, dict) and "table" in entry):
+        phys = _entry_physical_schema(entry)
+        if phys is not None and phys.fields:
+            return _as_nullable(phys)
+    return _read_entry(spark, entry).schema
+
+
 def entry_schema(entry) -> "StructType | None":
     """Driver-side LOGICAL schema of a committed entry, from one parquet
     footer (or the entry's widened ``schema_json``) plus its rename/drop
@@ -276,33 +343,10 @@ def entry_schema(entry) -> "StructType | None":
     the base schema, and a widened entry carries schema_json."""
     from pyspark.sql.types import StructField, StructType
 
+    phys = _entry_physical_schema(entry)
+    if phys is None:
+        return None
     try:
-        if isinstance(entry, dict) and entry.get("partition_by"):
-            return None
-        if isinstance(entry, dict) and entry.get("schema_json"):
-            phys = StructType.fromJson(json.loads(entry["schema_json"]))
-        else:
-            path = entry["path"] if isinstance(entry, dict) else entry
-            files = _data_files(path)
-            if not files:
-                return None
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import from_arrow_type
-
-            # prefer_timestamp_ntz: Spark's parquet scanner reads a
-            # tz-naive (isAdjustedToUTC=false) timestamp as TIMESTAMP_NTZ;
-            # from_arrow_schema's default would report TimestampType and
-            # silently diverge from read_table's schema
-            phys = StructType(
-                [
-                    StructField(
-                        f.name,
-                        from_arrow_type(f.type, prefer_timestamp_ntz=True),
-                        f.nullable,
-                    )
-                    for f in pq.read_schema(files[0])
-                ]
-            )
         renames, dropped = _column_map(entry)
         if not renames and not dropped:
             return phys
@@ -1342,23 +1386,11 @@ def publish_tables(
     # pays N sequential job launches for what the scheduler can overlap
     # (job-level parallelism is exactly what Spark's FIFO scheduler
     # time-slices across a 1000-executor cluster too — small per-table
-    # writes stop serializing on each other's task-launch latency)
-    if len(outputs) > 1:
-        import concurrent.futures
-
-        with concurrent.futures.ThreadPoolExecutor(
-            max_workers=min(8, len(outputs))
-        ) as pool:
-            futs = {
-                name: pool.submit(_stage_one, name, df)
-                for name, df in outputs.items()
-            }
-            # preserve the caller's table order in staged_paths
-            for name in outputs:
-                staged_paths[name] = futs[name].result()
-    else:
-        for name, df in outputs.items():
-            staged_paths[name] = _stage_one(name, df)
+    # writes stop serializing on each other's task-launch latency);
+    # staged_paths keeps the caller's table order
+    staged_paths.update(zip(outputs, runtime.map_concurrently(
+        lambda item: _stage_one(*item), outputs.items()
+    )))
 
     if collect_stats:
         for name, entry in list(staged_paths.items()):
@@ -2373,7 +2405,9 @@ def merge_many_mor(
     atomic one (same contract as merge_into_mor's crash note).
 
     Scale shape: all deltas stage OUTSIDE the lock (the expensive Spark
-    work runs unserialized, one job per table); the critical section
+    work runs unserialized and concurrently, one job per table; each
+    table's preparation — constraint checks, quarantine diversions —
+    still runs in the caller's table order); the critical section
     appends N manifest entries — O(N) metadata.  `txn` covers the WHOLE
     batch: a replayed multi-table batch skips atomically too.  Returns
     the new manifest."""
@@ -2396,14 +2430,19 @@ def merge_many_mor(
         )
     _t_publish = time.perf_counter()
     txid = f"{int(time.time() * 1000):x}-{uuid.uuid4().hex[:8]}"
-    staged = {
-        name: _write_mor_delta(
+
+    def _stage(item):
+        name, (delta_df, keys, base_schema, unknown, n_parts, set_cols) = item
+        return _write_mor_delta(
             root, txid, name, delta_df, keys, base_schema,
             bool(unknown), n_parts, set_cols,
         )
-        for name, (delta_df, keys, base_schema, unknown, n_parts, set_cols)
-        in prepared.items()
-    }
+
+    # each delta is its own Spark write job into its own directory: stage
+    # them concurrently, as publish_tables does
+    staged = dict(zip(
+        prepared, runtime.map_concurrently(_stage, prepared.items())
+    ))
     with _manifest_lock(root):
         prev = current_manifest(root)
         if _txn_gate(prev, txn):
@@ -2495,7 +2534,7 @@ def _prepare_mor_delta(
     keys = list(keys)
     logical_keys = list(keys)  # pre-translation names, for the quarantine
     logical_staged = set(staging.columns)  # pre-translation, for specs
-    base_schema = _read_entry(spark, prev_entry).schema
+    base_schema = _entry_read_schema(spark, prev_entry)
     base_cols = [f.name for f in base_schema.fields]
     _renames, _dropped = _column_map(prev_entry)
     if _renames or _dropped:
@@ -3549,10 +3588,12 @@ STATS_SHARD_ROWS = 100_000  # rows per stats-checkpoint parquet file
 # e.g. after a MoR delta commit refreshes delta-dir stats) — second-
 # granularity mtime alone can serve stale entries when a refresh lands
 # within the same clock second.  Bounded LRU-ish: evict oldest beyond
-# _STATS_CACHE_MAX paths; races on the plain dict are benign (worst case
-# a redundant parse).
+# _STATS_CACHE_MAX paths.  Two threads missing on one path both parse it
+# (benign); inserts and evictions hold the lock, because eviction
+# iterates the dict another thread may be growing.
 _STATS_CACHE: dict[str, tuple[tuple[int, int], list[dict] | None]] = {}
 _STATS_CACHE_MAX = 64
+_STATS_CACHE_LOCK = threading.Lock()
 
 
 def _load_stats_entries(path: str) -> list[dict] | None:
@@ -3569,9 +3610,10 @@ def _load_stats_entries(path: str) -> list[dict] | None:
     if hit is not None and hit[0] == stamp:
         return hit[1]
     entries = _read_stats_entries(sidecar, path)
-    if len(_STATS_CACHE) >= _STATS_CACHE_MAX:
-        _STATS_CACHE.pop(next(iter(_STATS_CACHE)))
-    _STATS_CACHE[path] = (stamp, entries)
+    with _STATS_CACHE_LOCK:
+        if len(_STATS_CACHE) >= _STATS_CACHE_MAX:
+            _STATS_CACHE.pop(next(iter(_STATS_CACHE)))
+        _STATS_CACHE[path] = (stamp, entries)
     return entries
 
 

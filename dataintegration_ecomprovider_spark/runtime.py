@@ -50,8 +50,10 @@ then is dropped deterministically.
 
 from __future__ import annotations
 
+import concurrent.futures
 import contextlib
-from collections.abc import Iterable, Iterator
+import contextvars
+from collections.abc import Callable, Iterable, Iterator
 from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -124,6 +126,46 @@ def track_rdd_ids(ids: Iterable[int]) -> None:
     """Register concrete persisted-RDD ids (checkpoint storage) in the
     current scope for later release."""
     current_scope().track_rdd_ids(ids)
+
+
+# --- driver-side job parallelism ---------------------------------------------
+#
+# Independent Spark jobs (one staged table per write, one declared view per
+# maintainer) overlap when submitted from several driver threads: Spark's
+# scheduler time-slices their tasks, and one job's driver-side planning
+# runs while another's tasks execute.  A fresh thread starts with an EMPTY
+# contextvars context, so a task that tracks a persist outside its own
+# job_scope would register in the module scope and never be released;
+# every task here runs in a copy of the submitter's context instead.
+
+POOL_MAX_WORKERS = 8
+
+
+class _ContextPool(concurrent.futures.ThreadPoolExecutor):
+    def submit(self, fn, /, *args, **kwargs):
+        # one copy per task: a Context cannot be entered by two threads
+        # at once, and each task's own scope changes stay its own
+        return super().submit(contextvars.copy_context().run, fn, *args, **kwargs)
+
+
+def context_pool(n_tasks: int) -> concurrent.futures.ThreadPoolExecutor:
+    """A thread pool of min(POOL_MAX_WORKERS, n_tasks) workers whose
+    submit() runs each task in a copy of the caller's contextvars
+    context (its current CacheScope included)."""
+    return _ContextPool(max_workers=max(1, min(POOL_MAX_WORKERS, n_tasks)))
+
+
+def map_concurrently(fn: Callable, items: Iterable) -> list:
+    """[fn(x) for x in items], the calls run concurrently on a
+    context_pool; results keep the items' order and the first failure
+    (in that order) raises once every call has finished.  A single item
+    runs inline."""
+    items = list(items)
+    if len(items) <= 1:
+        return [fn(x) for x in items]
+    with context_pool(len(items)) as pool:
+        futs = [pool.submit(fn, x) for x in items]
+        return [f.result() for f in futs]
 
 
 def checkpoint_rdd_id(df: DataFrame) -> int | None:

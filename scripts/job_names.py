@@ -3,13 +3,16 @@
 Usage: python scripts/job_names.py <query_name> [sf_dir] [reps]
 
 Runs the query `reps` times and, for the LAST rep, prints every Spark
-job launched: id, name (callsite), duration, task count.  Needs the UI
-(spark.ui.enabled) — session.py leaves it on.  Diagnostic only.
+job launched: id, name (callsite), duration, task count.  Reads the
+jobs from the Spark UI's REST API, which session.py disables unless
+SPARK_GRAFT_UI=true; this script sets that variable before the session
+starts.  Diagnostic only.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
@@ -27,6 +30,8 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
+    # the REST API below needs the UI, off by default (see session.py)
+    os.environ.setdefault("SPARK_GRAFT_UI", "true")
     spark = get_spark("job-names")
     from dataintegration_ecomprovider_spark.plans.registry import all_queries
 

@@ -9,7 +9,8 @@ its key columns (drives upsert matching, dedup, delete-missing), and an
 optional set of derived "virtual" columns (the reference's comma-quoted
 list columns, src/EcomProvider.cs:346-381) declared as expressions.
 
-Scale note: schema discovery reads parquet footers only — no data scan.
+Scale note: schema discovery reads one parquet footer driver-side — no
+Spark job, no data scan.
 Tables are loaded lazily and never cached here; callers decide persistence.
 """
 
@@ -79,7 +80,17 @@ class Catalog:
     def table(self, name: str) -> DataFrame:
         if name not in self.specs:
             raise KeyError(f"table {name!r} not in catalog whitelist")
-        df = self.spark.read.parquet(os.path.join(self.sf_dir, f"{name}.parquet"))
+        from dataintegration_ecomprovider_spark.plans import publish
+
+        path = os.path.join(self.sf_dir, f"{name}.parquet")
+        # an explicit schema from the driver-side footer spares Spark its
+        # one-task schema-inference job per read; inference stays the
+        # fallback wherever the footer cannot answer exactly
+        schema = publish._footer_spark_schema(path)
+        reader = self.spark.read
+        if schema is not None and len(schema.fields):
+            reader = reader.schema(schema)
+        df = reader.parquet(path)
         if name == "events":
             # events.ts varies across driver-generated fixture rounds:
             # TIMESTAMP(NANOS) (Spark reads as long under the legacy conf)

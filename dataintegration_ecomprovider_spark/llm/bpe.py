@@ -204,7 +204,7 @@ def train(
             pat, rep = merge_pattern(lft, rgt)
             cur = cur.withColumn("sym", F.replace(F.col("sym"), F.lit(pat), F.lit(rep)))
             if rank % checkpoint_every == 0:
-                new_cur, new_ids = _ckpt(cur)
+                new_cur, new_ids = runtime.local_checkpoint(cur)
                 # the fresh checkpoint is self-contained — its
                 # predecessor's storage can go immediately
                 runtime.unpersist_rdd_ids(spark, ckpt_ids)
@@ -219,15 +219,6 @@ def train(
             pass
         runtime.unpersist_rdd_ids(spark, ckpt_ids)
     return merges
-
-
-def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """localCheckpoint + the explicit id of the persisted RDD backing it
-    (runtime.checkpoint_rdd_id) so the trainer can free exactly its own
-    storage when done — clearCache() does not touch checkpoint RDDs."""
-    out = df.localCheckpoint(eager=True)
-    rid = runtime.checkpoint_rdd_id(out)
-    return out, ({rid} if rid is not None else set())
 
 
 def train_incremental(
@@ -253,10 +244,10 @@ def train_incremental(
     Exactly equivalent to `train` (asserted property-style in
     tests/test_bpe.py): same merges, same tie-breaks, same early stop."""
     spark = words.sparkSession
-    cur, cur_ids = _ckpt(
+    cur, cur_ids = runtime.local_checkpoint(
         words.select(symbol_string(F.col("word")).alias("sym"), "freq")
     )
-    counts, count_ids = _ckpt(pair_counts(cur))
+    counts, count_ids = runtime.local_checkpoint(pair_counts(cur))
     live_ids = cur_ids | count_ids
     merges: list[dict] = []
     try:
@@ -297,8 +288,8 @@ def train_incremental(
                 rewritten
             )
             if rank % checkpoint_every == 0:
-                cur, a = _ckpt(cur)
-                counts, b = _ckpt(counts)
+                cur, a = runtime.local_checkpoint(cur)
+                counts, b = runtime.local_checkpoint(counts)
                 # the fresh checkpoints are self-contained — the
                 # superseded round's storage goes immediately
                 runtime.unpersist_rdd_ids(spark, live_ids)

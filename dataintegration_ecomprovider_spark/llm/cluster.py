@@ -82,16 +82,6 @@ def connected_components(
 def _connected_components_rounds(
     spark, edges: DataFrame, src: str, dst: str, max_rounds: int
 ) -> DataFrame:
-    def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
-        """localCheckpoint + the EXPLICIT id of the persisted RDD backing
-        it, read off the checkpointed plan (runtime.checkpoint_rdd_id) —
-        not a registry diff, which would attribute any concurrently
-        persisted RDD from another thread to this operator and free it
-        out from under its owner (round-3 advisor finding)."""
-        out = df.localCheckpoint(eager=True)
-        rid = runtime.checkpoint_rdd_id(out)
-        return out, ({rid} if rid is not None else set())
-
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).filter(
         F.col("a") != F.col("b")
@@ -99,10 +89,10 @@ def _connected_components_rounds(
     # checkpoint BEFORE deriving nodes, so the node distinct and the
     # initial label build both read the materialized edges instead of
     # re-evaluating the union+filter plan
-    e, e_ids = _ckpt(e)
+    e, e_ids = runtime.local_checkpoint(e)
     # initial label: min(self, direct neighbors) — one shuffle
     nodes = e.select(F.col("a").alias("node")).distinct()
-    lab, lab_ids = _ckpt(
+    lab, lab_ids = runtime.local_checkpoint(
         e.union(nodes.select(F.col("node").alias("a"), F.col("node").alias("b")))
         .groupBy("a")
         .agg(F.min("b").alias("label"))
@@ -122,7 +112,7 @@ def _connected_components_rounds(
         )
         # pointer jump: label <- min(label, label(label)) — halves chain
         # depth every round (log-round convergence on path graphs)
-        jumped, jumped_ids = _ckpt(
+        jumped, jumped_ids = runtime.local_checkpoint(
             new.alias("x")
             .join(
                 new.select(

@@ -23,6 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataintegration_ecomprovider_spark import runtime
 from dataintegration_ecomprovider_spark.catalog import Catalog
 from dataintegration_ecomprovider_spark.operators import dedup, merge
 
@@ -246,11 +247,27 @@ def run_job(
     dest_bucketed: Sequence[str] = (),
     keep_norm_columns: bool = False,
 ) -> dict[str, DataFrame]:
-    """The full RunJob pipeline as pure DataFrame transforms: normalize
-    (E15+E16), shape, strip virtuals (E17), merge per destination table —
-    mappings staging into the same table apply in order against the evolving
-    state (the reference's per-mapping MoveDataToMainTable loop,
+    """The full RunJob pipeline: normalize (E15+E16), shape, strip
+    virtuals (E17), merge per destination table — mappings staging into
+    the same table apply in order against the evolving state (the
+    reference's per-mapping MoveDataToMainTable loop,
     src/EcomDestinationWriter.cs:3165-3218).
+
+    Staging is materialized ONCE per mapping, all mappings concurrently
+    (a tracked localCheckpoint — the analog of the reference's bulk-load
+    into a temp table, CreateTempTables,
+    src/EcomDestinationWriter.cs:234-417); every consumer of a mapping's
+    rows reads that one materialization.  Destination tables then fold
+    concurrently, each from its own prior state and the staging; within
+    a table, mappings and the relation outputs that target it apply in
+    mapping order.  The first failure in mapping order raises.
+
+    Scope contract: the checkpoints register in the caller's CURRENT
+    runtime scope (worker threads included), and the returned states read
+    them — a checkpoint cannot recompute once freed.  Consume (publish,
+    collect, write) the returned states BEFORE releasing that scope or
+    calling runtime.release_caches; run_job_on_store publishes before it
+    returns.
 
     `update_only_existing_tables` is the reference's
     UpdateOnlyExistingProducts per-table override: inserts are skipped for
@@ -286,7 +303,7 @@ def run_job(
     run's staging.
 
     Returns {dest_table: new_state}; callers publish atomically via
-    plans.publish (U12)."""
+    plans.publish (U12) — before releasing the scope, see above."""
     import dataclasses
     import uuid
 
@@ -306,44 +323,70 @@ def run_job(
             dataclasses.replace(m, insert_new=False) if m.dest_table in skip else m
             for m in ordered
         ]
-    state: dict[str, DataFrame] = dict(dest_tables)
-    staged_dest: set[str] = set(dest_bucketed)
+    # shaping reads only the catalog, never the evolving state, so every
+    # mapping stages at once; a checkpoint rather than a persist, because
+    # the cut lineage hands each later plan a shallow scan to analyze
+    def stage(spec: MappingSpec) -> DataFrame:
+        shaped, ids = runtime.local_checkpoint(
+            shape(catalog.table(spec.source_table), spec, params)
+        )
+        runtime.track_rdd_ids(ids)
+        return shaped
+
+    shaped_rows = runtime.map_concurrently(stage, ordered)
+
+    # fold per destination table: a table's new state depends only on its
+    # own prior state and the staging, so tables fold concurrently; within
+    # a table the steps keep mapping order, each mapping's relation
+    # outputs just before its own merge
+    steps: dict[str, list[tuple[int, RelationOutput | None]]] = {}
     for i, spec in enumerate(ordered):
-        source = catalog.table(spec.source_table)
-        shaped = shape(source, spec, params)
-        # E5-E7: relation rows derive from the shaped staging BEFORE the
-        # virtual columns are stripped (they are the inputs being consumed),
-        # and land in their relation tables via the U9 swap
         for rel in spec.relation_outputs:
-            rel_rows = rel.derive(shaped)
-            dest_rel = state[rel.dest_table]
-            # a table bucket-staged by an earlier mapping carries __k_
-            # norm columns the freshly derived relation rows don't have;
-            # strip them so the swap's union aligns (the swap re-derives
-            # what it needs for its own match keys)
-            extra = [c for c in dest_rel.columns if c.startswith("__k_")]
-            if extra:
-                dest_rel = dest_rel.drop(*extra)
-            state[rel.dest_table] = merge.relation_swap(
-                dest_rel, rel_rows, list(rel.match_keys),
-                case_insensitive=spec.case_insensitive_keys,
-            )
-        staged = strip_virtual_columns(shaped, spec)
-        keys = spec.key_columns()
-        if bucketed_staging and keys:
-            staged = bucketing.stage_for_merge(
-                catalog.spark, staged, keys,
-                f"{staging_prefix}_{i}_{spec.dest_table}_stg",
-                staging_buckets, spec.case_insensitive_keys,
-            )
-            if spec.dest_table not in staged_dest:
-                state[spec.dest_table] = bucketing.stage_for_merge(
-                    catalog.spark, state[spec.dest_table], keys,
-                    f"{staging_prefix}_{i}_{spec.dest_table}_dst",
+            steps.setdefault(rel.dest_table, []).append((i, rel))
+        steps.setdefault(spec.dest_table, []).append((i, None))
+
+    def fold(table: str) -> DataFrame:
+        cur = dest_tables[table]
+        dest_staged = table in dest_bucketed
+        for i, rel in steps[table]:
+            spec, shaped = ordered[i], shaped_rows[i]
+            if rel is not None:
+                # E5-E7: relation rows derive from the shaped staging
+                # BEFORE the virtual columns are stripped (they are the
+                # inputs being consumed), and land in their relation
+                # table via the U9 swap.  A table bucket-staged by an
+                # earlier mapping carries __k_ norm columns the freshly
+                # derived relation rows don't have; strip them so the
+                # swap's union aligns (the swap re-derives what it needs
+                # for its own match keys)
+                extra = [c for c in cur.columns if c.startswith("__k_")]
+                if extra:
+                    cur = cur.drop(*extra)
+                cur = merge.relation_swap(
+                    cur, rel.derive(shaped), list(rel.match_keys),
+                    case_insensitive=spec.case_insensitive_keys,
+                )
+                continue
+            staged = strip_virtual_columns(shaped, spec)
+            keys = spec.key_columns()
+            if bucketed_staging and keys:
+                staged = bucketing.stage_for_merge(
+                    catalog.spark, staged, keys,
+                    f"{staging_prefix}_{i}_{table}_stg",
                     staging_buckets, spec.case_insensitive_keys,
                 )
-                staged_dest.add(spec.dest_table)
-        state[spec.dest_table] = merge_step(state[spec.dest_table], staged, spec)
+                if not dest_staged:
+                    cur = bucketing.stage_for_merge(
+                        catalog.spark, cur, keys,
+                        f"{staging_prefix}_{i}_{table}_dst",
+                        staging_buckets, spec.case_insensitive_keys,
+                    )
+                    dest_staged = True
+            cur = merge_step(cur, staged, spec)
+        return cur
+
+    state: dict[str, DataFrame] = dict(dest_tables)
+    state.update(zip(steps, runtime.map_concurrently(fold, steps)))
     if bucketed_staging and not keep_norm_columns:
         # the materialized norm-key columns are staging internals, not
         # destination schema.  keep_norm_columns=True retains them so a

@@ -147,14 +147,18 @@ _PARQUET_PLAN_LOCK = threading.Lock()
 
 
 def _footer_spark_schema(path: str):
-    """Parquet schema of a FLAT (unpartitioned) immutable store dir from
-    one pyarrow footer read (~0.2 ms driver-side).  None when the cheap
-    answer could be wrong: partitioned layout (partition columns live in
-    directory names, not footers), no data files, or an unreadable
-    footer.  Store dirs are single-commit writes, so every file shares
-    one schema — sampling one footer is exact, not a guess."""
+    """Parquet schema of a FLAT (unpartitioned) immutable store dir, or of
+    a single parquet file, from one pyarrow footer read (~0.2 ms
+    driver-side).  None when the cheap answer could be wrong: partitioned
+    layout (partition columns live in directory names, not footers), no
+    data files, an unreadable footer, or a nanosecond timestamp (Spark
+    reads TIMESTAMP(NANOS) as bigint under the catalog's nanosAsLong
+    conf and INT96 as TIMESTAMP, where the arrow mapping says
+    TIMESTAMP_NTZ for both).  Store dirs are single-commit writes, so
+    every file shares one schema — sampling one footer is exact, not a
+    guess."""
     try:
-        files = _data_files(path)
+        files = [path] if os.path.isfile(path) else _data_files(path)
         if not files:
             return None
         if any(os.sep in os.path.relpath(f, path) for f in files):
@@ -173,6 +177,11 @@ def _footer_spark_schema(path: str):
         # (isAdjustedToUTC=false) timestamp as TIMESTAMP_NTZ;
         # from_arrow_schema's default would report TimestampType and
         # silently diverge from read_table's schema
+        fields = pq.read_schema(files[0])
+        # the type's string form names every nested unit too
+        # ("list<element: timestamp[ns]>")
+        if any("timestamp[ns" in str(f.type) for f in fields):
+            return None
         return StructType(
             [
                 StructField(
@@ -180,7 +189,7 @@ def _footer_spark_schema(path: str):
                     from_arrow_type(f.type, prefer_timestamp_ntz=True),
                     f.nullable,
                 )
-                for f in pq.read_schema(files[0])
+                for f in fields
             ]
         )
     except Exception:
@@ -6713,12 +6722,18 @@ def requeue_quarantine(spark: SparkSession, root: str, name: str) -> dict:
     manifest = current_manifest(root)
     if qname not in manifest["tables"]:
         return {"requeued": 0, "still_quarantined": 0}
-    rows = read_table(spark, root, qname).drop("__violations")
-    rows = rows.localCheckpoint(eager=True)  # pin content pre-drop
-    n = rows.count()
-    keys = table_keys(root, qname) or table_keys(root, name)
-    drop_table(root, qname)
-    merge_into_mor(spark, root, name, rows, keys=keys)
+    # pin content pre-drop; the pin is this call's own, freed once the
+    # re-merge has committed (or failed) — nothing lazy escapes
+    rows, pin_ids = runtime.local_checkpoint(
+        read_table(spark, root, qname).drop("__violations")
+    )
+    try:
+        n = rows.count()
+        keys = table_keys(root, qname) or table_keys(root, name)
+        drop_table(root, qname)
+        merge_into_mor(spark, root, name, rows, keys=keys)
+    finally:
+        runtime.unpersist_rdd_ids(spark, pin_ids)
     still = 0
     if qname in current_manifest(root)["tables"]:
         still = read_table(spark, root, qname).count()

@@ -11,7 +11,12 @@ returned DataFrame is still consumable:
   set consumed by several downstream joins;
 - ``llm/cluster.py::connected_components`` localCheckpoints per-round
   label tables to cut lineage (per-round blocks are freed in-loop; the
-  FINAL label table backs the returned DataFrame and is tracked here).
+  FINAL label table backs the returned DataFrame and is tracked here);
+- ``plans/pipeline.py::run_job`` localCheckpoints each mapping's shaped
+  staging once (the reference's temp-table bulk load); the returned
+  destination states read those checkpoints, which cannot recompute once
+  freed — consume (publish, collect, write) the states BEFORE releasing
+  the scope they were created in or calling ``release_caches``.
 
 None of these can unpersist inline: the query functions return LAZY
 DataFrames and the action happens later, at the caller.  In a long-lived
@@ -40,8 +45,8 @@ previous whole-registry sweep (which could unpersist caches the EMBEDDING
 application created outside this library — round-3 advisor finding) is now
 opt-in via ``sweep_all=True``; tracked-only release is the default and is
 sufficient because every persist/checkpoint the library creates registers
-its DataFrame or concrete RDD id at creation (``checkpoint_rdd_id`` reads
-the id straight off the checkpointed plan — no registry diffing).
+its DataFrame or concrete RDD id at creation (``local_checkpoint`` returns
+the id, read straight off the checkpointed plan — no registry diffing).
 
 The reference's analog is temp-table cleanup on Close
 (src/EcomDestinationWriter.cs:4167-4182): staging state lives for the job,
@@ -178,6 +183,19 @@ def checkpoint_rdd_id(df: DataFrame) -> int | None:
         return int(df._jdf.queryExecution().analyzed().rdd().id())
     except Exception:
         return None
+
+
+def local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
+    """``df.localCheckpoint(eager=True)`` plus the EXPLICIT id of the
+    persisted RDD backing it (checkpoint_rdd_id), so the caller frees
+    exactly its own storage — by unpersist_rdd_ids, or by handing the ids
+    to track_rdd_ids for its scope.  Not a registry diff, which would
+    attribute an RDD another thread persisted concurrently to this caller
+    and free it out from under its owner.  spark.catalog.clearCache()
+    does not touch checkpoint storage."""
+    out = df.localCheckpoint(eager=True)
+    rid = checkpoint_rdd_id(out)
+    return out, ({rid} if rid is not None else set())
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

@@ -349,6 +349,36 @@ def test_requeue_quarantine_after_relaxing(spark, tmp_path):
     }
 
 
+def test_requeue_quarantine_frees_its_pin(spark, tmp_path):
+    """The pre-drop pin (a local checkpoint) is requeue's own: once the
+    re-merge has committed it is freed, so the persisted-RDD set is the
+    same before and after a requeue plus release_caches."""
+    from dataintegration_ecomprovider_spark import runtime
+
+    root = str(tmp_path / "store")
+    publish.publish_tables(
+        spark,
+        {"t": spark.createDataFrame([(1, 10)], "k long, v long")},
+        root, table_keys={"t": ["k"]},
+    )
+    publish.set_constraints(
+        root, "t", [["range", "v", 0, 100]], on_violation="quarantine"
+    )
+    publish.merge_into_mor(
+        spark, root, "t",
+        spark.createDataFrame([(2, 150), (3, 50)], "k long, v long"),
+    )
+    publish.set_constraints(
+        root, "t", [["range", "v", 0, 500]], on_violation="quarantine"
+    )
+    runtime.release_caches(spark)
+    before = runtime.persistent_rdd_ids(spark)
+    rep = publish.requeue_quarantine(spark, root, "t")
+    runtime.release_caches(spark)
+    assert rep == {"requeued": 1, "still_quarantined": 0}
+    assert runtime.persistent_rdd_ids(spark) == before
+
+
 def test_cow_quarantine_replay_is_fully_idempotent(spark, tmp_path):
     """A txn-stamped CoW merge whose staging triggers quarantine routing
     must be a COMPLETE no-op on replay: the txn gate runs BEFORE the

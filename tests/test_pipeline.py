@@ -535,3 +535,159 @@ def test_run_job_on_store_atomic_with_changes(spark, tmp_path):
         publish.publish_tables(
             spark, {"orders": published}, root, expected_version=stale
         )
+
+
+class _FrameCatalog(Catalog):
+    """The fixture catalog plus in-memory source frames by name."""
+
+    def __init__(self, spark, frames):
+        super().__init__(spark, SF_DIR)
+        self.frames = frames
+
+    def table(self, name):
+        return self.frames[name] if name in self.frames else super().table(name)
+
+
+def _split_groups(staged):
+    return staged.select(
+        "product_id",
+        F.posexplode(F.split("groups", ",")).alias("pos", "group_name"),
+    ).select("product_id", "group_name", F.col("pos").cast("int").alias("pos"))
+
+
+def _product_mapping() -> MappingSpec:
+    """feed_products → products, its groups list swapped into
+    product_groups as a relation output."""
+    from dataintegration_ecomprovider_spark.plans.pipeline import RelationOutput
+
+    return MappingSpec(
+        "feed_products", "products",
+        (ColumnRule("product_id", is_key=True), ColumnRule("product_name"),
+         ColumnRule("groups")),
+        virtual_columns=("groups",),
+        relation_outputs=(
+            RelationOutput("product_groups", _split_groups, ("product_id",)),
+        ),
+    )
+
+
+def test_run_job_stages_each_mapping_once(spark):
+    """Every consumer of a mapping's rows — here the relation output and
+    the upsert — reads ONE materialization of the staging: the source
+    chain runs once per row, not once per consumer."""
+    n = 20
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(i):
+        seen.add(1)
+        return f"g{i % 3},g{i % 5}"
+
+    # nondeterministic, so the optimizer never duplicates the call within
+    # one plan: the count is plan executions × rows
+    groups = F.udf(count_row, "string").asNondeterministic()
+    feed = spark.range(n).select(
+        F.col("id").alias("product_id"),
+        F.concat(F.lit("P"), F.col("id").cast("string")).alias("product_name"),
+        groups("id").alias("groups"),
+    )
+    cat = _FrameCatalog(spark, {"feed_products": feed})
+    state = run_job(
+        cat,
+        {
+            "products": spark.createDataFrame(
+                [], "product_id bigint, product_name string"),
+            "product_groups": spark.createDataFrame(
+                [], "product_id bigint, group_name string, pos int"),
+        },
+        [_product_mapping()],
+    )
+    assert state["products"].count() == n
+    assert state["product_groups"].count() == 2 * n
+    assert seen.value == n
+
+
+def test_run_job_fold_order_matches_sequential_application(spark):
+    """Tables fold concurrently, but within a table every step keeps
+    mapping order: products' relation output swaps into product_groups
+    BEFORE the later direct product_groups mapping upserts into it, and
+    the orders upsert lands before the delete_incoming mapping."""
+    frames = {
+        "feed_products": spark.createDataFrame(
+            [(2, "B2", "g1,g2"), (3, "c", "g3")],
+            "product_id bigint, product_name string, groups string"),
+        "feed_groups": spark.createDataFrame(
+            [(2, "g2", 5), (4, "g9", 0)],
+            "product_id bigint, group_name string, pos int"),
+        "feed_orders": spark.createDataFrame(
+            [(11, "U"), (13, "U")], "order_id bigint, status string"),
+        "feed_order_deletes": spark.createDataFrame([(12,), (13,)], "order_id bigint"),
+    }
+    dest = {
+        "products": spark.createDataFrame(
+            [(1, "a"), (2, "b")], "product_id bigint, product_name string"),
+        "product_groups": spark.createDataFrame(
+            [(1, "g0", 0), (2, "old", 0)],
+            "product_id bigint, group_name string, pos int"),
+        "orders": spark.createDataFrame(
+            [(10, "O"), (11, "O"), (12, "O")], "order_id bigint, status string"),
+    }
+    mappings = [
+        _product_mapping(),
+        MappingSpec(
+            "feed_groups", "product_groups",
+            (ColumnRule("product_id", is_key=True),
+             ColumnRule("group_name", is_key=True), ColumnRule("pos")),
+        ),
+        MappingSpec(
+            "feed_orders", "orders",
+            (ColumnRule("order_id", is_key=True), ColumnRule("status")),
+        ),
+        MappingSpec(
+            "feed_order_deletes", "orders", (ColumnRule("order_id", is_key=True),),
+            delete_incoming=True,
+        ),
+    ]
+    state = run_job(_FrameCatalog(spark, frames), dest, mappings)
+
+    def rows(t):
+        return sorted(tuple(r) for r in state[t].collect())
+
+    assert rows("products") == [(1, "a"), (2, "B2"), (3, "c")]
+    # swap first: product 2's groups become g1@0, g2@1, "old" goes;
+    # then the direct upsert moves g2 to pos 5 and inserts product 4
+    assert rows("product_groups") == [
+        (1, "g0", 0), (2, "g1", 0), (2, "g2", 5), (3, "g3", 0), (4, "g9", 0),
+    ]
+    # upsert then delete: 13 is inserted and removed again
+    assert rows("orders") == [(10, "O"), (11, "U")]
+
+
+def test_run_job_staging_lives_in_callers_scope(spark):
+    """The staging checkpoints — made on worker threads when several
+    mappings stage at once — register in the CALLER's job_scope, and
+    releasing that scope returns the persisted-RDD set to its baseline."""
+    from dataintegration_ecomprovider_spark import runtime
+
+    runtime.release_caches(spark)
+    baseline = runtime.persistent_rdd_ids(spark)
+    frames = {
+        "feed_a": spark.createDataFrame([(1, "x"), (2, "y")], "k bigint, v string"),
+        "feed_b": spark.createDataFrame([(3, "z")], "k bigint, v string"),
+    }
+    cols = (ColumnRule("k", is_key=True), ColumnRule("v"))
+    with runtime.job_scope() as scope:
+        state = run_job(
+            _FrameCatalog(spark, frames),
+            {"a": spark.createDataFrame([], "k bigint, v string"),
+             "b": spark.createDataFrame([], "k bigint, v string")},
+            [MappingSpec("feed_a", "a", cols), MappingSpec("feed_b", "b", cols)],
+        )
+        assert sorted(tuple(r) for r in state["a"].collect()) == [(1, "x"), (2, "y")]
+        assert [tuple(r) for r in state["b"].collect()] == [(3, "z")]
+    staged = runtime.persistent_rdd_ids(spark) - baseline
+    assert len(staged) == 2
+    # nothing leaked to the module scope: only the job's scope frees them
+    runtime._global_scope.release(spark)
+    assert runtime.persistent_rdd_ids(spark) - baseline == staged
+    scope.release(spark)
+    assert runtime.persistent_rdd_ids(spark) == baseline

@@ -20,18 +20,21 @@ from collections.abc import Hashable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataintegration_ecomprovider_spark import runtime
+
 # Discovery results keyed by caller-chosen identity (e.g. (sf_dir, table,
 # expr)).  The distinct-scan is deterministic per source data, so a job
 # that builds the same pivot view repeatedly — or a driver that times plan
-# construction — pays the scan once, not per build (round-3 judge finding:
-# 6.4 s cold / 0.57 s warm of pure plan-time cost at sf0.1).
-_DISCOVERY_CACHE: dict[Hashable, list[str]] = {}
+# construction — pays the scan once, not per build, and concurrent
+# builders of one key share one scan.  Capped: a long-lived driver
+# discovers over ever new directories.
+PIVOT_VALUE_CACHE = runtime.KeyedCache(32)
 
 
 def clear_discovery_cache() -> None:
     """Drop memoized pivot-value discoveries (tests; or after the
     underlying table's value domain has changed)."""
-    _DISCOVERY_CACHE.clear()
+    PIVOT_VALUE_CACHE.clear()
 
 
 def discover_pivot_values(
@@ -53,29 +56,31 @@ def discover_pivot_values(
     column order across runs.
 
     `cache_key` (any hashable — convention: (source path, expr text))
-    memoizes the result process-wide: the pivot column set is a pure
-    function of the source data, so repeated plan builds against the same
-    table skip the scan.  Pass None (default) for uncached discovery;
-    clear with clear_discovery_cache() after the source changes."""
-    if cache_key is not None and cache_key in _DISCOVERY_CACHE:
-        return list(_DISCOVERY_CACHE[cache_key])
-    rows = (
-        df.select(value_expr.cast("string").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .distinct()
-        .orderBy("v")
-        .limit(max_values + 1)
-        .collect()
-    )
-    if len(rows) > max_values:
-        raise ValueError(
-            f"pivot column discovery found more than {max_values} distinct "
-            "values — refusing to build that many columns"
+    memoizes the result process-wide, for the 32 most recently used keys:
+    the pivot column set is a pure function of the source data, so
+    repeated plan builds against the same table skip the scan.  Pass None
+    (default) for uncached discovery; clear with clear_discovery_cache()
+    after the source changes."""
+
+    def scan() -> list[str]:
+        rows = (
+            df.select(value_expr.cast("string").alias("v"))
+            .filter(F.col("v").isNotNull())
+            .distinct()
+            .orderBy("v")
+            .limit(max_values + 1)
+            .collect()
         )
-    values = [r.v for r in rows]
-    if cache_key is not None:
-        _DISCOVERY_CACHE[cache_key] = list(values)
-    return values
+        if len(rows) > max_values:
+            raise ValueError(
+                f"pivot column discovery found more than {max_values} "
+                "distinct values — refusing to build that many columns"
+            )
+        return [r.v for r in rows]
+
+    if cache_key is None:
+        return scan()
+    return list(PIVOT_VALUE_CACHE.get(cache_key, None, scan))
 
 
 def category_field_columns(

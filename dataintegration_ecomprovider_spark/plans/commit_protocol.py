@@ -58,6 +58,8 @@ import threading
 import time
 import uuid
 
+from dataintegration_ecomprovider_spark import runtime
+
 MANIFEST = "MANIFEST.json"
 LOCK_FILE = ".MANIFEST.lock"
 PROTOCOL_CONFIG = "_PROTOCOL.json"
@@ -114,49 +116,40 @@ class CommitProtocol:
         raise NotImplementedError
 
 
-# Stat-keyed parse cache for the POSIX backend's JSON documents
-# (round 14, guide §1.2): a single store-lifecycle query re-reads its
-# manifest 40-65 times (every tables_at/version walk re-parses it), and
-# the manifest grows O(history × tables) — pure repeated driver-side
-# json.load of an unchanged file.  The key is (inode, size, mtime_ns):
-# every writer replaces the file via os.replace (fresh inode from the
-# tmp file), so any commit — this process or another — changes the
-# signature and invalidates naturally.  CALLERS MUST NOT MUTATE the
-# returned document (the store code copies before mutating everywhere —
+# Stat-keyed parse cache for the POSIX backend's JSON documents: a
+# single store-lifecycle query re-reads its manifest 40-65 times (every
+# tables_at/version walk re-parses it), and the manifest grows
+# O(history × tables) — pure repeated driver-side json.load of an
+# unchanged file.  The version is (inode, size, mtime_ns): every writer
+# replaces the file via os.replace (fresh inode from the tmp file), so
+# any commit — this process or another — changes the signature and
+# supersedes the cached parse.  CALLERS MUST NOT MUTATE the returned
+# document (the store code copies before mutating everywhere —
 # _update_entry_meta, _append_mor_entry, _history_fields,
 # _set_sync_states, _read_readers); a mutation would poison every later
 # read until the next commit.
-_JSON_DOC_CACHE: dict[str, tuple[tuple, object]] = {}
-_JSON_DOC_CACHE_MAX = 1024
-# several driver threads read manifests at once (concurrent view refresh,
-# concurrent staging): inserts and evictions hold this lock, because
-# eviction iterates the dict another thread may be growing
-_JSON_DOC_LOCK = threading.Lock()
+_JSON_DOCS = runtime.KeyedCache(1024)
+
+
+def _load_json(path: str):
+    with open(path, encoding="utf-8") as fh:
+        return json.load(fh)
 
 
 def _cached_json_doc(path: str):
     try:
         st = os.stat(path)
     except OSError:
-        _JSON_DOC_CACHE.pop(path, None)
         return None
-    sig = (st.st_ino, st.st_size, st.st_mtime_ns)
-    hit = _JSON_DOC_CACHE.get(path)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
     try:
-        with open(path, encoding="utf-8") as fh:
-            doc = json.load(fh)
+        return _JSON_DOCS.get(
+            path, (st.st_ino, st.st_size, st.st_mtime_ns),
+            lambda: _load_json(path),
+        )
     except FileNotFoundError:
         # deleted between stat and open (e.g. a concurrent vacuum of an
         # aux file): absent, same as the stat miss
-        _JSON_DOC_CACHE.pop(path, None)
         return None
-    with _JSON_DOC_LOCK:
-        _JSON_DOC_CACHE[path] = (sig, doc)
-        while len(_JSON_DOC_CACHE) > _JSON_DOC_CACHE_MAX:
-            _JSON_DOC_CACHE.pop(next(iter(_JSON_DOC_CACHE)))
-    return doc
 
 
 class PosixCommitProtocol(CommitProtocol):

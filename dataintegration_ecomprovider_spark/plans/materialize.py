@@ -41,55 +41,43 @@ from __future__ import annotations
 import concurrent.futures
 import json
 import os
-import threading
+import weakref
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataintegration_ecomprovider_spark import runtime
 from dataintegration_ecomprovider_spark.plans import publish
 
 COUNT_COL = "cnt"
 
 
-# --- shared change feeds (round 14, guide §1.2/§2.1) ------------------------
+# --- shared change feeds ----------------------------------------------------
 #
 # A refresh pass that maintains SEVERAL views of one source (token
 # postings + doc lengths over documents; an aggregate matview and its
-# projection sibling over orders) previously ran one O(table) version
-# diff + persist + count PER VIEW over the identical immutable span.
-# This memo shares the persisted feed and its count across maintainer
-# CALLS, keyed on everything that shapes the feed plan — a hit serves a
-# feed that is plan-identical (not merely row-identical) to what the
-# caller would have built, so every downstream result is bit-identical
-# by construction.  At 100 TB the diff is the dominant cost of a refresh
-# pass; deduplicating it across views is the whole win.
+# projection sibling over orders) would otherwise run one O(table)
+# version diff + persist + count PER VIEW over the identical immutable
+# span.  This memo shares the persisted feed and its count across
+# maintainer CALLS, keyed on everything that shapes the feed plan — a
+# hit serves a feed that is plan-identical (not merely row-identical) to
+# what the caller would have built, so every downstream result is
+# bit-identical by construction.  At 100 TB the diff is the dominant cost
+# of a refresh pass; deduplicating it across views is the whole win.
 #
-# Safety: the key embeds the manifest ENTRY of the table at both span
-# ends (its data paths carry globally unique txids), so a re-minted
-# store at the same filesystem path can never hit a stale feed, and a
-# vacuumed span drops via the publish uncache hook below.  The cache —
-# not any job scope — owns the persists; it is capped (LRU evictions
-# unpersist) and runtime.release_caches() clears it, so bench reps and
-# long-lived drivers start clean.
-#
-# Declared views refresh concurrently (refresh_declared_views), so the
-# cache is lock-guarded and SINGLE-FLIGHT: siblings asking for one span
-# at the same moment wait for the first caller's diff instead of each
-# running their own.
-
-_SPAN_FEEDS: "dict[tuple, tuple[object, DataFrame, int]]" = {}
-_SPAN_FEEDS_MAX = 6
-_SPAN_FEEDS_LOCK = threading.Lock()
-_SPAN_INFLIGHT: "dict[tuple, concurrent.futures.Future]" = {}
-
-
-def _unpersist_all(dfs, blocking: bool = False) -> None:
-    for df in dfs:
-        try:
-            df.unpersist(blocking)
-        except Exception:
-            pass
+# Safety: the version embeds the manifest ENTRY of the table at both span
+# ends (its data paths carry globally unique txids), so a re-minted store
+# at the same filesystem path can never hit a stale feed, and vacuum or
+# compact under the store root drops its feeds (runtime.invalidate_path).
+# The cache — not any job scope — owns the persists: evicted, superseded
+# and dropped feeds are unpersisted, and runtime.release_caches() drains
+# it, so bench reps and long-lived drivers start clean.  Declared views
+# refresh concurrently, and a miss is single-flight: siblings asking for
+# one span at the same moment wait for the first caller's diff.
+SPAN_FEED_CACHE = runtime.KeyedCache(
+    6, path=lambda slot: slot[1], release=lambda feed: feed[0].unpersist()
+)
 
 
 def span_change_feed(
@@ -110,21 +98,23 @@ def span_change_feed(
     (span end vacuumed / table absent), so callers keep their re-seed
     fallback unchanged.
 
-    The key is the pair of `src` MANIFEST ENTRIES at the span ends, not
-    the version numbers: sibling views watermark at slightly shifted
-    versions (each view's own commits advance the store), but a span
-    over which `src`'s entry did not move carries the identical feed.
-    That is safe because the diff plan is a pure function of the two
-    entries: every data path an entry names is an immutable directory
-    with a fresh txid, so equal entries denote equal table states.  An
-    entry CAN recur at a later version — rollback re-commits an older
-    version's table map verbatim — and a recurring entry still denotes
-    the same state, so a hit stays exact.  `where`-scoped feeds also key
-    on the raw versions (their scan resolution is version-addressed);
-    the where SHAPE and the versions are separate key parts, so a newer
-    span of one (source, shape) supersedes the older one."""
-    import weakref
-
+    The span is identified by the pair of `src` MANIFEST ENTRIES at its
+    ends, not the version numbers: sibling views watermark at slightly
+    shifted versions (each view's own commits advance the store), but a
+    span over which `src`'s entry did not move carries the identical
+    feed.  That is safe because the diff plan is a pure function of the
+    two entries: every data path an entry names is an immutable
+    directory with a fresh txid, so equal entries denote equal table
+    states.  An entry CAN recur at a later version — rollback re-commits
+    an older version's table map verbatim — and a recurring entry still
+    denotes the same state, so a hit stays exact.  `where`-scoped feeds
+    also key on the raw versions (their scan resolution is
+    version-addressed).  The slot is the feed shape — (session, store,
+    source, keys, include_old, where shape) — and the span is its
+    version, so a newer span of one shape supersedes the older one: the
+    store advanced past it, no sibling will ask for it again, and every
+    lingering persisted plan costs all later actions a CacheManager
+    plan-comparison walk (plus executor storage at scale)."""
     ident = (
         json.dumps(
             publish.tables_at(root, from_version).get(src), sort_keys=True
@@ -133,81 +123,24 @@ def span_change_feed(
             publish.tables_at(root, to_version).get(src), sort_keys=True
         ),
     )
-    # (session, store, source, span entries, keys, include_old, where
-    # shape, where-scoped versions); the supersede test below compares
-    # every part but the two span parts, 3 and 7
-    key = (
-        id(spark), os.path.realpath(root), src, ident, tuple(keys),
+    slot = (
+        id(spark), os.path.realpath(root), src, tuple(keys),
         bool(include_old), repr(tuple(where)) if where else None,
+    )
+    span = (
+        weakref.ref(spark), ident,
         (int(from_version), int(to_version)) if where else None,
     )
-    shape = key[:3] + key[4:7]
-    with _SPAN_FEEDS_LOCK:
-        hit = _SPAN_FEEDS.pop(key, None)
-        if hit is not None and hit[0]() is spark:
-            _SPAN_FEEDS[key] = hit  # re-insert: most recently used last
-            return hit[1], hit[2]
-        pending = _SPAN_INFLIGHT.get(key)
-        owner = pending is None
-        if owner:
-            pending = _SPAN_INFLIGHT[key] = concurrent.futures.Future()
-    if not owner:
-        return pending.result()  # re-raises the computing caller's error
-    try:
+
+    def diff() -> tuple[DataFrame, int]:
         changes = publish.read_changes(
             spark, root, src, from_version=from_version,
             to_version=to_version, keys=list(keys),
             include_old=include_old, where=where,
         ).persist()
-        n = changes.count()
-    except BaseException as e:
-        with _SPAN_FEEDS_LOCK:
-            del _SPAN_INFLIGHT[key]
-        pending.set_exception(e)
-        raise
-    with _SPAN_FEEDS_LOCK:
-        del _SPAN_INFLIGHT[key]
-        # supersede: a NEW span for the same (source, shape) means the
-        # store advanced past the old one — no sibling will ask for it
-        # again, and every lingering persisted plan costs all later
-        # actions a CacheManager plan-comparison walk (plus executor
-        # storage at scale)
-        evicted = [
-            _SPAN_FEEDS.pop(k)[1] for k in list(_SPAN_FEEDS)
-            if k[:3] + k[4:7] == shape
-        ]
-        _SPAN_FEEDS[key] = (weakref.ref(spark), changes, n)
-        while len(_SPAN_FEEDS) > _SPAN_FEEDS_MAX:
-            evicted.append(_SPAN_FEEDS.pop(next(iter(_SPAN_FEEDS)))[1])
-    pending.set_result((changes, n))
-    _unpersist_all(evicted)
-    return changes, n
+        return changes, changes.count()
 
-
-def clear_span_feeds(blocking: bool = False) -> None:
-    """Unpersist and drop every cached span feed (release_caches hook)."""
-    with _SPAN_FEEDS_LOCK:
-        dfs = [df for _, df, _ in _SPAN_FEEDS.values()]
-        _SPAN_FEEDS.clear()
-    _unpersist_all(dfs, blocking)
-
-
-def _drop_span_feeds_under(path_prefix: str) -> None:
-    """Vacuum/compact deleted data dirs under this path: drop any feed
-    whose store root contains them (publish uncache hook)."""
-    pp = os.path.realpath(path_prefix)
-    with _SPAN_FEEDS_LOCK:
-        dropped = [
-            _SPAN_FEEDS.pop(k)[1] for k in list(_SPAN_FEEDS)
-            if pp.startswith(k[1]) or k[1].startswith(pp)
-        ]
-    _unpersist_all(dropped)
-
-
-from dataintegration_ecomprovider_spark import runtime as _runtime  # noqa: E402
-
-_runtime.register_cache_cleaner(clear_span_feeds)
-publish.register_uncache_hook(_drop_span_feeds_under)
+    return SPAN_FEED_CACHE.get(slot, span, diff)
 
 
 def _sum_alias(c: str) -> str:
@@ -659,8 +592,6 @@ def maintain_aggregate(
     visible in ONE ``publish_tables`` commit — companion-then-parent
     as separate commits let a concurrent reader see cntd_<c> derived
     from a newer source version joined against stale parent groups."""
-    from dataintegration_ecomprovider_spark import runtime
-
     # an AVG column is maintained through its sum + its NON-NULL count
     # (cnt is always kept; nncnt_<c> is the denominator SQL AVG uses)
     sum_cols = list(dict.fromkeys([*sum_cols, *avg_cols]))
@@ -946,8 +877,6 @@ def apply_join_delta(
     bound only ever declines a broadcast the exact count might have
     allowed (conservative in the safe direction).  Without it the gate
     falls back to the persist+count."""
-    from dataintegration_ecomprovider_spark import runtime
-
     fact_keys = list(fact_keys)
     dim_key = dim_key or fk
 
@@ -1082,8 +1011,6 @@ def maintain_join(
         except KeyError:
             mode = _seed()
         else:
-            from dataintegration_ecomprovider_spark import runtime
-
             # own scope: every persist below (the change feeds here, the
             # gated-broadcast key sets inside apply_join_delta) is fully
             # consumed once the publish materializes the refresh — free
@@ -1279,8 +1206,6 @@ def maintain_rowwise_view(
         except KeyError:
             mode = _seed()  # consumed-from version vacuumed: re-seed
         else:
-            from dataintegration_ecomprovider_spark import runtime
-
             with runtime.job_scope() as scope:
                 try:
                     if n_changed == 0:
@@ -1663,8 +1588,6 @@ def refresh_declared_views(spark: SparkSession, root: str) -> dict:
     sequential pass would.  Returns {"views": {dst: maintain_* result},
     "errors": {dst: str}}, both in dependency order
     (_view_refresh_order) whatever order the views finished in."""
-    from dataintegration_ecomprovider_spark import runtime
-
     views = declared_views(root)
     order = _view_refresh_order(views)
     waits = {

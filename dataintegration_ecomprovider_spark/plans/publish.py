@@ -24,9 +24,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import threading
 import time
 import uuid
+import weakref
 from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -139,13 +139,6 @@ def _read_entry(spark: SparkSession, entry) -> DataFrame:
     return base
 
 
-_PARQUET_PLAN_CACHE: "dict[tuple[int, str], tuple[object, DataFrame]]" = {}
-_PARQUET_PLAN_CACHE_MAX = 512
-# declared views refresh on several driver threads: every access to the
-# cache (its FIFO eviction and prefix sweep iterate it) holds this lock
-_PARQUET_PLAN_LOCK = threading.Lock()
-
-
 def _footer_spark_schema(path: str):
     """Parquet schema of a FLAT (unpartitioned) immutable store dir, or of
     a single parquet file, from one pyarrow footer read (~0.2 ms
@@ -163,11 +156,11 @@ def _footer_spark_schema(path: str):
             return None
         if any(os.sep in os.path.relpath(f, path) for f in files):
             # nested layout → partition columns in dir names.  ALL files
-            # checked (round 14, ADVICE r13): a hypothetical mixed
-            # flat+nested dir would otherwise pass on its first flat file
-            # and hand Spark a schema missing the partition columns —
-            # unreachable under the store's single-commit invariant, but
-            # the full check costs nothing (_data_files already listed)
+            # checked: a mixed flat+nested dir would otherwise pass on
+            # its first flat file and hand Spark a schema missing the
+            # partition columns — unreachable under the store's
+            # single-commit invariant, but the full check costs nothing
+            # (_data_files already listed)
             return None
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_type
@@ -204,64 +197,25 @@ def _cached_parquet(spark: SparkSession, path: str) -> DataFrame:
     costs a JVM file-listing + schema-inference roundtrip (~100-200 ms),
     and a single MoR lifecycle re-resolves the same dirs dozens of times
     — on a real cluster the listing goes to S3, making the dedup worth
-    more, not less.  The key carries a weakref identity check so a
+    more, not less.  The version is a weakref to the session, so a
     recycled id() after a session is garbage-collected can never serve a
-    stale plan; entries evict FIFO past the cap (plans are small, but
-    unbounded growth across many stores would still leak).
+    stale plan; vacuum/compact drop a deleted dir's plan through
+    runtime.invalidate_path.
 
-    Round 13 (guide §1.2): cache MISSES hand Spark an explicit schema
-    read from one parquet footer (measured 99 ms → 16 ms per read at
-    sf0.1 — the JVM skips its listing + schema-inference pass), falling
+    A miss hands Spark an explicit schema read from one parquet footer
+    (the JVM then skips its listing + schema-inference pass), falling
     back to inference for partitioned layouts or any footer trouble."""
-    import weakref
 
-    key = (id(spark), path)
-    with _PARQUET_PLAN_LOCK:
-        hit = _PARQUET_PLAN_CACHE.get(key)
-        if hit is not None:
-            ref, df = hit
-            if ref() is spark:
-                return df
-            del _PARQUET_PLAN_CACHE[key]
-    # resolve outside the lock: two threads missing on one path both
-    # build a plan, and the later insert wins — harmless, plans are equal
-    schema = _footer_spark_schema(path)
-    if schema is not None and len(schema.fields):
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-    with _PARQUET_PLAN_LOCK:
-        _PARQUET_PLAN_CACHE[key] = (weakref.ref(spark), df)
-        while len(_PARQUET_PLAN_CACHE) > _PARQUET_PLAN_CACHE_MAX:
-            _PARQUET_PLAN_CACHE.pop(next(iter(_PARQUET_PLAN_CACHE)))
-    return df
+    def resolve() -> DataFrame:
+        schema = _footer_spark_schema(path)
+        if schema is not None and len(schema.fields):
+            return spark.read.schema(schema).parquet(path)
+        return spark.read.parquet(path)
+
+    return _PARQUET_PLANS.get((id(spark), path), weakref.ref(spark), resolve)
 
 
-_uncache_hooks: list = []
-
-
-def register_uncache_hook(fn) -> None:
-    """Register a callable invoked with every `_uncache_parquet_prefix`
-    path: downstream plan caches built over store data dirs (e.g.
-    materialize's span-feed cache) drop their entries alongside this
-    module's, so vacuum/compact invalidate every layer at once."""
-    _uncache_hooks.append(fn)
-
-
-def _uncache_parquet_prefix(path_prefix: str) -> None:
-    """Drop cached plans under `path_prefix` — vacuum/compact call this
-    after DELETING data dirs so a later read of a same-named path (never
-    minted in practice; belt-and-braces) cannot resolve a dead plan."""
-    with _PARQUET_PLAN_LOCK:
-        for key in [
-            k for k in _PARQUET_PLAN_CACHE if k[1].startswith(path_prefix)
-        ]:
-            del _PARQUET_PLAN_CACHE[key]
-    for fn in list(_uncache_hooks):
-        try:
-            fn(path_prefix)
-        except Exception:
-            pass
+_PARQUET_PLANS = runtime.KeyedCache(512, path=lambda slot: slot[1])
 
 
 def _staged_has_columns(entry) -> bool | None:
@@ -2012,7 +1966,7 @@ def vacuum(
                 ):
                     spark.sql(f"DROP TABLE IF EXISTS {entry['table']}")
                 shutil.rmtree(path, ignore_errors=True)
-                _uncache_parquet_prefix(path)
+                runtime.invalidate_path(path)
                 removed_paths.append(path)
                 live.add(path)  # don't double-remove across pruned versions
     return {
@@ -2078,7 +2032,7 @@ def collect_orphans(
                 if now - newest < min_age_seconds:
                     continue
                 shutil.rmtree(path, ignore_errors=True)
-                _uncache_parquet_prefix(path)
+                runtime.invalidate_path(path)
                 removed.append(path)
             if not os.listdir(txdir):
                 os.rmdir(txdir)
@@ -2132,7 +2086,7 @@ def _sweep_sidecar_checkpoints(
         if now - newest < min_age_seconds:
             continue
         shutil.rmtree(full, ignore_errors=True)
-        _uncache_parquet_prefix(full)
+        runtime.invalidate_path(full)
         removed.append(full)
     return removed
 
@@ -3592,17 +3546,12 @@ STATS_SHARD_ROWS = 100_000  # rows per stats-checkpoint parquet file
 # Parsed-stats cache: version directories are immutable (a rewrite lands
 # in a NEW dir), so per-path entries can be reused across prune calls —
 # repeated selective scans of a million-file table parse its checkpoint
-# once, not per query.  An (mtime_ns, size) stat pair guards the one
-# mutation that exists (write_stats_sidecar re-running over the same dir,
-# e.g. after a MoR delta commit refreshes delta-dir stats) — second-
-# granularity mtime alone can serve stale entries when a refresh lands
-# within the same clock second.  Bounded LRU-ish: evict oldest beyond
-# _STATS_CACHE_MAX paths.  Two threads missing on one path both parse it
-# (benign); inserts and evictions hold the lock, because eviction
-# iterates the dict another thread may be growing.
-_STATS_CACHE: dict[str, tuple[tuple[int, int], list[dict] | None]] = {}
-_STATS_CACHE_MAX = 64
-_STATS_CACHE_LOCK = threading.Lock()
+# once, not per query.  The version, an (mtime_ns, size) stat pair of the
+# sidecar, guards the one mutation that exists (write_stats_sidecar
+# re-running over the same dir, e.g. after a MoR delta commit refreshes
+# delta-dir stats) — second-granularity mtime alone can serve stale
+# entries when a refresh lands within the same clock second.
+_SIDECAR_STATS = runtime.KeyedCache(64)
 
 
 def _load_stats_entries(path: str) -> list[dict] | None:
@@ -3614,16 +3563,10 @@ def _load_stats_entries(path: str) -> list[dict] | None:
         st = os.stat(sidecar)
     except FileNotFoundError:
         return None
-    stamp = (st.st_mtime_ns, st.st_size)
-    hit = _STATS_CACHE.get(path)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    entries = _read_stats_entries(sidecar, path)
-    with _STATS_CACHE_LOCK:
-        if len(_STATS_CACHE) >= _STATS_CACHE_MAX:
-            _STATS_CACHE.pop(next(iter(_STATS_CACHE)))
-        _STATS_CACHE[path] = (stamp, entries)
-    return entries
+    return _SIDECAR_STATS.get(
+        path, (st.st_mtime_ns, st.st_size),
+        lambda: _read_stats_entries(sidecar, path),
+    )
 
 
 def _read_stats_entries(sidecar: str, path: str) -> list[dict]:

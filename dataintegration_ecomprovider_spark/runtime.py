@@ -19,9 +19,9 @@ returned DataFrame is still consumable:
   the scope they were created in or calling ``release_caches``.
 
 None of these can unpersist inline: the query functions return LAZY
-DataFrames and the action happens later, at the caller.  In a long-lived
-session running many operators the executors would accumulate cached
-blocks (round-2 judge finding).  This module is the scope handle: every
+DataFrames and the action happens later, at the caller.  A long-lived
+session running many operators would otherwise accumulate cached blocks
+on its executors.  This module is the scope handle: every
 persist/checkpoint registers in the CURRENT scope, and callers release a
 scope once they have consumed its results.
 
@@ -40,13 +40,24 @@ Two usage levels:
     out_a.collect(); sc_a.release(spark)   # frees ONLY job A's caches
     out_b.collect(); sc_b.release(spark)
 
-``release_caches`` is the compat shim over the scope machinery.  The
-previous whole-registry sweep (which could unpersist caches the EMBEDDING
-application created outside this library — round-3 advisor finding) is now
-opt-in via ``sweep_all=True``; tracked-only release is the default and is
-sufficient because every persist/checkpoint the library creates registers
-its DataFrame or concrete RDD id at creation (``local_checkpoint`` returns
-the id, read straight off the checkpointed plan — no registry diffing).
+``release_caches`` releases the current scope and the module scope.  It
+frees only storage the library tracked: a whole-registry sweep would
+also unpersist caches the EMBEDDING application created outside this
+library, so that sweep is opt-in via ``sweep_all=True``.  Tracked-only
+release suffices because every persist/checkpoint the library creates
+registers its DataFrame or concrete RDD id at creation
+(``local_checkpoint`` returns the id, read straight off the checkpointed
+plan — no registry diffing).
+
+Module-level memos (parquet plans, stats sidecars, manifest JSON, span
+feeds, pivot values) are ``KeyedCache`` instances with two lifetimes.
+Caches whose values own Spark storage (today only the span feeds) are
+drained by ``release_caches``.  The rest hold driver-side plans and
+parsed documents that stay valid across jobs: every import job and
+stream batch ends in ``release_caches``, and draining them there would
+re-list every data dir and re-parse every manifest on the next one.
+They leave by LRU eviction, by a newer version superseding them, or by
+``invalidate_path`` once vacuum/compact delete the files beneath them.
 
 The reference's analog is temp-table cleanup on Close
 (src/EcomDestinationWriter.cs:4167-4182): staging state lives for the job,
@@ -55,10 +66,14 @@ then is dropped deterministically.
 
 from __future__ import annotations
 
+import collections
 import concurrent.futures
 import contextlib
 import contextvars
-from collections.abc import Callable, Iterable, Iterator
+import os
+import threading
+import weakref
+from collections.abc import Callable, Hashable, Iterable, Iterator
 from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -218,16 +233,124 @@ def unpersist_rdd_ids(
             handle.unpersist(blocking)
 
 
-_cache_cleaners: list = []
+# --- keyed caches ------------------------------------------------------------
 
 
-def register_cache_cleaner(fn) -> None:
-    """Register a callable run by release_caches(): module-level caches
-    that OWN persisted DataFrames outside any job scope (e.g.
-    materialize's span-feed cache) hook in here, so one release call
-    still frees everything the library holds — without runtime importing
-    those modules (no import cycle)."""
-    _cache_cleaners.append(fn)
+class KeyedCache:
+    """A bounded, thread-safe memo of ``slot -> (version, value)``.
+
+    ``get(slot, version, compute)`` returns the stored value when the
+    slot holds an EQUAL version, else stores ``compute()``'s result,
+    superseding the slot's other version.  A version is whatever shows a
+    value is still right: a file's stat signature, a span's manifest
+    entries, or a ``weakref.ref`` to the session that built a plan (a
+    weakref equals another only while both referents live and are one
+    object, so a collected session's recycled ``id()`` never matches).
+    Misses are single-flight: callers of one (slot, version) in flight
+    wait for its one result or re-raise its one exception, and a failed
+    flight stores nothing.  ``compute`` runs outside the lock.  Past
+    ``cap`` slots the least recently used is evicted.  ``path(slot)``
+    names the directory a value was built over, for ``invalidate_path``.
+    ``release(value)`` frees storage a value owns, exactly once, on
+    evict, supersede, invalidate and ``clear``; ``release_caches``
+    drains the caches that have one."""
+
+    def __init__(
+        self,
+        cap: int,
+        path: Callable[[Hashable], str] | None = None,
+        release: Callable[[object], None] | None = None,
+    ) -> None:
+        self.cap = cap
+        self._path = path
+        self._release = release
+        self.owns_storage = release is not None
+        self._lock = threading.Lock()
+        # slot -> (version, value, realpath(path(slot)) or None), least
+        # recently used first
+        self._entries: collections.OrderedDict = collections.OrderedDict()
+        self._flights: dict[tuple, concurrent.futures.Future] = {}
+        _caches.add(self)
+
+    def get(self, slot: Hashable, version: Hashable, compute: Callable[[], object]):
+        flight_key = (slot, version)
+        with self._lock:
+            hit = self._entries.get(slot)
+            if hit is not None and hit[0] == version:
+                self._entries.move_to_end(slot)
+                return hit[1]
+            flight = self._flights.get(flight_key)
+            owner = flight is None
+            if owner:
+                flight = self._flights[flight_key] = concurrent.futures.Future()
+        if not owner:
+            return flight.result()
+        try:
+            value = compute()
+            path = os.path.realpath(self._path(slot)) if self._path else None
+        except BaseException as e:
+            with self._lock:
+                del self._flights[flight_key]
+            flight.set_exception(e)
+            raise
+        with self._lock:
+            del self._flights[flight_key]
+            dropped = [self._entries.pop(slot, None)]
+            self._entries[slot] = (version, value, path)
+            while len(self._entries) > self.cap:
+                dropped.append(self._entries.popitem(last=False)[1])
+        flight.set_result(value)
+        self._release_all(dropped)
+        return value
+
+    def invalidate_path(self, real_path: str) -> None:
+        """Drop every slot whose path is ``real_path``, lies under it or
+        contains it, by whole components: dropping /s spares /s2."""
+        with self._lock:
+            dropped = [
+                self._entries.pop(slot)
+                for slot, (_, _, p) in list(self._entries.items())
+                if p and os.path.commonpath([p, real_path]) in (p, real_path)
+            ]
+        self._release_all(dropped)
+
+    def clear(self) -> None:
+        with self._lock:
+            dropped = list(self._entries.values())
+            self._entries.clear()
+        self._release_all(dropped)
+
+    def _release_all(self, dropped) -> None:
+        for entry in dropped:
+            if entry is not None and self._release is not None:
+                try:
+                    self._release(entry[1])
+                except Exception:
+                    pass  # session may be stopped; nothing to free then
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def keys(self) -> list[tuple]:
+        """(slot, version) pairs, least recently used first."""
+        with self._lock:
+            return [(slot, e[0]) for slot, e in self._entries.items()]
+
+    def in_flight(self) -> int:
+        with self._lock:
+            return len(self._flights)
+
+
+_caches: "weakref.WeakSet[KeyedCache]" = weakref.WeakSet()
+
+
+def invalidate_path(path: str) -> None:
+    """Vacuum/compact deleted ``path``: drop every cached value built over
+    it or over a directory containing it, so a later read of a same-named
+    path can never resolve a dead plan or feed."""
+    real = os.path.realpath(path)
+    for cache in list(_caches):
+        cache.invalidate_path(real)
 
 
 def release_caches(
@@ -235,20 +358,20 @@ def release_caches(
     blocking: bool = False,
     sweep_all: bool = False,
 ) -> None:
-    """Compat shim: release the CURRENT scope and the module-level scope.
-    Everything the library persists registers at creation, so this frees
-    all library-held storage; caches created by the embedding application
-    are left alone unless ``sweep_all=True`` explicitly requests the old
-    whole-registry sweep."""
+    """Release the CURRENT scope and the module-level scope, and drain
+    every KeyedCache whose values own Spark storage.  Everything the
+    library persists registers at creation, so this frees all
+    library-held storage; caches created by the embedding application are
+    left alone unless ``sweep_all=True`` requests a whole-registry
+    sweep.  Caches of driver-side plans and documents keep their
+    entries."""
     scope = current_scope()
     scope.release(spark, blocking)
     if scope is not _global_scope:
         _global_scope.release(spark, blocking)
-    for fn in list(_cache_cleaners):
-        try:
-            fn(blocking)
-        except Exception:
-            pass
+    for cache in list(_caches):
+        if cache.owns_storage:
+            cache.clear()
     if sweep_all and spark is not None:
         try:
             unpersist_rdd_ids(spark, persistent_rdd_ids(spark), blocking)
@@ -272,7 +395,7 @@ def spread_scan(df: DataFrame, min_fill: int = 4) -> DataFrame:
     - Only correct for ORDER-INSENSITIVE consumers (aggregations, joins,
       row-wise projections): round-robin repartitioning reorders rows.
     - The many-files no-op decides from ``df.inputFiles()`` — plan
-      metadata, no job (round 14, ADVICE r13).  Only a FEW-files input
+      metadata, no job.  Only a FEW-files input
       falls through to ``df.rdd.getNumPartitions()``, which compiles the
       physical plan and, under AQE, would eagerly materialize query
       stages if the plan contained a shuffle — a raw scan never does.

@@ -139,3 +139,75 @@ def test_checkpoint_rdd_id_is_explicit(spark):
     assert {rid} == runtime.persistent_rdd_ids(spark) - before
     runtime.unpersist_rdd_ids(spark, [rid])
     assert rid not in runtime.persistent_rdd_ids(spark)
+
+
+def test_release_caches_keeps_driver_side_caches_drains_span_feeds(
+    spark, tmp_path, monkeypatch
+):
+    """The two cache lifetimes under release_caches after a store job:
+    the parquet plans, manifest documents and stats sidecars it resolved
+    stay cached, so reading the store again re-lists and re-parses
+    nothing; the persisted span feeds are drained, leaving no persisted
+    RDD behind."""
+    from dataintegration_ecomprovider_spark.plans import (
+        commit_protocol,
+        materialize,
+        publish,
+    )
+    from dataintegration_ecomprovider_spark.plans.pipeline import (
+        ColumnRule,
+        MappingSpec,
+        run_job_on_store,
+    )
+
+    runtime.release_caches(spark)
+    root = str(tmp_path / "store")
+    cat = Catalog(spark, SF_DIR)
+    orders = cat.table("orders").select("o_orderkey", "o_orderstatus")
+    publish.publish_tables(
+        spark, {"orders": orders.limit(100)}, root,
+        table_keys={"orders": ["o_orderkey"]},
+    )
+    spec = MappingSpec(
+        source_table="orders",
+        dest_table="orders",
+        columns=(
+            ColumnRule("o_orderkey", "o_orderkey", is_key=True),
+            ColumnRule("o_orderstatus", script="constant", script_value="Q"),
+        ),
+        conditional=F.col("o_orderkey") % 2 == 0,
+    )
+    run_job_on_store(cat, root, [spec])
+    # a view refresh over the store leaves a persisted span feed
+    _, n = materialize.span_change_feed(
+        spark, root, "orders", 1, 2, ["o_orderkey"]
+    )
+    assert n > 0 and len(materialize.SPAN_FEED_CACHE)
+    read = publish.read_table(spark, root, "orders").count()
+    publish.prune_files(root, "orders", [("o_orderkey", "<", 10)])
+
+    kept = {
+        "plans": publish._PARQUET_PLANS,
+        "documents": commit_protocol._JSON_DOCS,
+        "stats": publish._SIDECAR_STATS,
+    }
+    before = {name: cache.keys() for name, cache in kept.items()}
+    assert all(before.values()), before
+    runtime.release_caches(spark)
+    assert {name: cache.keys() for name, cache in kept.items()} == before
+    assert not len(materialize.SPAN_FEED_CACHE)
+    assert not runtime.persistent_rdd_ids(spark)
+
+    misses = []
+    monkeypatch.setattr(
+        publish, "_footer_spark_schema", lambda *a: misses.append(a)
+    )
+    monkeypatch.setattr(
+        commit_protocol, "_load_json", lambda *a: misses.append(a)
+    )
+    monkeypatch.setattr(
+        publish, "_read_stats_entries", lambda *a: misses.append(a)
+    )
+    assert publish.read_table(spark, root, "orders").count() == read
+    publish.prune_files(root, "orders", [("o_orderkey", "<", 10)])
+    assert misses == []

@@ -625,3 +625,67 @@ def test_commit_wall_ms_recorded_and_surfaced(spark, tmp_path):
     assert len(hist) == 2
     for h in hist:
         assert h["commit_wall_ms"] is not None and h["commit_wall_ms"] > 0
+
+
+def test_cached_reads_survive_eviction_racing_a_vanished_document(tmp_path):
+    """The POSIX backend's JSON parse cache under three readers: two
+    cycle through more sidecar documents than the cache holds (every
+    read evicts), while the third keeps seeing one cached document
+    vanish and return.  Every read answers the file's content or None
+    (absent) and none raises — an eviction that iterates the cache while
+    another thread drops an entry outside its lock raised "dictionary
+    changed size during iteration"."""
+    import json
+    import sys
+
+    proto = PosixCommitProtocol()
+    root = str(tmp_path)
+    n_docs = 1100  # past the cache's 1,024-entry cap
+    for i in range(n_docs):
+        proto.write_aux(root, f"aux_{i}.json", {"i": i})
+    flip = os.path.join(root, "flip.json")
+    with open(flip, "w", encoding="utf-8") as fh:
+        json.dump({"flip": True}, fh)
+
+    errors: list[BaseException] = []
+    deadline = time.monotonic() + 4.0
+
+    def running() -> bool:
+        return not errors and time.monotonic() < deadline
+
+    def cycle(offset: int) -> None:
+        try:
+            while running():
+                for j in range(n_docs):
+                    i = (j + offset) % n_docs
+                    assert proto.read_aux(root, f"aux_{i}.json") == {"i": i}
+                    if not running():
+                        return
+        except BaseException as e:  # noqa: BLE001
+            errors.append(e)
+
+    def vanish() -> None:
+        try:
+            while running():
+                assert proto.read_aux(root, "flip.json") == {"flip": True}
+                os.rename(flip, flip + ".away")
+                assert proto.read_aux(root, "flip.json") is None
+                os.rename(flip + ".away", flip)
+        except BaseException as e:  # noqa: BLE001
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads finely
+    try:
+        threads = [
+            threading.Thread(target=cycle, args=(0,)),
+            threading.Thread(target=cycle, args=(n_docs // 2,)),
+            threading.Thread(target=vanish),
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, repr(errors[0])

@@ -1174,12 +1174,12 @@ def test_maintain_aggregate_companion_publish_is_atomic(spark, tmp_path):
 
 
 def test_span_feed_shared_across_sibling_views(spark, tmp_path, monkeypatch):
-    """Round 14 (guide §1.2): two rowwise views of the SAME source span
-    refresh off ONE shared change feed — the O(table) version diff runs
-    once per refresh pass, not once per view — and both views still
-    equal their from-scratch rebuilds.  Distinct feed shapes
-    (include_old, keys, where) never share an entry."""
-    materialize.clear_span_feeds()
+    """Two rowwise views of the SAME source span refresh off ONE shared
+    change feed — the O(table) version diff runs once per refresh pass,
+    not once per view — and both views still equal their from-scratch
+    rebuilds.  Distinct feed shapes (include_old, keys, where) never
+    share an entry."""
+    materialize.SPAN_FEED_CACHE.clear()
     root = str(tmp_path / "store")
     publish.publish_tables(
         spark,
@@ -1251,22 +1251,24 @@ def test_span_feed_shared_across_sibling_views(spark, tmp_path, monkeypatch):
     assert set(df2.columns) - set(df1.columns)  # __old columns
 
     # release_caches drains the memo (bench hygiene: reps start clean)
-    assert materialize._SPAN_FEEDS
+    assert len(materialize.SPAN_FEED_CACHE)
     from dataintegration_ecomprovider_spark import runtime
 
     runtime.release_caches(spark)
-    assert not materialize._SPAN_FEEDS
+    assert not len(materialize.SPAN_FEED_CACHE)
 
 
 def test_span_feed_dropped_by_uncache_hook_and_reminted_store(
     spark, tmp_path
 ):
-    """Vacuum/compact invalidation reaches the span-feed memo through the
-    publish uncache hook, and a re-minted store at the SAME path can
+    """Vacuum/compact invalidation reaches the span-feed memo through
+    runtime.invalidate_path, and a re-minted store at the SAME path can
     never hit the old store's feed (entry txids differ)."""
     import shutil
 
-    materialize.clear_span_feeds()
+    from dataintegration_ecomprovider_spark import runtime
+
+    materialize.SPAN_FEED_CACHE.clear()
     root = str(tmp_path / "store")
 
     def mint(rows):
@@ -1283,18 +1285,18 @@ def test_span_feed_dropped_by_uncache_hook_and_reminted_store(
     mint([(1, "a"), (2, "b")])
     df, n = materialize.span_change_feed(spark, root, "t", 1, 2, ["k"])
     assert n == 1
-    key1 = next(iter(materialize._SPAN_FEEDS))
+    key1 = materialize.SPAN_FEED_CACHE.keys()[0]
 
-    # the hook vacuum/compact fire drops feeds under the store
-    publish._uncache_parquet_prefix(os.path.join(root, "data"))
-    assert not materialize._SPAN_FEEDS
+    # the invalidation vacuum/compact fire drops feeds under the store
+    runtime.invalidate_path(os.path.join(root, "data"))
+    assert not len(materialize.SPAN_FEED_CACHE)
 
     # re-mint the same path with DIFFERENT data: the key's entry
     # identity (txid-bearing paths) differs, so no stale hit is possible
     shutil.rmtree(root)
     mint([(1, "a"), (2, "b"), (3, "c")])
     df2, n2 = materialize.span_change_feed(spark, root, "t", 1, 2, ["k"])
-    key2 = next(iter(materialize._SPAN_FEEDS))
+    key2 = materialize.SPAN_FEED_CACHE.keys()[0]
     assert key1 != key2
     assert n2 == 1
-    materialize.clear_span_feeds()
+    materialize.SPAN_FEED_CACHE.clear()

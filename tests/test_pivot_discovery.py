@@ -4,7 +4,11 @@ column list + the reference's ProductCategory|cat|field naming scheme
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from dataintegration_ecomprovider_spark.operators.pivot import (
@@ -71,5 +75,73 @@ def test_discovery_memoized_per_cache_key(spark):
         assert discover_pivot_values(eav2, F.col("k")) == ["z"]
         clear_discovery_cache()
         assert discover_pivot_values(eav2, F.col("k"), cache_key=key) == ["z"]
+    finally:
+        clear_discovery_cache()
+
+
+class _CountingFrame:
+    """Stands in for the discovery source: every distinct-scan chain ends
+    in collect(), which counts the scan, holds it open for `delay`
+    seconds and answers `values`."""
+
+    def __init__(self, values, delay: float = 0.0) -> None:
+        self.values = values
+        self.delay = delay
+        self.scans = 0
+        self._lock = threading.Lock()
+
+    def _chain(self, *_args, **_kwargs):
+        return self
+
+    select = filter = distinct = orderBy = limit = _chain
+
+    def collect(self):
+        with self._lock:
+            self.scans += 1
+        time.sleep(self.delay)
+        return [Row(v=v) for v in self.values]
+
+
+def test_discovery_cache_is_bounded(spark):
+    """A long-lived driver discovering over ever new keys keeps at most
+    the cache's cap of them: the least recently used key re-scans."""
+    from dataintegration_ecomprovider_spark.operators import pivot
+
+    pivot.clear_discovery_cache()
+    try:
+        src = _CountingFrame(["a"])
+        n_keys = 64  # past the cap
+        for i in range(n_keys):
+            discover_pivot_values(src, F.col("k"), cache_key=("dir", i))
+        assert src.scans == n_keys
+        discover_pivot_values(src, F.col("k"), cache_key=("dir", n_keys - 1))
+        assert src.scans == n_keys  # the newest key still hits
+        discover_pivot_values(src, F.col("k"), cache_key=("dir", 0))
+        assert src.scans == n_keys + 1  # the oldest was evicted
+        assert len(pivot.PIVOT_VALUE_CACHE) <= pivot.PIVOT_VALUE_CACHE.cap
+    finally:
+        pivot.clear_discovery_cache()
+
+
+def test_concurrent_discovery_of_one_key_scans_once(spark):
+    """Four pivot builds asking for one key at once share one
+    distinct-scan and each get their own copy of its values."""
+    from dataintegration_ecomprovider_spark import runtime
+    from dataintegration_ecomprovider_spark.operators.pivot import (
+        clear_discovery_cache,
+    )
+
+    clear_discovery_cache()
+    try:
+        src = _CountingFrame(["a", "b"], delay=0.3)
+        got = runtime.map_concurrently(
+            lambda _: discover_pivot_values(
+                src, F.col("k"), cache_key=("dir", "k")
+            ),
+            range(4),
+        )
+        assert src.scans == 1
+        assert got == [["a", "b"]] * 4
+        assert len({id(values) for values in got}) == 4
     finally:
         clear_discovery_cache()

@@ -174,7 +174,7 @@ def _two_version_store(spark, root):
 def test_span_feed_is_single_flight(spark, tmp_path, monkeypatch):
     """Concurrent callers asking for one span compute ONE diff: the
     first caller computes, the rest wait and share its persisted feed."""
-    materialize.clear_span_feeds()
+    materialize.SPAN_FEED_CACHE.clear()
     root = str(tmp_path / "store")
     _two_version_store(spark, root)
     calls = []
@@ -193,7 +193,7 @@ def test_span_feed_is_single_flight(spark, tmp_path, monkeypatch):
     assert len(calls) == 1
     assert len({id(df) for df, _ in got}) == 1
     assert {n for _, n in got} == {2}
-    assert not materialize._SPAN_INFLIGHT
+    assert not materialize.SPAN_FEED_CACHE.in_flight()
 
     # a failing flight re-raises in every waiter and leaves nothing
     # behind, so the next caller retries
@@ -210,8 +210,8 @@ def test_span_feed_is_single_flight(spark, tmp_path, monkeypatch):
         range(3),
     )
     assert all(isinstance(e, KeyError) for e in errors)
-    assert not materialize._SPAN_INFLIGHT
-    materialize.clear_span_feeds()
+    assert not materialize.SPAN_FEED_CACHE.in_flight()
+    materialize.SPAN_FEED_CACHE.clear()
 
 
 def _raises(fn):
@@ -228,10 +228,10 @@ def test_span_feed_eviction_is_lru_and_where_spans_supersede(
     """A hit refreshes recency, so the cap evicts the least recently
     USED feed; a newer span of one (source, where shape) supersedes the
     older span's entry."""
-    materialize.clear_span_feeds()
+    materialize.SPAN_FEED_CACHE.clear()
     root = str(tmp_path / "store")
     _two_version_store(spark, root)
-    monkeypatch.setattr(materialize, "_SPAN_FEEDS_MAX", 2)
+    monkeypatch.setattr(materialize.SPAN_FEED_CACHE, "cap", 2)
 
     def feed(keys, include_old=False, where=(), span=(1, 2)):
         return materialize.span_change_feed(
@@ -243,17 +243,21 @@ def test_span_feed_eviction_is_lru_and_where_spans_supersede(
     feed(["k"], include_old=True)
     assert feed(["k"])[0] is first  # hit: now most recently used
     feed(["k", "v"])  # third shape: evicts the include_old feed
-    shapes = {(k[4], k[5]) for k in materialize._SPAN_FEEDS}
+    shapes = {
+        (slot[3], slot[4]) for slot, _ in materialize.SPAN_FEED_CACHE.keys()
+    }
     assert shapes == {(("k",), False), (("k", "v"), False)}
 
-    materialize.clear_span_feeds()
-    monkeypatch.setattr(materialize, "_SPAN_FEEDS_MAX", 6)
+    materialize.SPAN_FEED_CACHE.clear()
+    monkeypatch.setattr(materialize.SPAN_FEED_CACHE, "cap", 6)
     where = [("k", ">", 1)]
     _, n12 = feed(["k"], where=where, span=(1, 2))
     _, n23 = feed(["k"], where=where, span=(2, 3))
     assert (n12, n23) == (2, 1)
-    assert [k[7] for k in materialize._SPAN_FEEDS] == [(2, 3)]
-    materialize.clear_span_feeds()
+    assert [span[2] for _, span in materialize.SPAN_FEED_CACHE.keys()] == [
+        (2, 3)
+    ]
+    materialize.SPAN_FEED_CACHE.clear()
 
 
 # --- the BM25 + MinHash stack, refreshed concurrently -----------------------
@@ -269,7 +273,7 @@ def test_concurrent_refresh_of_the_search_stack_equals_recompute(
     commits the MinHash sigs and bands in one version, and reports in
     dependency order.  A broken sibling lands in errors without
     stopping the rest, and nothing lands in runtime's module scope."""
-    materialize.clear_span_feeds()
+    materialize.SPAN_FEED_CACHE.clear()
     root = str(tmp_path / "store")
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -353,7 +357,7 @@ def test_concurrent_refresh_of_the_search_stack_equals_recompute(
     assert _rows(publish.read_table(spark, root, "minhash_bands")) == _rows(
         dedup.band_buckets(sigs)
     )
-    materialize.clear_span_feeds()
+    materialize.SPAN_FEED_CACHE.clear()
 
 
 # --- merge-on-read staging reads the base schema driver-side ----------------

@@ -169,9 +169,9 @@ def train(
     defaultParallelism/8 partitions before persisting: every training
     iteration launches one job over the cached table, and at 32-way
     local the per-task scheduling overhead of 32 near-empty cached
-    partitions dominated the argmax itself (round 14 interleaved A/B,
-    12 merges: 2.36 s at 32 partitions → 1.92 s at 4; scale-relative,
-    so a large cluster still fans out)."""
+    partitions dominates the argmax itself (12 merges measured 2.36 s
+    at 32 partitions against 1.92 s at 4).  The divisor is
+    scale-relative, so a large cluster still fans out."""
     spark = words.sparkSession
     cache_parts = max(1, spark.sparkContext.defaultParallelism // 8)
     base = (
@@ -221,92 +221,13 @@ def train(
     return merges
 
 
-def train_incremental(
-    words: DataFrame,
-    num_merges: int,
-    min_pair_freq: int = 1,
-    checkpoint_every: int = 8,
-    strict: bool = False,
-) -> list[dict]:
-    """`train` with DELTA-maintained pair counts: a merge only changes
-    the pair profile of words CONTAINING the merged pair, so each
-    iteration explodes pairs for that slice alone (subtract its old
-    pairs, add its rewritten pairs, fold into the standing count table)
-    instead of re-exploding the whole vocabulary.
-
-    Per-iteration work drops from O(total symbols in vocabulary) to
-    O(symbols in affected words) + O(distinct pairs) for the count
-    fold — at a production vocabulary (10^8 words) most merges touch a
-    small fraction of words, so the loop body shrinks by that hit
-    ratio.  Both running tables (words and counts) are localCheckpointed
-    every `checkpoint_every` merges to cut the union/replace lineage.
-
-    Exactly equivalent to `train` (asserted property-style in
-    tests/test_bpe.py): same merges, same tie-breaks, same early stop."""
-    spark = words.sparkSession
-    cur, cur_ids = runtime.local_checkpoint(
-        words.select(symbol_string(F.col("word")).alias("sym"), "freq")
-    )
-    counts, count_ids = runtime.local_checkpoint(pair_counts(cur))
-    live_ids = cur_ids | count_ids
-    merges: list[dict] = []
-    try:
-        for rank in range(1, num_merges + 1):
-            best = (
-                counts.filter(F.col("cnt") > 0)
-                .orderBy(F.col("cnt").desc(), F.col("lft").asc(), F.col("rgt").asc())
-                .limit(1)
-                .collect()
-            )
-            if not best or best[0]["cnt"] < min_pair_freq:
-                if strict:
-                    raise ValueError(
-                        f"no pair with frequency >= {min_pair_freq} at rank {rank}"
-                    )
-                break
-            lft, rgt, cnt = best[0]["lft"], best[0]["rgt"], best[0]["cnt"]
-            merges.append(
-                {"rank": rank, "lft": lft, "rgt": rgt,
-                 "token": lft + rgt, "pair_freq": int(cnt)}
-            )
-            pat, rep = merge_pattern(lft, rgt)
-            affected = cur.filter(F.contains(F.col("sym"), F.lit(pat)))
-            rewritten = affected.withColumn(
-                "sym", F.replace(F.col("sym"), F.lit(pat), F.lit(rep))
-            )
-            delta = (
-                pair_counts(affected).withColumn("cnt", -F.col("cnt"))
-                .unionByName(pair_counts(rewritten))
-            )
-            counts = (
-                counts.unionByName(delta)
-                .groupBy("lft", "rgt")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-                .filter(F.col("cnt") != 0)
-            )
-            cur = cur.filter(~F.contains(F.col("sym"), F.lit(pat))).unionByName(
-                rewritten
-            )
-            if rank % checkpoint_every == 0:
-                cur, a = runtime.local_checkpoint(cur)
-                counts, b = runtime.local_checkpoint(counts)
-                # the fresh checkpoints are self-contained — the
-                # superseded round's storage goes immediately
-                runtime.unpersist_rdd_ids(spark, live_ids)
-                live_ids = a | b
-    finally:
-        # the result is a plain list — free every tracked checkpoint
-        runtime.unpersist_rdd_ids(spark, live_ids)
-    return merges
-
-
 def dropped_word_count(text: Column, lowercase: bool = True) -> Column:
     """Words of ``text`` that the delimited representation cannot carry
     (they contain SEP or EOW) and the encode/count path therefore DROPS
     (clean_words) — surfaced per document so a corpus-accounting run can
     budget the loss instead of silently under-counting.  This is the
     documented encode contract: dropped words contribute to NEITHER
-    n_words NOR n_tokens, and n_dropped_words says how many went."""
+    n_words NOR n_tokens, and this count says how many went."""
     base = F.lower(text) if lowercase else text
     raw = F.filter(
         F.split(F.trim(base), r"[ \t\n\r\f]+"), lambda w: w != ""
@@ -439,28 +360,6 @@ def vocab_df(spark: SparkSession, vocab_rows: list[dict]) -> DataFrame:
     ).repartition(1)
 
 
-def publish_bpe_tokenizer(
-    spark: SparkSession, root: str, merges: list[dict],
-    vocab_rows: list[dict],
-    merges_table: str = "bpe_merges",
-    vocab_table: str = "bpe_vocab",
-) -> dict:
-    """Persist the COMPLETE tokenizer — merge table + id-stable
-    vocabulary — in one atomic commit, so a consumer pinning a store
-    version gets a consistent (merges, ids) pair by construction."""
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    return publish.publish_tables(
-        spark,
-        {
-            merges_table: merges_df(spark, merges),
-            vocab_table: vocab_df(spark, vocab_rows),
-        },
-        root,
-        table_keys={merges_table: ["rank"], vocab_table: ["token_id"]},
-    )
-
-
 def token_id_rows(
     docs: DataFrame,
     merges: list[dict],
@@ -481,10 +380,9 @@ def token_id_rows(
     unk = next(
         (v["token_id"] for v in vocab_rows if v["kind"] == "special"), None
     )
-    # round-13 note: spreading docs here (guide §2.5) was measured and
-    # REVERTED — callers feed filtered subsets, and the interleaved A/B
-    # showed the added Exchange costs more than the explode gains
-    # (llm_bpe_encode_ids 3.83 s without vs 4.47 s with)
+    # no spread_scan here: callers feed filtered subsets, where the
+    # added Exchange costs more than the explode gains
+    # (llm_bpe_encode_ids measured 3.83 s without vs 4.47 s with)
     toks = docs.select(
         F.col(id_col),
         F.posexplode(
@@ -519,124 +417,12 @@ def merges_df(spark: SparkSession, merges: list[dict]) -> DataFrame:
     )
     # local relations fan out over defaultParallelism near-empty
     # partitions; repartition(1) computes them in parallel THEN writes
-    # one file (see SCALE.md round-10 commit-cost notes)
+    # one file, so a commit stages one small file, not defaultParallelism
     return df.repartition(1)
 
 
-def publish_bpe_merges(
-    spark: SparkSession, root: str, merges: list[dict],
-    table: str = "bpe_merges",
-) -> dict:
-    """Persist a trained merge table in the versioned store (keyed by
-    rank) — the tokenizer-as-a-table: training is a maintenance
-    decision (like ANN codebook rebuilds), consumers read the merges at
-    a pinned store version for reproducible token accounting."""
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    return publish.publish_tables(
-        spark, {table: merges_df(spark, merges)}, root,
-        table_keys={table: ["rank"]},
-    )
-
-
-def read_bpe_merges(
-    spark: SparkSession, root: str, table: str = "bpe_merges",
-    version: int | None = None,
-) -> list[dict]:
-    """The persisted merge list back out of the store, rank-ordered
-    (optionally at a pinned version) — bounded by vocabulary size, the
-    one driver-resident artifact of the tokenizer."""
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    df = (
-        publish.read_table_at(spark, root, table, version)
-        if version is not None
-        else publish.read_table(spark, root, table)
-    )
-    return [r.asDict() for r in df.orderBy("rank").collect()]
-
-
-def read_bpe_vocab(
-    spark: SparkSession, root: str, table: str = "bpe_vocab",
-    version: int | None = None,
-) -> list[dict]:
-    """The persisted vocabulary back out of the store, id-ordered
-    (optionally at a pinned version) — the consumption half of
-    publish_bpe_tokenizer: pin one store version and you hold a
-    consistent (merges, ids) pair for a whole training run."""
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    df = (
-        publish.read_table_at(spark, root, table, version)
-        if version is not None
-        else publish.read_table(spark, root, table)
-    )
-    return [r.asDict() for r in df.orderBy("token_id").collect()]
-
-
-def maintain_token_counts(
-    spark: SparkSession, root: str, src: str, dst: str,
-    merges_table: str = "bpe_merges",
-    text_col: str = "text",
-    lowercase: bool = True,
-    byte_fallback: bool = False,
-) -> dict:
-    """CDC-maintained per-document token counts under the PERSISTED
-    tokenizer: a rowwise view (materialize.maintain_rowwise_view) whose
-    build applies the store's merge table as a replace chain — inserts/
-    updates re-encode only the changed documents, deletes retract.
-
-    Retraining the tokenizer is a rebuild decision: publish new merges,
-    drop + re-seed this view (counts under two different merge tables
-    must not mix, so the refresh does NOT silently pick up a newer
-    merge version mid-stream — the merge list is read once per call at
-    the current version and recorded work stays consistent because
-    every refresh re-reads it; callers pin accounting runs to a store
-    version for exact reproducibility)."""
-    from dataintegration_ecomprovider_spark.plans import materialize
-
-    merges = read_bpe_merges(spark, root, merges_table)
-
-    def build(rows: DataFrame) -> DataFrame:
-        keys = [c for c in rows.columns if c != text_col]
-        return rows.select(
-            *keys,
-            F.size(word_tokens(F.col(text_col), lowercase))
-            .cast("bigint").alias("n_words"),
-            token_count(
-                F.col(text_col), merges, lowercase, byte_fallback
-            ).alias("n_tokens"),
-            # the documented drop contract, surfaced (see
-            # dropped_word_count): words containing SEP/EOW count here
-            # and nowhere else — under byte_fallback they ALSO count in
-            # n_tokens (as their UTF-8 bytes), so the column then reads
-            # "words carried as byte fallback" rather than "words lost"
-            dropped_word_count(F.col(text_col), lowercase).alias(
-                "n_dropped_words"
-            ),
-        )
-
-    return materialize.maintain_rowwise_view(
-        spark, root, src, dst, build,
-        dst_keys=_src_keys(root, src),
-        stable_keys=True,
-        state_key=f"token_counts:{dst}",
-    )
-
-
-def _src_keys(root: str, src: str):
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    keys = publish.table_keys(root, src)
-    if not keys or len(keys) != 1:
-        raise ValueError(
-            f"token-count view of {src!r} needs its single key recorded"
-        )
-    return list(keys)
-
-
-# Measured ceiling of the nested-replace column expression (round 12,
-# scripts/scale_probe.py bpe_ceiling + SCALE.md table): the classic
+# Measured ceiling of the nested-replace column expression
+# (scripts/scale_probe.py bpe_ceiling): the classic
 # Column → Catalyst expression conversion recurses once per nested node
 # and OVERFLOWS THE DRIVER STACK between 256 and 384 nested replaces —
 # a production 32k-merge tokenizer would crash at plan build, long

@@ -33,14 +33,6 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one doc per identical text (min-id wins, deterministic)."""
-    groups = exact_dedup_groups(docs, text_col, id_col)
-    return docs.join(
-        groups.select(F.col("canonical_doc_id").alias(id_col)), id_col, "left_semi"
-    )
-
-
 def words_of(text: Column) -> Column:
     # [ \t\n\r\f]+ not \s+: Java \s includes \x0B, the DuckDB oracles'
     # RE2 \s does not (see llm/bpe.word_tokens)
@@ -129,9 +121,8 @@ def minhash_signatures(
         base = F.xxhash64("s")
     # guide §2.5 spread lives at the CORPUS-SIZED call sites
     # (minhash_candidates, the dedup-index seed), not here: this
-    # primitive also receives delta-sized CDC batches, where the added
-    # Exchange per small batch is the same pattern measured as a
-    # lifecycle regression for token_postings in round 13 (ADVICE r13)
+    # primitive also receives delta-sized CDC batches, where an added
+    # Exchange per small batch costs more than the parallel scan gains
     with_words = docs.select(
         F.col(id_col).alias("id"), words_of(F.col(text_col)).alias("w")
     )
@@ -202,9 +193,9 @@ def minhash_candidates(
 
     # guide §2.5: candidate generation sees corpus-sized inputs (the
     # batch-ingest path signs batches via minhash_signatures directly),
-    # and a single-file corpus otherwise shingles on ONE core — the
-    # round-13 A/B site (2.56 → 2.25 s), moved here from the shared
-    # primitive so delta-sized signature calls skip the Exchange
+    # and a single-file corpus otherwise shingles on ONE core (measured
+    # 2.56 → 2.25 s); the spread lives here, not in the shared
+    # primitive, so delta-sized signature calls skip the Exchange
     sig = minhash_signatures(
         runtime.spread_scan(docs), id_col, text_col, num_hashes, shingle_n,
         portable,
@@ -244,7 +235,7 @@ def minhash_candidates(
     # ×2 for the semi-join + the verification join) — persist the small
     # pair set so the LSH pipeline runs once, not once per consumer.  The
     # persist is TRACKED: callers free it with runtime.release_caches()
-    # after consuming their results (round-2 leak finding).
+    # after consuming their results, or the pair set leaks.
     from dataintegration_ecomprovider_spark import runtime
 
     return runtime.track(pairs.persist())
@@ -410,8 +401,8 @@ def repeated_spans_maximal(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """MAXIMAL repeated spans via length doubling — the round-9 upgrade of
-    ``repeated_spans`` toward suffix-array substring dedup (Lee et al.
+    """MAXIMAL repeated spans via length doubling — ``repeated_spans``
+    extended toward suffix-array substring dedup (Lee et al.
     2022 removes maximal repeats, not fixed-width ones): widths n, 2n,
     ..., n·2^(levels-1); a width-w span is reported only when some
     occurrence of it is NOT covered by a repeated span of width 2w — so

@@ -69,7 +69,7 @@ def write_training_shards(
 
     `salt_cols` spreads row copies (e.g. mixture epochs) across shards —
     see shard_assign.  `shuffle_seed` writes each shard's rows in a
-    deterministic pseudo-random order — md5(seed:id[:salts]) — instead of
+    deterministic pseudo-random order — md5(seed:id[:salt_cols]) — instead of
     arrival order: the within-shard training order trainers want, changed
     globally by changing one integer, reproduced exactly on re-export.
     The sort is WITHIN the already-co-located shard partition (no extra

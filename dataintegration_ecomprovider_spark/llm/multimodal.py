@@ -110,28 +110,6 @@ def frame_sample(
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
 
 
-def resize_payload(media: DataFrame, target_bytes: int = 256) -> DataFrame:
-    """Resize step: normalize every payload to `target_bytes` (truncate or
-    zero-pad) — the deterministic stand-in for image resizing (same
-    schema-in/schema-out contract a PIL-based resize would have)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [
-                bytes(p)[:target_bytes].ljust(target_bytes, b"\x00") for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": resized,
-                    "media_type": pdf["media_type"],
-                    "byte_len": [len(r) for r in resized],
-                }
-            )
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
 def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.  The stub
     computes byte length + first byte; a real pipeline would decode and

@@ -30,15 +30,6 @@ def n_words(text: Column) -> Column:
     ).cast("bigint")
 
 
-def occurrence_count(text: Column, marker: str) -> Column:
-    """Number of occurrences of `marker` via length arithmetic (portable to
-    any SQL engine, unlike regexp_count dialects)."""
-    return (
-        (F.length(text) - F.length(F.replace(text, F.lit(marker), F.lit(""))))
-        / F.lit(len(marker))
-    ).cast("bigint")
-
-
 def stopword_count(text: Column) -> Column:
     words = word_array(F.lower(text))
     return F.size(F.filter(words, lambda w: w.isin(*STOPWORDS))).cast("bigint")
@@ -85,8 +76,8 @@ def lang_guess(text: Column) -> Column:
 # --- pluggable model seam --------------------------------------------------
 # The heuristics above are deterministic, oracle-checkable DEFAULTS.  Real
 # models (a BPE tokenizer, a fastText-style langid, a learned quality
-# scorer) drop in behind the SAME column contracts via these Arrow-batched
-# pandas_udf wrappers — the query shapes (llm_token_counts, llm_lang_id,
+# scorer) drop in behind the SAME column contracts via this Arrow-batched
+# pandas_udf wrapper — the query shapes (llm_token_counts, llm_lang_id,
 # llm_text_quality) do not change, only the column expression does.  At
 # 100 TB the batch transfer is the Arrow path (vectorized, constant
 # memory per batch), never a row-at-a-time Python UDF.
@@ -101,18 +92,6 @@ def batched_column_model(fn, return_type: str):
     import pandas as pd  # noqa: F401 — documents the fn signature
 
     return F.pandas_udf(fn, returnType=return_type)
-
-
-def with_model(df, fn, output_schema, text_col: str = "text"):
-    """Apply a per-batch text model producing SEVERAL columns at once:
-    `fn(pandas.Series) -> pandas.DataFrame` whose columns match
-    `output_schema` (a DDL struct string or StructType, e.g.
-    "lang string, score double").  The struct result is flattened onto the
-    input rows — the multi-feature analog of quality_features, with the
-    same one-pass, no-shuffle plan shape."""
-    udf = F.pandas_udf(fn, returnType=output_schema)
-    out = df.withColumn("__model", udf(F.col(text_col)))
-    return out.select("*", "__model.*").drop("__model")
 
 
 def rolling_fingerprint(text: Column, mod: int = 1_000_000_007, base: int = 31) -> Column:

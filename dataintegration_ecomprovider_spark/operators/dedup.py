@@ -36,7 +36,3 @@ def first_wins(
     )
 
 
-def distinct_pairs(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Relation-pair dedup where row content == key (hashtable dedup,
-    src/EcomDestinationWriter.cs:2830): plain distinct on the key columns."""
-    return df.select(*keys).dropDuplicates(list(keys))

@@ -27,7 +27,7 @@ from dataintegration_ecomprovider_spark.catalog import Catalog
 from dataintegration_ecomprovider_spark.operators.string_agg import collect_ordered
 
 
-def products_export_view(cat: Catalog, salts: int | None = None) -> DataFrame:
+def products_export_view(cat: Catalog) -> DataFrame:
     """The flagship: EcomProducts export SELECT (src/EcomSourceReader.cs:255-282,
     :387-448) over the fixture schema.
 
@@ -40,13 +40,9 @@ def products_export_view(cat: Catalog, salts: int | None = None) -> DataFrame:
       - PrimaryGroup (A8, src/EcomSourceReader.cs:401-404): top-1 supplier by
         shipped quantity (desc), suppkey tie-break.
 
-    `salts` opts the aggregation into the two-phase salted form
-    (operators/skew.py): phase 1 collects per (part, salt) so a hot
-    product with millions of relation rows spreads over `salts` reducers;
-    phase 2 merges the per-salt partials (|parts|·salts rows regardless of
-    skew) and applies the ONE total sort_array, so the result is
-    bit-identical to the unsalted plan (tests/test_sources_skew.py).
-    The min-aggregates ride the same two phases (min of per-salt mins).
+    All three come from ONE aggregation pass (one shuffle on l_partkey);
+    the lists sort after collection, so they do not depend on shuffle
+    order.
     """
     part = cat.table("part")
     supplier = cat.table("supplier")
@@ -66,45 +62,20 @@ def products_export_view(cat: Catalog, salts: int | None = None) -> DataFrame:
     #  - primary_group (A8 top-1 by qty desc, suppkey asc) and manufacturer
     #    (lowest suppkey) as struct-ordered min aggregates — a max-by/min-by
     #    that needs no second window pass.
-    pair_struct = F.struct(
-        F.col("s_name"),
-        F.struct(
-            F.col("s_name").alias("n"), F.col("s_suppkey").cast("string").alias("k")
-        ).alias("__v"),
-    )
     prim_struct = F.struct((-F.col("qty")).alias("nq"),
                            F.col("l_suppkey").alias("k"),
                            F.col("s_name").alias("n"))
     mfr_struct = F.struct(F.col("l_suppkey").alias("k"),
                           F.col("s_name").alias("n"))
-    if salts:
-        # deterministic salt from the per-row keys (not rand()): stable
-        # across retries, spreads hot parts because suppliers vary per row
-        salted = rel.withColumn(
-            "__salt", F.pmod(F.xxhash64("s_name", "l_suppkey"), F.lit(salts))
-        )
-        phase1 = salted.groupBy("l_partkey", "__salt").agg(
-            F.collect_list(pair_struct).alias("__pp"),
-            F.min(prim_struct).alias("__prim"),
-            F.min(mfr_struct).alias("__mfr"),
-        )
-        agged = phase1.groupBy("l_partkey").agg(
-            F.transform(
-                F.sort_array(F.flatten(F.collect_list("__pp"))), lambda s: s["__v"]
-            ).alias("__pairs"),
-            F.min("__prim").alias("__prim"),
-            F.min("__mfr").alias("__mfr"),
-        )
-    else:
-        agged = rel.groupBy("l_partkey").agg(
-            collect_ordered(
-                F.struct(F.col("s_name").alias("n"),
-                         F.col("s_suppkey").cast("string").alias("k")),
-                [F.col("s_name")],
-            ).alias("__pairs"),
-            F.min(prim_struct).alias("__prim"),
-            F.min(mfr_struct).alias("__mfr"),
-        )
+    agged = rel.groupBy("l_partkey").agg(
+        collect_ordered(
+            F.struct(F.col("s_name").alias("n"),
+                     F.col("s_suppkey").cast("string").alias("k")),
+            [F.col("s_name")],
+        ).alias("__pairs"),
+        F.min(prim_struct).alias("__prim"),
+        F.min(mfr_struct).alias("__mfr"),
+    )
     derived = (
         agged
         .select(

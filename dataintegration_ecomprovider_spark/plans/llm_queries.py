@@ -2979,8 +2979,7 @@ def q_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream against the vocabulary (no corpus-side shuffle).  The oracle
     re-derives the vocabulary AND the full encode chain in SQL and joins
     the same way.  Dropped-word contract: words containing SEP/EOW
-    appear in no id sequence (surfaced per doc by dropped_word_count /
-    the n_dropped_words column of maintained token counts)."""
+    appear in no id sequence (surfaced per doc by dropped_word_count)."""
     from dataintegration_ecomprovider_spark.llm import bpe
 
     docs = Catalog(spark, sf_dir).table("documents")

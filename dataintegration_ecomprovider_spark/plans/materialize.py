@@ -1159,9 +1159,8 @@ def maintain_rowwise_view(
 
     def _dst_schema_stale() -> bool:
         # a view seeded by an older `build` can lack columns the current
-        # build emits (e.g. token counts gained n_dropped_words in round
-        # 11) — committing the new build output as a MoR delta against
-        # the old table would mismatch schemas (ADVICE r11).  Detect via
+        # build emits — committing the new build output as a MoR delta
+        # against the old table would mismatch schemas.  Detect via
         # plan-time analysis (no job) and force a re-seed.
         #
         # Fast path (round 13, guide §1.2): both sides of the name-set

@@ -220,11 +220,11 @@ _PARQUET_PLANS = runtime.KeyedCache(512, path=lambda slot: slot[1])
 
 def _staged_has_columns(entry) -> bool | None:
     """Cheap driver-side answer to "does this freshly staged table have at
-    least one column?" from a single parquet footer — the publish-path
-    validation that previously launched a whole Spark read per staged
-    table.  Returns None for "can't tell cheaply" (no data files, or a
-    footer with zero physical columns — possible when every column is a
-    partition column), in which case the caller falls back to the full
+    least one column?" from a single parquet footer, so the publish-path
+    validation launches no Spark read per staged table.  Returns None
+    for "can't tell cheaply" (no data files, or a footer with zero
+    physical columns — possible when every column is a partition
+    column), in which case the caller falls back to the full
     `_read_entry` check."""
     path = entry["path"] if isinstance(entry, dict) else entry
     try:
@@ -721,189 +721,6 @@ def _update_entry_meta(root: str, name: str, mutate) -> dict:
         return _commit(root, txid, manifest, based_on=prev["version"])
 
 
-def schema_changes(
-    root: str, name: str, from_version: int, to_version: int | None = None
-) -> list[dict]:
-    """The SCHEMA side of CDC: every rename / drop / added-column /
-    rewrite / recreate event `name` took in (from_version, to_version] —
-    what a row-level change feed cannot carry (a rename emits ZERO rows
-    by design).  Incremental consumers poll it beside read_changes to
-    follow the table's shape: replicate_table applies the same walk
-    internally (_mirror_column_map); an external consumer uses it to
-    ALTER its own sink before applying the span's rows.
-
-    Pure metadata — a manifest-history walk, no Spark job, O(span).
-    Events: ``{"version", "change": "rename", "from", "to"}``,
-    ``{"change": "drop", "column"}`` (logical name),
-    ``{"change": "add", "column"}`` (merge_into_mor(evolve_schema=True)
-    widenings recorded in schema_json),
-    ``{"change": "widen", "column", "from", "to"}`` (lossless type
-    widening — metadata or staging-driven),
-    ``{"change": "rewrite"}`` (value-preserving compact/recluster),
-    ``{"change": "rewritten"}`` (a rewrite that changed physical names —
-    CoW merge, materialized mapping — same logical schema),
-    ``{"change": "dropped_table"}`` / ``{"change": "created_table"}``."""
-    if to_version is None:
-        to_version = current_manifest(root)["version"]
-
-    def _json_fields(entry) -> set[str] | None:
-        if isinstance(entry, dict) and entry.get("schema_json"):
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            return {
-                f.name
-                for f in StructType.fromJson(
-                    _json.loads(entry["schema_json"])
-                ).fields
-            }
-        return None
-
-    def _fields(entry) -> set[str] | None:
-        # effective physical fields: the recorded widened schema, or one
-        # parquet footer read of the base (pre-evolution entries)
-        j = _json_fields(entry)
-        if j is not None:
-            return j
-        try:
-            import pyarrow.parquet as pq
-
-            path = entry["path"] if isinstance(entry, dict) else entry
-            files = _data_files(path)
-            if not files:
-                return None
-            names = set(pq.read_schema(files[0]).names)
-            # hive partition columns live in directory names, not footers —
-            # without them the first schema_json version would emit
-            # spurious {'change': 'add'} events for every partition column
-            if isinstance(entry, dict):
-                names |= set(entry.get("partition_by") or [])
-            return names
-        except Exception:  # noqa: BLE001 — a missing footer just mutes adds
-            return None
-
-    def _field_types(entry) -> dict[str, str] | None:
-        # physical name -> simpleString type, from schema_json or one
-        # footer read (pre-widening entries) — primitives only; columns
-        # whose footer type has no Spark primitive mapping are omitted
-        # (they just can't emit widen events)
-        if isinstance(entry, dict) and entry.get("schema_json"):
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            return {
-                f.name: f.dataType.simpleString()
-                for f in StructType.fromJson(
-                    _json.loads(entry["schema_json"])
-                ).fields
-            }
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            path = entry["path"] if isinstance(entry, dict) else entry
-            files = _data_files(path)
-            if not files:
-                return None
-            out_types: dict[str, str] = {}
-            for field in pq.read_schema(files[0]):
-                t = field.type
-                if pa.types.is_int8(t):
-                    s = "tinyint"
-                elif pa.types.is_int16(t):
-                    s = "smallint"
-                elif pa.types.is_int32(t):
-                    s = "int"
-                elif pa.types.is_int64(t):
-                    s = "bigint"
-                elif pa.types.is_float32(t):
-                    s = "float"
-                elif pa.types.is_float64(t):
-                    s = "double"
-                elif pa.types.is_decimal(t):
-                    s = f"decimal({t.precision},{t.scale})"
-                elif pa.types.is_string(t) or pa.types.is_large_string(t):
-                    s = "string"
-                else:
-                    continue
-                out_types[field.name] = s
-            return out_types
-        except Exception:  # noqa: BLE001 — missing footer mutes widen
-            return None
-
-    out: list[dict] = []
-    prev = tables_at(root, from_version).get(name)
-    for v in range(from_version + 1, to_version + 1):
-        cur = tables_at(root, v).get(name)
-        if cur is None:
-            if prev is not None:
-                out.append({"version": v, "change": "dropped_table"})
-            prev = cur
-            continue
-        if prev is None:
-            out.append({"version": v, "change": "created_table"})
-            prev = cur
-            continue
-        p_path = prev["path"] if isinstance(prev, dict) else prev
-        c_path = cur["path"] if isinstance(cur, dict) else cur
-        same_lineage = p_path == c_path or (
-            isinstance(cur, dict) and cur.get("rewrite_of") is not None
-        )
-        if same_lineage:
-            # physical names stable: map diffs ARE the schema events
-            ren_p, drop_p = _column_map(prev)
-            ren_c, drop_c = _column_map(cur)
-            for p in set(ren_p) | set(ren_c):
-                if p in drop_c:
-                    continue  # reported as a drop below
-                old_l, new_l = ren_p.get(p, p), ren_c.get(p, p)
-                if old_l != new_l:
-                    out.append(
-                        {"version": v, "change": "rename",
-                         "from": old_l, "to": new_l}
-                    )
-            for p in drop_c:
-                if p not in drop_p:
-                    out.append(
-                        {"version": v, "change": "drop",
-                         "column": ren_p.get(p, p)}
-                    )
-            jc = _json_fields(cur)
-            if jc is not None:
-                jp = _fields(prev)
-                ren_all, _ = _column_map(cur)
-                if jp is not None:
-                    for added in sorted(jc - jp):
-                        out.append(
-                            {"version": v, "change": "add",
-                             "column": ren_all.get(added, added)}
-                        )
-                # type widenings (round 9) — same-name fields whose
-                # recorded type changed; an external replica ALTERs its
-                # column before applying the span's rows
-                tc = _field_types(cur)
-                tp = _field_types(prev)
-                if tc and tp:
-                    for col in sorted(set(tc) & set(tp)):
-                        if tc[col] != tp[col]:
-                            out.append(
-                                {"version": v, "change": "widen",
-                                 "column": ren_all.get(col, col),
-                                 "from": tp[col], "to": tc[col]}
-                            )
-            if p_path != c_path:
-                out.append({"version": v, "change": "rewrite"})
-        else:
-            # fresh physical lineage (CoW merge, materialized mapping,
-            # recreate): logical schema may be unchanged, but the map
-            # comparison is meaningless across it
-            out.append({"version": v, "change": "rewritten"})
-        prev = cur
-    return out
-
-
 def drop_table(root: str, name: str) -> dict:
     """Remove `name` from the store's CURRENT version — an O(1) metadata
     commit.  Past versions still carry it (time travel keeps working;
@@ -1045,7 +862,7 @@ def widen_column_type(
     spark: SparkSession, root: str, name: str, col: str, new_type
 ) -> dict:
     """Widen one column's type WITHOUT a write batch — the pure-metadata
-    ALTER COLUMN TYPE (round 9; the staging-driven form is
+    ALTER COLUMN TYPE (the staging-driven form is
     merge_into_mor(evolve_schema=True) with a wider-typed batch).  Only
     LOSSLESS widenings are accepted (_TYPE_WIDENINGS: int→long,
     float→double, decimal precision growth), so no reader can ever see
@@ -1474,9 +1291,9 @@ def publish_tables(
             # after _history_fields: the new watermark overrides the
             # carried-forward txns map
             **_txn_fields(prev, txn),
-            # stage-to-swap wall time: describe_history surfaces it so a
-            # creeping per-commit fixed cost is self-diagnosing instead
-            # of needing an external bisect
+            # stage-to-swap wall time, carried into the history entry
+            # like every other manifest field: DESCRIBE HISTORY reads
+            # each version's cost from the store itself
             "commit_wall_ms": round(
                 (time.perf_counter() - _t_publish) * 1000, 1
             ),
@@ -1603,8 +1420,8 @@ def _txn_fields(prev: dict, txn: tuple[str, int] | None) -> dict:
 def _spilled_entries(root: str, spill: dict) -> list[dict]:
     # spill files are immutable once a manifest references them, so the
     # stat-keyed parse cache turns every later history walk's read into
-    # a dict lookup (round 14, guide §1.2) — read-only, like every other
-    # consumer of the cached documents
+    # a dict lookup — read-only, like every other consumer of the cached
+    # documents
     from dataintegration_ecomprovider_spark.plans.commit_protocol import (
         _cached_json_doc,
     )
@@ -1684,62 +1501,6 @@ def rollback(root: str, version: int) -> dict:
             **_history_fields(root, manifest),
         }
         return _commit(root, txid, new, based_on=manifest["version"])
-
-
-def clone_table(
-    root: str,
-    name: str,
-    dest: str,
-    dest_root: str | None = None,
-) -> dict:
-    """Shallow clone: commit `dest` as a new table whose manifest entry
-    points at `name`'s CURRENT data directory — zero bytes copied, pure
-    metadata, any table size (the Delta SHALLOW CLONE role).  Key /
-    bucket / partition metadata carries, so the clone merges and scans
-    exactly like the source did.
-
-    Writes are copy-on-write by construction: every merge_into/publish
-    against the clone stages a NEW immutable directory and re-points only
-    the clone's entry, so source and clone diverge without ever touching
-    each other's data — the dev/test-against-production-data pattern at
-    100 TB, where a physical copy is days of I/O.
-
-    Same-root clones stay safe under vacuum (the shared directory is
-    referenced by the live manifest, so vacuum keeps it).  With
-    `dest_root`, the clone lands in ANOTHER store and references the
-    source store's directory by absolute path; vacuuming the SOURCE can
-    then delete data the clone still references — the same documented
-    hazard as Delta's cross-table shallow clones.  Use replicate_table
-    for a self-contained (deep) copy.
-
-    Fails if `dest` already exists (clone creates, it never replaces).
-    Returns the destination store's new manifest."""
-    import copy
-
-    src_root = root
-    dest_root = dest_root or root
-    os.makedirs(dest_root, exist_ok=True)
-    with _manifest_lock(dest_root):
-        src_manifest = current_manifest(src_root)
-        if name not in src_manifest["tables"]:
-            raise KeyError(f"table {name!r} has no committed version under {src_root}")
-        entry = copy.deepcopy(src_manifest["tables"][name])
-        manifest = current_manifest(dest_root)
-        if dest in manifest["tables"]:
-            raise ValueError(
-                f"table {dest!r} already exists under {dest_root}; "
-                "clone creates, it never replaces"
-            )
-        txid = f"clone-{uuid.uuid4().hex[:8]}"
-        new = {
-            "version": manifest["version"] + 1,
-            "txid": txid,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "committed_at_unix": time.time(),
-            "tables": {**manifest["tables"], dest: entry},
-            **_history_fields(dest_root, manifest),
-        }
-        return _commit(dest_root, txid, new, based_on=manifest["version"])
 
 
 READERS_FILE = "_READERS.json"
@@ -2259,8 +2020,8 @@ def merge_into_mor(
     staging carries new columns — the widened schema is recorded on the
     manifest entry, the base is never rewritten (readers null-fill the
     new columns on pre-evolution rows), and compact() folds everything to
-    the new schema.  LOSSLESS TYPE WIDENINGS ride the same metadata path
-    (round 9): staging an int column as long (or float→double, decimal
+    the new schema.  LOSSLESS TYPE WIDENINGS ride the same metadata
+    path: staging an int column as long (or float→double, decimal
     precision growth — _TYPE_WIDENINGS) records the widened type in
     schema_json; readers cast the narrow base and pre-widening deltas up
     at reconstruction, the CDC fast path diffs in the widened type, and
@@ -2274,7 +2035,7 @@ def merge_into_mor(
     versions are immutable, each commit's entry just carries a longer
     delta list.
 
-    PARTIAL-COLUMN updates (round 9, Hudi's partial-update / Delta's
+    PARTIAL-COLUMN updates (Hudi's partial-update / Delta's
     UPDATE-SET-subset trade): `partial_update=True` takes a staging of
     (key columns + the columns the batch SETS) and commits a delta that
     overlays ONLY those columns onto whatever each row's other columns
@@ -2550,7 +2311,7 @@ def _prepare_mor_delta(
         )
     widened: list[str] = []
     if evolve_schema:
-        # metadata TYPE WIDENING (round 9): staging carrying a LOSSLESSLY
+        # metadata TYPE WIDENING: staging carrying a LOSSLESSLY
         # wider type for an existing column (int→long, float→double,
         # decimal precision growth) widens the recorded logical schema in
         # place — readers cast the narrow base/early deltas up at
@@ -2558,8 +2319,8 @@ def _prepare_mor_delta(
         # materializes the wide type, and the CDC fast path diffs in the
         # to-version schema.  At 100 TB this is exactly the rewrite MoR
         # exists to avoid; Delta/Iceberg treat widening as metadata too.
-        # A NON-widening type change still silently conforms to the base
-        # type like before (cast-down), preserving pre-round-9 behavior.
+        # A NON-widening type change conforms to the base type
+        # (cast-down): only a lossless widening may change the schema.
         from pyspark.sql.types import StructField, StructType
 
         staged_types = {f.name: f.dataType for f in staging.schema.fields}
@@ -3027,10 +2788,9 @@ def _bridged_delta_suffix(
     Why this matters at 100 TB: maintain_store compacts NIGHTLY, and
     without the bridge every store_changes stream, replicate_table
     follower and maintained view paid one O(2 × table) full diff per
-    table per maintenance pass, forever (the round-6 verdict's one
-    scale-killer).  Reference analog: the incremental re-run model
-    (/root/reference/src/EcomProvider.cs:25, 937-966) — don't re-read
-    the world to apply a day's changes.  Pure metadata (manifest +
+    table per maintenance pass, forever.  Reference analog: the
+    incremental re-run model (src/EcomProvider.cs:25, 937-966) — don't
+    re-read the world to apply a day's changes.  Pure metadata (manifest +
     history walk, one spill file at most per step), callable from
     executor-side streaming readers."""
     try:
@@ -3296,7 +3056,7 @@ def _data_files(path: str) -> list[str]:
     return out
 
 
-# --- file-level statistics & data skipping (round 4) -----------------------
+# --- file-level statistics & data skipping ---------------------------------
 #
 # The versioned store's answer to Delta/Iceberg data skipping: at publish
 # time, per-file column min/max/null-count statistics are read from the
@@ -3989,8 +3749,8 @@ def _bloom_index_df(base, path: str, columns, params) -> DataFrame:
     O(splits × m/8) packed bytes, not O(rows × k) position ints.  Stage 2
     (applyInPandas per file) ORs the partials.  Nothing larger than the
     index itself ever exists in one place, and the driver never sees a bit
-    position — the round-4 build collected every file's position set to
-    the driver (40×+ the index size; an OOM at 100 TB file counts)."""
+    position (collecting every file's position set to the driver costs
+    40×+ the index size; an OOM at 100 TB file counts)."""
     union = None
     for c in columns:
         m, k = params[c]
@@ -4500,7 +4260,7 @@ def recluster(
     which dimension drifted.
 
     HIVE-PARTITIONED tables recluster WITHIN their partition directories
-    (Delta's ``OPTIMIZE WHERE`` role, round 7): overlap is measured per
+    (Delta's ``OPTIMIZE WHERE`` role): overlap is measured per
     partition, only partitions above the threshold are rewritten
     (sorted / Z-ordered within the partition), untouched partitions'
     files are HARD-LINKED into the new version directory — zero data
@@ -4790,7 +4550,7 @@ def maintain_store(
        ``reader_warnings`` — a live-but-stuck consumer renews its lease
        forever and pins unbounded history, which TTL expiry (built for
        DEAD consumers) never catches.  ``None`` disables the check;
-    7. AUTO-REQUEUE quarantines (round 9): `requeue_quarantine_policy`
+    7. AUTO-REQUEUE quarantines: `requeue_quarantine_policy`
        maps MAIN table names to gates ``{"min_rows": 1,
        "min_age_seconds": 0.0}`` — when ``<name>__quarantine`` holds at
        least `min_rows` rows AND its last commit is at least
@@ -5342,65 +5102,6 @@ def _prune_entry(entry, where: Sequence[tuple]) -> tuple[list[str], int]:
     return kept, total
 
 
-def explain_skipping(
-    root: str, name: str, where: Sequence[tuple]
-) -> list[dict]:
-    """Per-file skip report for a selective scan — the operational
-    "why did/didn't this prune" question, answered from metadata alone
-    (no Spark job): one dict per data file with ``kept`` and, when
-    skipped, which mechanism proved absence (``minmax`` per failing
-    predicate, or ``bloom``).  Use it to decide whether a table needs
-    recluster()/write_bloom_sidecar before burning a 100 TB scan on a
-    predicate the layout can't serve."""
-    manifest = current_manifest(root)
-    if name not in manifest["tables"]:
-        raise KeyError(f"table {name!r} has no committed version under {root}")
-    entry = manifest["tables"][name]
-    where = _phys_where(entry, where)
-    path = entry["path"] if isinstance(entry, dict) else entry
-    entries = _load_stats_entries(path)
-    if entries is None:
-        return [
-            {"file": os.path.relpath(f, path), "kept": True,
-             "reason": "no stats collected"}
-            for f in _data_files(path)
-        ]
-    report = []
-    survivors: dict[str, dict] = {}
-    for e in entries:
-        failing = [list(p) for p in where if not _node_may_match(e, p)]
-        if failing:
-            report.append(
-                {"file": e["file"], "kept": False, "pruned_by": "minmax",
-                 "predicates": failing}
-            )
-        else:
-            survivors[e["file"]] = {"file": e["file"], "kept": True}
-    bloom_path = os.path.join(path, BLOOM_FILE)
-    if survivors and os.path.exists(bloom_path):
-        with open(bloom_path, encoding="utf-8") as fh:
-            bloom = json.load(fh)
-        probe_cols = _bloom_probe_columns(where) & set(bloom["columns"])
-        if probe_cols:
-            bitmaps = {
-                col: _load_bloom_bitmaps(path, bloom, col, set(survivors))
-                for col in probe_cols
-            }
-            for p in where:
-                for rel in list(survivors):
-                    if not _node_bloom_may_match(
-                        p, bloom["columns"], bitmaps, rel
-                    ):
-                        row = survivors.pop(rel)
-                        row.update(
-                            {"kept": False, "pruned_by": "bloom",
-                             "predicates": [list(p)]}
-                        )
-                        report.append(row)
-    report.extend(survivors.values())
-    return sorted(report, key=lambda r: r["file"])
-
-
 def _predicate_column(pred: tuple):
     if _is_composite(pred):
         op = pred[0].lower()
@@ -5697,13 +5398,11 @@ def compact(
     a lexicographic sort_by=[a, b] leaves b's ranges as wide as the
     domain in every file.  Same single range shuffle as sort_by.
 
-    BEHAVIOR CHANGE (round 6): passing sort_by/cluster_by/target_files
-    against a BUCKETED or hive-PARTITIONED table now raises ValueError
-    where earlier releases proceeded and silently ignored the request
-    (the bucket hash / partition directories pin the layout).  Callers
-    that passed target_files against a pinned-layout table must drop
-    the argument; recluster() and maintain_store() pre-check and are
-    unaffected.
+    Passing sort_by/cluster_by/target_files against a BUCKETED or
+    hive-PARTITIONED table raises ValueError instead of silently
+    ignoring the request (the bucket hash / partition directories pin
+    the layout); recluster() and maintain_store() pre-check and never
+    hit it.
 
     The rewrite is row-identical by construction, and the commit records
     that as ``rewrite_of`` provenance on the new entry (see
@@ -5712,8 +5411,8 @@ def compact(
     a full two-version diff.  The provenance claim requires that nothing
     else committed between compact's read and its swap, so the commit is
     compare-and-swap-guarded and the whole rewrite RETRIES from a fresh
-    read when a concurrent writer lands first (previously the rewrite
-    would silently revert the concurrent commit — a lost update); the
+    read when a concurrent writer lands first (an unguarded swap would
+    silently revert the concurrent commit — a lost update); the
     abandoned staging directory is swept by collect_orphans.
 
     `materialize_mapping=True` additionally folds a rename/drop column
@@ -5901,9 +5600,9 @@ def _set_sync_state(root: str, key: str, value) -> None:
 
 def _set_sync_states(root: str, entries: Mapping) -> None:
     """_set_sync_state for several keys in ONE lock window and ONE file
-    rewrite (round 14, guide §1.2): a maintain pass that advances the
-    parent view's watermark plus N companions paid N+1 lock acquisitions
-    and rewrites for one logical update."""
+    rewrite: a maintain pass advancing the parent view's watermark plus
+    N companions is one logical update, so it takes one lock acquisition
+    and one rewrite, not N+1."""
     if not entries:
         return
     with _manifest_lock(root):
@@ -6111,9 +5810,9 @@ def replicate_table(
             # evolve: the span may have widened a column type or added
             # one at the source — the delta arrives in the source's NEW
             # schema, and conforming it DOWN to the narrow replica would
-            # silently corrupt values past the narrow range (round 9:
-            # type widening made this reachable).  The replica follows
-            # the source's schema like every other aspect of the mirror.
+            # silently corrupt values past the narrow range.  The replica
+            # follows the source's schema like every other aspect of the
+            # mirror.
             merge_into_mor(
                 spark, dst_root, name,
                 staging=delta.filter(F.col("change_type") != "delete")
@@ -6560,89 +6259,6 @@ def _violation_labels(
             F.when(~_constraint_condition([spec]), F.lit(label))
         )
     return F.concat_ws(",", *parts)
-
-
-def table_constraints(root: str, name: str) -> list:
-    """The constraint specs recorded for `name` (empty if none)."""
-    entry = current_manifest(root)["tables"].get(name)
-    if isinstance(entry, dict):
-        return [list(s) for s in entry.get("constraints", [])]
-    return []
-
-
-def replicate_store(
-    spark: SparkSession,
-    src_root: str,
-    dst_root: str,
-    tables: Sequence[str] | None = None,
-    case_insensitive: bool = False,
-) -> dict:
-    """Replicate every table (or the named subset) of a store:
-    replicate_table per table, each seeding or delta-syncing
-    independently.  Returns {table: result}.  Tables without recorded
-    keys seed fine but fail on the first delta sync — declare keys at
-    publish time (table_keys=) for incremental replication."""
-    manifest = current_manifest(src_root)
-    names = list(tables) if tables is not None else sorted(manifest["tables"])
-    results = {}
-    for name in names:
-        results[name] = replicate_table(
-            spark, src_root, dst_root, name, case_insensitive=case_insensitive
-        )
-    return results
-
-
-def describe_history(root: str) -> list[dict]:
-    """The store's commit log as data (Delta DESCRIBE HISTORY role):
-    one dict per committed version, oldest first — version, txid,
-    commit timestamps, tables present, and which tables CHANGED relative
-    to the previous version (entry identity, pure metadata — no Spark
-    job, no file listing)."""
-    manifest = current_manifest(root)
-    if manifest["version"] == 0:
-        return []
-    snapshots = [
-        {
-            "version": h["version"],
-            "txid": h.get("txid"),
-            "committed_at_unix": h.get("committed_at_unix"),
-            "commit_wall_ms": h.get("commit_wall_ms"),
-            "tables": h["tables"],
-        }
-        for h in _all_history(root, manifest)
-    ] + [
-        {
-            "version": manifest["version"],
-            "txid": manifest.get("txid"),
-            "committed_at_unix": manifest.get("committed_at_unix"),
-            "commit_wall_ms": manifest.get("commit_wall_ms"),
-            "tables": manifest["tables"],
-        }
-    ]
-    out = []
-    prev_tables: dict = {}
-    for snap in snapshots:
-        def _path(e):
-            return e["path"] if isinstance(e, dict) else e
-
-        changed = sorted(
-            name
-            for name, e in snap["tables"].items()
-            if name not in prev_tables or _path(prev_tables[name]) != _path(e)
-        )
-        out.append({
-            "version": snap["version"],
-            "txid": snap["txid"],
-            "committed_at_unix": snap["committed_at_unix"],
-            # stage-to-swap wall time the commit path stamped (None on
-            # versions predating the metric or from paths that skip it):
-            # per-commit cost drift shows up in the history itself
-            "commit_wall_ms": snap.get("commit_wall_ms"),
-            "tables": sorted(snap["tables"]),
-            "changed": changed,
-        })
-        prev_tables = snap["tables"]
-    return out
 
 
 def requeue_quarantine(spark: SparkSession, root: str, name: str) -> dict:

@@ -87,130 +87,6 @@ def merge_each_batch(
     return writer.start()
 
 
-def stream_dedup_into_store(
-    stream: DataFrame,
-    root: str,
-    checkpoint_dir: str,
-    corpus_table: str = "corpus",
-    sigs_table: str = "minhash_sigs",
-    bands_table: str = "minhash_bands",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    available_now: bool = True,
-    mor: bool = False,
-    exactly_once_app: str | None = None,
-) -> StreamingQuery:
-    """Streaming ingest dedup: each micro-batch of documents is deduped
-    against the corpus's persistent MinHash signature index
-    (llm/incremental.py — O(batch) work, no corpus text re-read), then the
-    kept docs AND the index growth publish as ONE atomic version of all
-    three tables — a crash between batches never leaves the corpus and its
-    index out of sync.  The first batch seeds the store.
-
-    Within-batch duplicates keep their min-id representative (exact) /
-    LSH-candidate representative (near) via the batch-side operators
-    before the index match, so a batch that self-duplicates doesn't seed
-    the corpus with its own copies.
-
-    Scale note: the default publish is copy-on-write per version — the
-    corpus table rewrite is the versioned store's durability cost.
-    `mor=True` switches post-seed batches to ONE multi-table
-    merge-on-read commit (publish.merge_many_mor): the corpus, signature
-    and band tables take O(|batch|) delta appends in a single atomic
-    version — per-batch cost stops scaling with the accumulated corpus,
-    which is what a 100 TB ingest loop needs; compact() folds the logs.
-    `exactly_once_app` stamps each batch's commit with a txn watermark
-    (see stream_into_store) so checkpoint replays are manifest no-ops."""
-    from dataintegration_ecomprovider_spark.llm import cluster as llm_cluster
-    from dataintegration_ecomprovider_spark.llm import dedup as llm_dedup
-    from dataintegration_ecomprovider_spark.llm import incremental as llm_inc
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        if not batch.columns:
-            return
-        spark = batch.sparkSession
-        # within-batch dedup first: exact (hash) + LSH near-dup clusters
-        batch = llm_dedup.exact_dedup(batch, text_col, id_col)
-        pairs = llm_dedup.minhash_candidates(
-            batch, id_col, text_col, num_hashes, bands, shingle_n
-        )
-        verified = llm_dedup.jaccard_pairs(
-            batch, pairs, id_col, text_col, shingle_n
-        ).filter(F.col("jaccard") >= threshold)
-        clustered = llm_cluster.dedup_clusters(batch.select(id_col), verified)
-        batch = batch.join(
-            clustered.filter(F.col("is_canonical")).select(id_col), id_col, "left_semi"
-        )
-
-        txn = (exactly_once_app, batch_id) if exactly_once_app else None
-        have_index = bool(
-            publish.current_manifest(root)["tables"].get(sigs_table)
-        )
-        if have_index:
-            step = llm_inc.dedup_batch_against_index(
-                batch,
-                publish.read_table(spark, root, sigs_table),
-                publish.read_table(spark, root, bands_table),
-                id_col, text_col, num_hashes, bands, shingle_n, threshold,
-            )
-            if mor:
-                # one ATOMIC multi-table delta commit: O(|batch|) appends,
-                # never a corpus rewrite
-                publish.merge_many_mor(
-                    spark, root,
-                    {
-                        corpus_table: {"staging": step["kept"],
-                                       "keys": [id_col]},
-                        sigs_table: {"staging": step["sigs"],
-                                     "keys": ["id"]},
-                        bands_table: {"staging": step["bands"],
-                                      "keys": ["id", "band"]},
-                    },
-                    txn=txn,
-                )
-                from dataintegration_ecomprovider_spark import runtime
-
-                runtime.release_caches(spark)
-                return
-            corpus = publish.read_table(spark, root, corpus_table).unionByName(
-                step["kept"]
-            )
-            sigs = publish.read_table(spark, root, sigs_table).unionByName(step["sigs"])
-            band_rows = publish.read_table(spark, root, bands_table).unionByName(
-                step["bands"]
-            )
-        else:
-            step = llm_inc.dedup_batch_against_index(
-                batch, None, None,
-                id_col, text_col, num_hashes, bands, shingle_n, threshold,
-            )
-            corpus, sigs, band_rows = step["kept"], step["sigs"], step["bands"]
-        publish.publish_tables(
-            spark,
-            {corpus_table: corpus, sigs_table: sigs, bands_table: band_rows},
-            root,
-            table_keys={corpus_table: [id_col], sigs_table: ["id"]},
-            txn=txn,
-        )
-        from dataintegration_ecomprovider_spark import runtime
-
-        runtime.release_caches(spark)
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_into_store(
     stream: DataFrame,
     root: str,

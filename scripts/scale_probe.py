@@ -686,7 +686,7 @@ def main() -> None:
             f"residual IVFPQ recall regressed: {recalls}"
         )
 
-    store_probes = ("merge_cow", "merge_mor", "schema_changes")
+    store_probes = ("merge_cow", "merge_mor")
     if wanted and not any(any(w in n for n in store_probes) for w in wanted):
         print(json.dumps(
             {"probe": "10x_sf0.1", "copies": COPIES, "queries": timings,
@@ -719,23 +719,6 @@ def main() -> None:
         timings[label + "_read"] = round(time.perf_counter() - t0, 2)
         shutil.rmtree(root, ignore_errors=True)
     staging.unpersist()
-
-    # schema_changes is a pure manifest-history walk (no Spark job):
-    # probe its metadata cost over a 60-commit span
-    root = tempfile.mkdtemp(prefix="probe_schemaev_")
-    publish.publish_tables(
-        spark,
-        {"t": spark.range(100).select(
-            F.col("id").alias("k"), F.col("id").alias("c0"))},
-        root, table_keys={"t": ["k"]},
-    )
-    for i in range(30):
-        publish.rename_column(spark, root, "t", f"c{i}", f"c{i + 1}")
-    t0 = time.perf_counter()
-    n_events = len(publish.schema_changes(root, "t", 1, 31))
-    timings["schema_changes_walk_30"] = round(time.perf_counter() - t0, 3)
-    assert n_events == 30, n_events
-    shutil.rmtree(root, ignore_errors=True)
 
     print(json.dumps({"probe": "10x_sf0.1", "copies": COPIES,
                       "queries": timings, "ann_recall": recalls}))

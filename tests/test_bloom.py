@@ -217,32 +217,29 @@ def test_bloom_build_is_executor_side_and_metadata_sharded(spark, tmp_path):
 
 
 def test_explain_skipping_reports_mechanism_per_file(spark, tmp_path):
-    """The metadata-only skip report agrees with prune_files and names
-    WHICH mechanism (min/max range vs Bloom) excluded each file."""
+    """prune_files attributes each skipped file to one mechanism: a file
+    min/max keeps but the Bloom sidecar drops was proved absent by Bloom;
+    with no sidecar on the table, every skip is the min/max range's."""
     root = _seed(spark, tmp_path, n=2000)
-    publish.write_bloom_sidecar(spark, root, "t", ["uid"], fpp=0.001)
 
     # in-domain point lookup: every hash-scattered file's [min, max]
     # covers it (min/max prunes nothing), so every skip is Bloom's
     where = [("uid", "=", 777)]
-    report = publish.explain_skipping(root, "t", where)
-    kept, total = publish.prune_files(root, "t", where)
-    assert len(report) == total
-    assert 1 <= sum(r["kept"] for r in report) == len(kept) < total
-    assert all(
-        r["kept"] or r["pruned_by"] == "bloom" for r in report
-    )
+    minmax_kept, total = publish.prune_files(root, "t", where)
+    assert len(minmax_kept) == total
+    publish.write_bloom_sidecar(spark, root, "t", ["uid"], fpp=0.001)
+    kept, total_with_bloom = publish.prune_files(root, "t", where)
+    assert total_with_bloom == total
+    assert 1 <= len(kept) < total
+    assert set(kept) <= set(minmax_kept)
 
     # after a sorted rewrite the range itself prunes
     publish.recluster(spark, root, "t", ["uid"], max_overlap=1.5,
                       target_files=8)
-    where = [("uid", "<", 200)]
-    report = publish.explain_skipping(root, "t", where)
-    kept, total = publish.prune_files(root, "t", where)
-    assert sum(r["kept"] for r in report) == len(kept) < total
-    assert any(
-        not r["kept"] and r["pruned_by"] == "minmax" for r in report
-    )
+    path = publish.current_manifest(root)["tables"]["t"]["path"]
+    assert not os.path.exists(os.path.join(path, publish.BLOOM_FILE))
+    kept, total = publish.prune_files(root, "t", [("uid", "<", 200)])
+    assert len(kept) < total
 
 
 def test_refresh_bloom_covers_appended_delta_files(spark, tmp_path):

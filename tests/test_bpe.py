@@ -166,75 +166,6 @@ def test_registry_queries_match_oracle(spark, oracle):
         assert_frames_match(spdf, odf, name)
 
 
-def test_incremental_training_is_equivalent(spark):
-    """Delta-maintained pair counts must reproduce full-recount training
-    exactly: same merges, same tie-breaks, same early stop — on the
-    Sennrich corpus, a degenerate repeat-heavy corpus, and the fixture
-    corpus."""
-    for freqs, n in ((SENNRICH, 8), ({"aaaa": 3, "ab": 1}, 6)):
-        full = bpe.train(_words_df(spark, freqs), num_merges=n)
-        inc = bpe.train_incremental(
-            _words_df(spark, freqs), num_merges=n, checkpoint_every=2
-        )
-        assert inc == full
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    words = bpe.word_frequencies(docs)
-    assert bpe.train_incremental(words, num_merges=10) == \
-        bpe.train(words, num_merges=10)
-
-
-def test_persisted_tokenizer_and_cdc_token_counts(spark, tmp_path):
-    """Tokenizer-as-a-table: train → publish merges → CDC-maintained
-    per-doc token counts (inserts/updates re-encode only changed docs,
-    deletes retract); the merge table time-travels for reproducible
-    accounting."""
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    root = str(tmp_path / "tok_store")
-    docs = spark.createDataFrame(
-        [(1, "low low lower"), (2, "newest widest"), (3, "aaaa a")],
-        "doc_id bigint, text string",
-    )
-    publish.publish_tables(
-        spark, {"documents": docs}, root, table_keys={"documents": ["doc_id"]}
-    )
-    merges = bpe.train(bpe.word_frequencies(docs), num_merges=6)
-    bpe.publish_bpe_merges(spark, root, merges)
-    assert bpe.read_bpe_merges(spark, root) == merges
-
-    rep = bpe.maintain_token_counts(spark, root, "documents", "doc_tokens")
-    assert rep["mode"] == "seed"
-
-    def counts():
-        return {
-            r["doc_id"]: r["n_tokens"]
-            for r in publish.read_table(spark, root, "doc_tokens").collect()
-        }
-
-    def expected(txt):
-        return sum(len(ref_encode(w, merges)) for w in txt.lower().split())
-
-    assert counts() == {1: expected("low low lower"),
-                        2: expected("newest widest"),
-                        3: expected("aaaa a")}
-    # delta: update doc 1, delete doc 2, insert doc 4
-    publish.merge_into_mor(
-        spark, root, "documents",
-        spark.createDataFrame(
-            [(1, "widest low"), (4, "newest newest")],
-            "doc_id bigint, text string",
-        ),
-        deletes=spark.createDataFrame([(2,)], "doc_id bigint"),
-    )
-    rep = bpe.maintain_token_counts(spark, root, "documents", "doc_tokens")
-    assert rep["mode"] == "delta"
-    assert counts() == {1: expected("widest low"),
-                        3: expected("aaaa a"),
-                        4: expected("newest newest")}
-    # the merge table itself time-travels (pinned accounting)
-    assert bpe.read_bpe_merges(spark, root, version=2) == merges
-
-
 # --- vocabulary + token ids (round 11) --------------------------------------
 def _tiny_words(spark):
     return spark.createDataFrame(
@@ -340,33 +271,6 @@ def test_dropped_word_count_surfaces_the_contract(spark):
     assert got[3][0] in (0, None) or got[3][0] == 0
 
 
-def test_publish_tokenizer_is_one_atomic_commit(spark, tmp_path):
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    root = str(tmp_path / "tok_store")
-    docs = spark.createDataFrame(
-        [(1, "low lower"), (2, "newest widest")], "doc_id bigint, text string"
-    )
-    publish.publish_tables(
-        spark, {"documents": docs}, root, table_keys={"documents": ["doc_id"]}
-    )
-    words = bpe.word_frequencies(publish.read_table(spark, root, "documents"))
-    merges = bpe.train(words, num_merges=3, strict=True)
-    voc = bpe.vocab(words, merges)
-    v_before = publish.current_manifest(root)["version"]
-    bpe.publish_bpe_tokenizer(spark, root, merges, voc)
-    man = publish.current_manifest(root)
-    assert man["version"] == v_before + 1  # merges + vocab in ONE commit
-    assert {"bpe_merges", "bpe_vocab"} <= set(man["tables"])
-    stored = {
-        r["token_id"]: (r["token"], r["kind"])
-        for r in publish.read_table(spark, root, "bpe_vocab").collect()
-    }
-    assert stored == {
-        v["token_id"]: (v["token"], v["kind"]) for v in voc
-    }
-
-
 def test_encode_ids_registry_query_matches_oracle(spark, oracle):
     from dataintegration_ecomprovider_spark.plans.registry import all_queries
 
@@ -376,27 +280,6 @@ def test_encode_ids_registry_query_matches_oracle(spark, oracle):
         oracle.execute(qd.oracle).fetchdf(),
         "llm_bpe_encode_ids",
     )
-
-
-def test_maintained_token_counts_carry_dropped_words(spark, tmp_path):
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    root = str(tmp_path / "tokdrop_store")
-    docs = spark.createDataFrame(
-        [(1, f"ok {SEP}gone ok"), (2, "clean text")],
-        "doc_id bigint, text string",
-    )
-    publish.publish_tables(
-        spark, {"documents": docs}, root, table_keys={"documents": ["doc_id"]}
-    )
-    words = bpe.word_frequencies(publish.read_table(spark, root, "documents"))
-    bpe.publish_bpe_merges(spark, root, bpe.train(words, num_merges=2))
-    bpe.maintain_token_counts(spark, root, "documents", "doc_tokens")
-    got = {
-        r["doc_id"]: (r["n_words"], r["n_dropped_words"])
-        for r in publish.read_table(spark, root, "doc_tokens").collect()
-    }
-    assert got == {1: (2, 1), 2: (2, 0)}
 
 
 # --- byte-fallback encoding (round 11) ---------------------------------------
@@ -577,64 +460,6 @@ def test_token_count_byte_fallback_matches_materialized_tokens(spark):
         bpe.token_count(F.col("text"), merges).alias("n")
     ).collect()[0]["n"]
     assert got[1][0] > drop
-
-
-def test_read_bpe_vocab_round_trips_at_pinned_version(spark, tmp_path):
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    root = str(tmp_path / "vocab_store")
-    docs = spark.createDataFrame(
-        [(1, "low lower"), (2, "newest widest")], "doc_id bigint, text string"
-    )
-    publish.publish_tables(
-        spark, {"documents": docs}, root, table_keys={"documents": ["doc_id"]}
-    )
-    words = bpe.word_frequencies(publish.read_table(spark, root, "documents"))
-    merges = bpe.train(words, num_merges=2, strict=True)
-    v1 = bpe.vocab(words, merges)
-    bpe.publish_bpe_tokenizer(spark, root, merges, v1)
-    pinned = publish.current_manifest(root)["version"]
-    # retrain with more merges and republish — the pinned read survives
-    merges2 = bpe.train(words, num_merges=4, strict=True)
-    bpe.publish_bpe_tokenizer(spark, root, merges2, bpe.vocab(words, merges2))
-    assert bpe.read_bpe_vocab(spark, root, version=pinned) == v1
-    assert bpe.read_bpe_vocab(spark, root) == bpe.vocab(words, merges2)
-    assert bpe.read_bpe_merges(spark, root, version=pinned) == merges
-
-
-def test_maintained_token_counts_with_byte_fallback(spark, tmp_path):
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    root = str(tmp_path / "tokfb_store")
-    docs = spark.createDataFrame(
-        [(1, f"ok {SEP}ab ok"), (2, "clean text")],
-        "doc_id bigint, text string",
-    )
-    publish.publish_tables(
-        spark, {"documents": docs}, root, table_keys={"documents": ["doc_id"]}
-    )
-    words = bpe.word_frequencies(publish.read_table(spark, root, "documents"))
-    bpe.publish_bpe_merges(spark, root, bpe.train(words, num_merges=2))
-    bpe.maintain_token_counts(
-        spark, root, "documents", "doc_tokens", byte_fallback=True
-    )
-    got = {
-        r["doc_id"]: (r["n_words"], r["n_tokens"], r["n_dropped_words"])
-        for r in publish.read_table(spark, root, "doc_tokens").collect()
-    }
-    # doc 1: 2 clean words + the 3 fallback bytes of \x1f a b in n_tokens
-    drop_only = {
-        r["doc_id"]: r["n_tokens"]
-        for r in publish.read_table(spark, root, "documents").select(
-            "doc_id",
-            bpe.token_count(
-                F.col("text"),
-                bpe.read_bpe_merges(spark, root),
-            ).alias("n_tokens"),
-        ).collect()
-    }
-    assert got[1][2] == 1 and got[1][1] == drop_only[1] + 3
-    assert got[2] == (2, drop_only[2], 0)
 
 
 # --- replace-chain ceiling + greedy scale path (round 12) --------------------

@@ -66,8 +66,6 @@ def test_renamed_predicate_keeps_file_skipping(spark, tmp_path):
     out = publish.scan_table(spark, root, "t", [("key", "<", 5)])
     assert out.columns == ["key", "v", "s"]
     assert {r["key"] for r in out.collect()} == set(range(5))
-    rep = publish.explain_skipping(root, "t", [("key", "<", 5)])
-    assert any(not e["kept"] for e in rep)  # skip report translates too
 
 
 def test_mor_merge_and_cdc_in_renamed_names(spark, tmp_path):
@@ -482,36 +480,6 @@ def test_mapping_lifecycle_matches_model(spark, tmp_path_factory, ops):
     assert got == model
 
 
-def test_schema_changes_feed(spark, tmp_path):
-    """schema_changes: the schema side of CDC — renames, drops, evolved
-    columns, rewrites and recreates enumerate per version, with NO false
-    rename events across a materialized mapping (the trap: after the
-    purge the map is empty but the logical schema never moved)."""
-    root = _store(spark, tmp_path)                      # v1 create
-    publish.rename_column(spark, root, "t", "v", "value")   # v2
-    publish.merge_into_mor(                                 # v3: add col
-        spark, root, "t",
-        spark.createDataFrame([(1, 5, "x", 9)], "k long, value long, s string, extra long"),
-        evolve_schema=True,
-    )
-    publish.drop_column(spark, root, "t", "s")              # v4
-    publish.compact(spark, root, "t")                       # v5 rewrite
-    publish.compact(spark, root, "t", materialize_mapping=True)  # v6
-    publish.drop_table(root, "t")                           # v7
-
-    ev = publish.schema_changes(root, "t", 1, 7)
-    by_v = {e["version"]: e for e in ev}
-    assert by_v[2] == {"version": 2, "change": "rename", "from": "v", "to": "value"}
-    assert by_v[3] == {"version": 3, "change": "add", "column": "extra"}
-    assert by_v[4] == {"version": 4, "change": "drop", "column": "s"}
-    assert by_v[5]["change"] == "rewrite"
-    assert by_v[6]["change"] == "rewritten"   # NOT a spurious rename
-    assert by_v[7]["change"] == "dropped_table"
-    assert len(ev) == 6
-    # an untouched span reports nothing
-    assert publish.schema_changes(root, "t", 1, 1) == []
-
-
 def test_replicate_mirrors_column_swap_in_one_span(spark, tmp_path):
     """A source that SWAPPED two column names within one sync span (via
     its own temp name: v→tmp, s→v, tmp→s) must mirror onto the replica —
@@ -619,24 +587,3 @@ def test_drop_column_refuses_bucket_source_column(spark, tmp_path):
     publish.drop_column(spark, root, "t", "v")  # non-layout columns still drop
 
 
-def test_schema_changes_no_spurious_partition_adds(spark, tmp_path):
-    """Hive partition columns live in directory names, not parquet
-    footers; the first version that records schema_json (first
-    evolve_schema merge) must NOT report them as newly-added columns."""
-    root = str(tmp_path / "store")
-    df = spark.range(12).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 3).alias("part"),
-        (F.col("id") * 2).alias("v"),
-    )
-    publish.publish_tables(
-        spark, {"t": df}, root,
-        table_keys={"t": ["k"]}, partition_by={"t": ["part"]},
-    )                                                       # v1
-    publish.merge_into_mor(                                 # v2: add col
-        spark, root, "t",
-        spark.createDataFrame([(1, 0, 2, 9)], "k long, part long, v long, extra long"),
-        evolve_schema=True,
-    )
-    ev = publish.schema_changes(root, "t", 1, 2)
-    assert ev == [{"version": 2, "change": "add", "column": "extra"}]

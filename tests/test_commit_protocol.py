@@ -612,19 +612,54 @@ def test_protocol_for_caches_default_miss(tmp_path):
     assert isinstance(cp.protocol_for(root), cp.ConditionalCommitProtocol)
 
 
+def _history_wall_ms(spark, root: str) -> dict:
+    """{version: commit_wall_ms} as DESCRIBE HISTORY reports it."""
+    from dataintegration_ecomprovider_spark.plans.store_sql import store_sql
+
+    return {
+        r["version"]: r["commit_wall_ms"]
+        for r in store_sql(spark, root).sql("DESCRIBE HISTORY").collect()
+    }
+
+
 def test_commit_wall_ms_recorded_and_surfaced(spark, tmp_path):
     """Every hot commit path stamps stage-to-swap wall time into the
-    manifest, _history_fields carries it across versions, and
-    describe_history surfaces it — per-commit cost drift is readable
-    from the store itself."""
+    manifest, _history_fields carries it across versions, and DESCRIBE
+    HISTORY surfaces it — per-commit cost drift is readable from the
+    store itself."""
     root = str(tmp_path / "store")
     df = spark.range(50).selectExpr("id", "id * 2 AS v")
     publish.publish_tables(spark, {"t": df}, root, table_keys={"t": ["id"]})
     publish.merge_into_mor(spark, root, "t", df.limit(10))
-    hist = publish.describe_history(root)
-    assert len(hist) == 2
-    for h in hist:
-        assert h["commit_wall_ms"] is not None and h["commit_wall_ms"] > 0
+    hist = _history_wall_ms(spark, root)
+    assert sorted(hist) == [1, 2]
+    for ms in hist.values():
+        assert ms is not None and ms > 0
+
+
+def test_describe_history_keeps_commit_wall_ms_across_a_spill(
+    spark, tmp_path, monkeypatch
+):
+    """commit_wall_ms survives the move of old history entries into
+    spilled checkpoint files: DESCRIBE HISTORY reports a positive value
+    for every version each hot commit path wrote, spilled ones too."""
+    monkeypatch.setattr(publish, "HISTORY_INLINE_MAX", 2)
+    root = str(tmp_path / "store")
+    df = spark.range(20).selectExpr("id", "id * 2 AS v")
+    publish.publish_tables(spark, {"t": df}, root, table_keys={"t": ["id"]})
+    for i in range(2):
+        publish.publish_tables(spark, {"t": df.limit(15 - i)}, root)
+        publish.merge_into_mor(spark, root, "t", df.limit(5 + i))
+        publish.merge_many_mor(
+            spark, root, {"t": {"staging": df.limit(3 + i), "keys": ["id"]}}
+        )
+    manifest = publish.current_manifest(root)
+    assert manifest.get("history_spills"), "expected a history spill"
+    hist = _history_wall_ms(spark, root)
+    assert sorted(hist) == list(range(1, manifest["version"] + 1))
+    assert manifest["version"] == 7
+    for version, ms in hist.items():
+        assert ms is not None and ms > 0, version
 
 
 def test_cached_reads_survive_eviction_racing_a_vanished_document(tmp_path):

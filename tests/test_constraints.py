@@ -21,6 +21,11 @@ def _t(spark, n=10):
     )
 
 
+def _constraints(root: str) -> list:
+    """The constraint specs the current manifest records for `t`."""
+    return publish.current_manifest(root)["tables"]["t"].get("constraints", [])
+
+
 def _store(spark, tmp_path):
     root = str(tmp_path / "store")
     publish.publish_tables(
@@ -37,7 +42,7 @@ def _store(spark, tmp_path):
 
 def test_publish_enforces_persisted_constraints(spark, tmp_path):
     root = _store(spark, tmp_path)
-    assert publish.table_constraints(root, "t")[0] == ["not_null", "v"]
+    assert _constraints(root)[0] == ["not_null", "v"]
     v_before = publish.current_manifest(root)["version"]
     # a violating full publish aborts; nothing becomes visible
     bad = _t(spark).withColumn(
@@ -48,7 +53,7 @@ def test_publish_enforces_persisted_constraints(spark, tmp_path):
     assert publish.current_manifest(root)["version"] == v_before
     # a clean publish carries the constraints onto the new entry
     publish.publish_tables(spark, {"t": _t(spark, 12)}, root)
-    assert publish.table_constraints(root, "t") != []
+    assert _constraints(root) != []
 
 
 def test_mor_merge_enforces_row_local_constraints(spark, tmp_path):
@@ -79,7 +84,7 @@ def test_mor_merge_enforces_row_local_constraints(spark, tmp_path):
 def test_constraints_follow_renames_and_block_drops(spark, tmp_path):
     root = _store(spark, tmp_path)
     publish.rename_column(spark, root, "t", "v", "value")
-    specs = publish.table_constraints(root, "t")
+    specs = _constraints(root)
     assert ["not_null", "value"] in specs and ["range", "value", 0, 10000] in specs
     # enforcement works through the column map (logical name in staging,
     # physical name in the files)
@@ -199,7 +204,7 @@ def test_quarantine_uses_logical_names_after_rename(spark, tmp_path):
     )
     publish.rename_column(spark, root, "t", "v", "value")
     # constraints followed the rename
-    assert publish.table_constraints(root, "t") == [["not_null", "value"]]
+    assert _constraints(root) == [["not_null", "value"]]
     publish.merge_into_mor(
         spark, root, "t",
         spark.createDataFrame(

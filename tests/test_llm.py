@@ -152,11 +152,6 @@ def test_multimodal_frame_sample_and_resize(spark):
             start = r.frame_index * 64
             assert payloads[doc_id][start:start + r.frame_len] == bytes(r.frame)
 
-    resized = multimodal.resize_payload(media, target_bytes=128)
-    for r in resized.collect():
-        assert r.byte_len == 128
-        assert len(bytes(r.payload)) == 128
-
     import pytest as _pytest
     with _pytest.raises(NotImplementedError):
         multimodal.decode_stub(b"\x00", "image/png")

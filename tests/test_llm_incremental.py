@@ -218,52 +218,6 @@ def test_ivf_index_store_roundtrip_matches_inline(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_stream_dedup_into_store(spark, tmp_path):
-    """Streaming ingest dedup end-to-end: two micro-batches with exact,
-    near and within-batch duplicates; the corpus + signature index publish
-    atomically per batch and end holding exactly the novel documents."""
-    from dataintegration_ecomprovider_spark.streaming.incremental import (
-        file_stream, stream_dedup_into_store,
-    )
-
-    root = str(tmp_path / "store")
-    src = str(tmp_path / "incoming")
-    ckpt = str(tmp_path / "ckpt")
-
-    b1 = _docs(spark, [
-        (1, TEXTS["alpha"]),
-        (2, TEXTS["beta"]),
-        (3, TEXTS["alpha"]),          # within-batch exact dup of 1
-    ])
-    b2 = _docs(spark, [
-        (10, TEXTS["alpha"]),         # cross-batch exact dup of 1
-        (11, TEXTS["alpha2"]),        # cross-batch near dup of 1
-        (12, TEXTS["gamma"]),         # novel
-    ])
-    b1.coalesce(1).write.mode("append").parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-
-    q = stream_dedup_into_store(
-        file_stream(spark, src, b1.schema, max_files_per_trigger=1),
-        root, ckpt,
-    )
-    q.awaitTermination(180)
-
-    corpus_ids = {
-        r.doc_id for r in publish.read_table(spark, root, "corpus").collect()
-    }
-    assert corpus_ids == {1, 2, 12}
-    idx_ids = {
-        r.id for r in publish.read_table(spark, root, "minhash_sigs").collect()
-    }
-    assert idx_ids == corpus_ids
-    # one atomic version per micro-batch, all three tables in each
-    m = publish.current_manifest(root)
-    assert m["version"] == 2
-    assert {"corpus", "minhash_sigs", "minhash_bands"} <= set(m["tables"])
-    assert publish.table_keys(root, "corpus") == ["doc_id"]
-
-
 def test_ivf_sq8_index_roundtrip_recall(spark, tmp_path):
     """IVF-SQ8: a quantized index publishes/reads back through the store
     (int codes survive parquet), cells carry integral codes, and serving
@@ -1207,62 +1161,6 @@ def test_declared_bm25_and_decon_stacks_refresh_in_order(spark, tmp_path):
         ["benchmark", "eval"], k=2,
     ).collect()
     assert {r["doc_id"] for r in top} == {2, 3}
-
-
-def test_stream_dedup_into_store_mor_multi_table(spark, tmp_path):
-    """mor=True: post-seed batches commit corpus + both index tables as
-    ONE multi-table MoR version (O(batch) appends, no corpus rewrite),
-    with the same dedup outcome as the CoW path; the exactly-once app
-    makes a fresh-checkpoint replay a store no-op."""
-    from dataintegration_ecomprovider_spark.streaming.incremental import (
-        file_stream, stream_dedup_into_store,
-    )
-
-    root = str(tmp_path / "store")
-    src = str(tmp_path / "incoming")
-
-    b1 = _docs(spark, [
-        (1, TEXTS["alpha"]),
-        (2, TEXTS["beta"]),
-        (3, TEXTS["alpha"]),          # within-batch exact dup of 1
-    ])
-    b2 = _docs(spark, [
-        (10, TEXTS["alpha"]),         # cross-batch exact dup of 1
-        (11, TEXTS["alpha2"]),        # cross-batch near dup of 1
-        (12, TEXTS["gamma"]),         # novel
-    ])
-    b1.coalesce(1).write.mode("append").parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-
-    def run(tag):
-        q = stream_dedup_into_store(
-            file_stream(spark, src, b1.schema, max_files_per_trigger=1),
-            root, str(tmp_path / f"ckpt_{tag}"),
-            mor=True, exactly_once_app="ingest",
-        )
-        q.awaitTermination(180)
-
-    run("a")
-    m = publish.current_manifest(root)
-    assert m["version"] == 2  # seed + ONE atomic MoR commit
-    # the MoR commit appended one delta to each of the three tables
-    for t in ("corpus", "minhash_sigs", "minhash_bands"):
-        assert len(m["tables"][t].get("deltas", [])) == 1, t
-    corpus_ids = {
-        r.doc_id for r in publish.read_table(spark, root, "corpus").collect()
-    }
-    assert corpus_ids == {1, 2, 12}
-    assert {
-        r.id for r in publish.read_table(spark, root, "minhash_sigs").collect()
-    } == corpus_ids
-
-    # catastrophic replay with a FRESH checkpoint: the txn watermark
-    # absorbs both batches (batch 0 seeds via publish txn, batch 1 MoR)
-    run("b")
-    assert publish.current_manifest(root)["version"] == 2
-    assert {
-        r.doc_id for r in publish.read_table(spark, root, "corpus").collect()
-    } == {1, 2, 12}
 
 
 def test_maintain_pq_codes_follows_corpus(spark, tmp_path):

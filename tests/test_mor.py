@@ -860,8 +860,7 @@ def test_widen_column_type_metadata_api(spark, tmp_path):
     """Round 9: publish.widen_column_type — ALTER COLUMN TYPE as a pure
     manifest commit (no staging batch, no Spark job on data): readers
     cast up immediately, a subsequent WIDE MoR batch needs no evolve
-    flag, schema_changes emits a 'widen' event, and lossy changes
-    refuse."""
+    flag, and lossy changes refuse."""
     root = str(tmp_path / "store")
     base = spark.createDataFrame([(1, 10), (2, 20)], "id bigint, cnt int")
     publish.publish_tables(spark, {"t": base}, root, table_keys={"t": ["id"]})
@@ -876,10 +875,6 @@ def test_widen_column_type_metadata_api(spark, tmp_path):
         spark.createDataFrame([(3, 7_000_000_000)], "id bigint, cnt long"),
     )
     assert (3, 7_000_000_000) in _rows(publish.read_table(spark, root, "t"))
-    # schema CDC reports the widening to external replicas
-    events = publish.schema_changes(root, "t", v1)
-    assert {"version": v1 + 1, "change": "widen", "column": "cnt",
-            "from": "int", "to": "bigint"} in events
     # time travel keeps the narrow type
     assert dict(publish.read_table_at(spark, root, "t", v1).dtypes)["cnt"] \
         == "int"

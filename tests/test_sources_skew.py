@@ -1,14 +1,10 @@
-"""Sources package (file round-trips, JDBC option construction) and the
-salted two-phase aggregation helpers (equality vs the unsalted forms)."""
+"""Sources package: file round-trips and JDBC option construction."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from dataintegration_ecomprovider_spark.catalog import Catalog
-from dataintegration_ecomprovider_spark.operators.skew import salted_sorted_collect, salted_top1
-from dataintegration_ecomprovider_spark.operators.string_agg import collect_ordered
 from dataintegration_ecomprovider_spark.sources.readers import (
     CsvSource, JdbcSource, JsonSource, ParquetSource,
 )
@@ -56,66 +52,6 @@ def test_jdbc_source_options():
 
     with pytest.raises(ValueError):
         JdbcSource(url="u", table="t", partition_column="c").reader_options()
-
-
-def test_salted_sorted_collect_equals_unsalted(spark):
-    li = Catalog(spark, SF_DIR).table("lineitem")
-    plain = li.groupBy("l_orderkey").agg(
-        collect_ordered(
-            F.col("l_partkey").cast("string"),
-            [F.col("l_partkey").cast("string"), F.col("l_linenumber")],
-        ).alias("members")
-    )
-    salted = salted_sorted_collect(
-        li,
-        ["l_orderkey"],
-        F.col("l_partkey").cast("string"),
-        [F.col("l_partkey").cast("string"), F.col("l_linenumber")],
-        out_name="members",
-        salts=8,
-    )
-    a = {r.l_orderkey: r.members for r in plain.collect()}
-    b = {r.l_orderkey: r.members for r in salted.collect()}
-    assert a == b
-
-
-def test_salted_top1_equals_window_top1(spark):
-    li = Catalog(spark, SF_DIR).table("lineitem")
-    rank = F.struct(
-        (-F.col("l_quantity")).alias("nq"),
-        F.col("l_suppkey").alias("k"),
-    )
-    salted = salted_top1(li, ["l_partkey"], rank, salts=8)
-    got = {r.l_partkey: (r.top.nq, r.top.k) for r in salted.collect()}
-
-    from pyspark.sql import Window
-    w = Window.partitionBy("l_partkey").orderBy(
-        F.col("l_quantity").desc(), F.col("l_suppkey").asc()
-    )
-    want_rows = (
-        li.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).collect()
-    )
-    want = {r.l_partkey: (-r.l_quantity, r.l_suppkey) for r in want_rows}
-    assert got == want
-
-
-def test_products_export_salted_is_bit_identical(spark):
-    """The flagship's salted aggregation (hot-product opt-in) must be a
-    pure execution-shape change: same rows, same strings, same ordering
-    inside every list column as the unsalted oracle-checked plan."""
-    from dataintegration_ecomprovider_spark.catalog import Catalog
-    from dataintegration_ecomprovider_spark.operators.export_views import (
-        products_export_view,
-    )
-
-    cat = Catalog(spark, SF_DIR)
-    cols = None
-    plain = products_export_view(cat).toPandas()
-    salted = products_export_view(cat, salts=8).toPandas()
-    cols = sorted(plain.columns)
-    plain = plain[cols].sort_values(by=cols).reset_index(drop=True)
-    salted = salted[cols].sort_values(by=cols).reset_index(drop=True)
-    assert plain.equals(salted)
 
 
 def test_orc_and_xml_sources_round_trip(spark, tmp_path):

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataintegration_ecomprovider_spark.plans import publish
+from dataintegration_ecomprovider_spark.plans.store_sql import store_sql
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -238,56 +239,6 @@ def test_compact_cluster_by_zorder_prunes_every_dimension(spark, store):
         publish.compact(spark, store, "t", sort_by=["x"], cluster_by=["y"])
 
 
-def test_clone_table_shallow_zero_copy_then_copy_on_write(spark, store):
-    """clone_table commits a second table name pointing at the SAME data
-    directory (zero bytes moved), carrying key metadata; a merge against
-    the clone stages a new directory and re-points only the clone, so
-    source and clone diverge copy-on-write; vacuum keeps the still-shared
-    directory alive."""
-    base = _orders(spark).limit(200)
-    publish.publish_tables(
-        spark, {"orders": base}, store, table_keys={"orders": ["o_orderkey"]}
-    )
-    publish.clone_table(store, "orders", "orders_dev")
-
-    m = publish.current_manifest(store)
-    src_entry, dev_entry = m["tables"]["orders"], m["tables"]["orders_dev"]
-    assert src_entry["path"] == dev_entry["path"]  # shallow: shared directory
-    assert _rows(publish.read_table(spark, store, "orders_dev")) == _rows(base)
-    assert publish.table_keys(store, "orders_dev") == ["o_orderkey"]
-
-    # copy-on-write: merge into the clone — source untouched, paths split
-    delta = base.limit(10).withColumn("o_orderstatus", F.lit("Z"))
-    publish.merge_into(spark, store, "orders_dev", delta)
-    m = publish.current_manifest(store)
-    assert m["tables"]["orders"]["path"] != m["tables"]["orders_dev"]["path"]
-    assert _rows(publish.read_table(spark, store, "orders")) == _rows(base)
-    assert (
-        publish.read_table(spark, store, "orders_dev")
-        .filter(F.col("o_orderstatus") == "Z").count() == 10
-    )
-
-    # the source's directory is still referenced by the live manifest:
-    # vacuum to a single version must not delete it
-    publish.vacuum(spark, store, keep_versions=1)
-    assert _rows(publish.read_table(spark, store, "orders")) == _rows(base)
-
-    with pytest.raises(ValueError):
-        publish.clone_table(store, "orders", "orders_dev")  # exists
-
-
-def test_clone_table_into_other_store(spark, store, tmp_path):
-    dest_root = str(tmp_path / "dest_store")
-    base = _orders(spark).limit(100)
-    publish.publish_tables(
-        spark, {"orders": base}, store, table_keys={"orders": ["o_orderkey"]}
-    )
-    publish.clone_table(store, "orders", "orders", dest_root=dest_root)
-    assert _rows(publish.read_table(spark, dest_root, "orders")) == _rows(base)
-    assert publish.table_keys(dest_root, "orders") == ["o_orderkey"]
-    assert publish.current_manifest(dest_root)["version"] == 1
-
-
 def test_replicate_table_seeds_then_ships_deltas(spark, tmp_path):
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
@@ -464,18 +415,27 @@ def test_replicate_store_covers_all_tables(spark, tmp_path):
         spark, {"orders": orders, "customers": cust}, src,
         table_keys={"orders": ["o_orderkey"], "customers": ["o_custkey"]},
     )
-    res = publish.replicate_store(spark, src, dst)
+
+    def sync():
+        return {
+            name: publish.replicate_table(spark, src, dst, name)
+            for name in sorted(publish.current_manifest(src)["tables"])
+        }
+
+    res = sync()
     assert set(res) == {"orders", "customers"}
     assert all(r["mode"] == "seed" for r in res.values())
     publish.publish_tables(spark, {"orders": orders.limit(40)}, src)
-    res = publish.replicate_store(spark, src, dst)
+    res = sync()
     assert res["orders"]["mode"] == "delta"
     # customers untouched by the publish but the source version advanced —
     # its diff is empty, so the sync advances WITHOUT rewriting the replica
     assert res["customers"]["mode"] == "empty"
     assert _rows(publish.read_table(spark, dst, "customers")) == _rows(cust)
     # and the caught-up state is durable: the next sync is a pure noop
-    assert publish.replicate_store(spark, src, dst)["customers"]["mode"] == "noop"
+    assert publish.replicate_table(
+        spark, src, dst, "customers"
+    )["mode"] == "noop"
     assert _rows(publish.read_table(spark, dst, "orders")) == _rows(orders.limit(40))
 
 
@@ -491,19 +451,6 @@ def test_scan_table_pushes_residual_filter_into_scan(spark, store):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "o_custkey" in plan
     assert "GreaterThan(o_custkey,10" in plan.replace(" ", "") or "o_custkey" in plan
-
-
-def test_describe_history_reports_versions_and_changes(spark, store):
-    df = _orders(spark).limit(50)
-    publish.publish_tables(spark, {"a": df, "b": df.limit(10)}, store)
-    publish.publish_tables(spark, {"a": df.limit(20)}, store)  # b carried forward
-    hist = publish.describe_history(store)
-    assert [h["version"] for h in hist] == [1, 2]
-    assert hist[0]["changed"] == ["a", "b"]
-    assert hist[1]["changed"] == ["a"]
-    assert hist[1]["tables"] == ["a", "b"]
-    assert all(h["committed_at_unix"] for h in hist)
-    assert publish.describe_history(str(spark.conf.get("spark.sql.warehouse.dir")).replace("file:", "") + "/nope") == []
 
 
 # --- hypothesis: pruning never changes results -----------------------------
@@ -771,7 +718,7 @@ def test_metadata_reads_stay_fast_at_ten_thousand_files(spark, tmp_path):
 def test_manifest_history_spills_to_checkpoints(spark, tmp_path, monkeypatch):
     """MANIFEST.json must not grow O(versions): past HISTORY_INLINE_MAX
     the oldest entries spill to _history/ checkpoint files, while time
-    travel, rollback, describe_history and vacuum keep working across
+    travel, rollback, DESCRIBE HISTORY and vacuum keep working across
     the spill boundary."""
     monkeypatch.setattr(publish, "HISTORY_INLINE_MAX", 6)
     root = str(tmp_path / "store")
@@ -793,7 +740,10 @@ def test_manifest_history_spills_to_checkpoints(spark, tmp_path, monkeypatch):
     old = publish.read_table_at(spark, root, "t", 2)
     assert [tuple(r) for r in old.collect()] == [(2, "v2")]
     # full history enumeration spans the spill boundary
-    hist = publish.describe_history(root)
+    hist = sorted(
+        store_sql(spark, root).sql("DESCRIBE HISTORY").collect(),
+        key=lambda r: r["version"],
+    )
     assert [h["version"] for h in hist] == list(range(1, n_versions + 1))
 
     # TIMESTAMP AS OF a spilled-out commit still resolves (the spill
@@ -886,8 +836,8 @@ def test_recluster_gates_on_worst_of_all_cluster_columns(spark, tmp_path):
     # post-rewrite, the secondary column's layout serves skipping again
     # (Z-order over 2 dims and 8 files lands near sqrt(8) ≈ 2.8 per dim)
     assert res["overlaps_after"]["b"] <= 3.0 < overlaps["b"]
-    rep = publish.explain_skipping(root, "t", [("b", "<", n // 8)])
-    assert any(not r["kept"] for r in rep), "no pruning on b after rewrite"
+    kept, total = publish.prune_files(root, "t", [("b", "<", n // 8)])
+    assert len(kept) < total, "no pruning on b after rewrite"
 
 
 def test_recluster_and_compact_refuse_pinned_layouts(spark, tmp_path):
@@ -1028,9 +978,11 @@ def test_boolean_predicate_trees_scan_and_prune(spark, tmp_path):
     )
     assert total == 4 and 0 < len(kept) <= 2
     # NOT prunes the all-'x' file (stats prove every row matches grp='x')
-    rep = publish.explain_skipping(root, "t", [("not", ("grp", "=", "x"))])
-    pruned = [r for r in rep if not r["kept"]]
-    assert pruned and all(r["pruned_by"] == "minmax" for r in pruned)
+    kept, total = publish.prune_files(root, "t", [("not", ("grp", "=", "x"))])
+    assert len(kept) < total
+    # t has no bloom sidecar, so min/max stats alone did the pruning
+    t_path = publish.current_manifest(root)["tables"]["t"]["path"]
+    assert not os.path.exists(os.path.join(t_path, publish.BLOOM_FILE))
     # ...but keeps files where only SOME rows are 'x'
     got = _rows(publish.scan_table(spark, root, "t",
                                    [("not", ("grp", "=", "x"))]))
@@ -1173,7 +1125,9 @@ def test_history_spill_model_property(spark, tmp_path_factory, ops, monkeypatch)
         got = publish.read_table_at(spark, root, "t", version).collect()
         assert [tuple(r) for r in got] == [(val,)], version
     # ...and the commit log enumerates exactly the surviving versions
-    hist = publish.describe_history(root)
+    # (driver-side, as DESCRIBE HISTORY reads it: no Spark job per example)
+    manifest = publish.current_manifest(root)
+    hist = publish._all_history(root, manifest) + [manifest]
     assert [h["version"] for h in hist] == sorted(model)
     # vacuumed versions are KeyError, not a raw parquet failure
     gone = set(range(1, max(model))) - set(model)
@@ -1465,9 +1419,12 @@ def test_partition_scoped_recluster_rewrites_only_fragmented(spark, tmp_path):
     }
 
     # post-rewrite skipping: a val probe prunes inside grp=a
-    rep = publish.explain_skipping(root, "t", [("val", "<", 100)])
-    a_rows = [r for r in rep if r["file"].startswith("grp=a")]
-    assert any(not r["kept"] for r in a_rows)
+    kept, _ = publish.prune_files(root, "t", [("val", "<", 100)])
+    a_kept = [
+        f for f in kept
+        if os.path.relpath(f, entry["path"]).startswith("grp=a")
+    ]
+    assert len(a_kept) < len(new_a)
     # content identical + partition pruning intact
     got = publish.scan_table(spark, root, "t", where=[("val", "<", 100)])
     assert got.count() == 100

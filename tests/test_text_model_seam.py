@@ -6,10 +6,8 @@ query surface — identical schema, same plan shape, values from the model.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from dataintegration_ecomprovider_spark.llm import text as text_ops
-from dataintegration_ecomprovider_spark.catalog import Catalog
 from dataintegration_ecomprovider_spark.plans.llm_queries import q_token_counts
 from tests.conftest import SF_DIR
 
@@ -30,21 +28,3 @@ def test_token_counts_model_swap_keeps_schema(spark):
     assert (rows["total_bpe_tokens"] == rows["total_tokens"]).all()
 
 
-def test_with_model_flattens_struct_features(spark):
-    def toy_model(s: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame({
-            "model_lang": s.str.contains(" the ").map({True: "en", False: "und"}),
-            "model_score": s.str.len().astype("float64") / 100.0,
-        })
-
-    docs = Catalog(spark, SF_DIR).table("documents").limit(50)
-    out = text_ops.with_model(
-        docs, toy_model, "model_lang string, model_score double"
-    )
-    assert out.columns == docs.columns + ["model_lang", "model_score"]
-    pdf = out.select("text", "model_lang", "model_score").toPandas()
-    assert len(pdf) == 50
-    # the model's outputs really came from the model, per-row
-    expect_lang = pdf["text"].str.contains(" the ").map({True: "en", False: "und"})
-    assert (pdf["model_lang"] == expect_lang).all()
-    assert (pdf["model_score"] == pdf["text"].str.len() / 100.0).all()

@@ -648,14 +648,10 @@ def maintain_aggregate(
                 *[_nncnt_alias(c) for c in acols],
                 *[a for a, _ in sexprs],
             }
-            # driver-side footer schema first (round 13, guide §1.2) —
-            # only the column NAMES matter here; fall back to the Spark
-            # read when the cheap path can't answer
-            dst_schema = publish.table_schema(root, name)
-            if dst_schema is not None:
-                return not expected <= {f.name for f in dst_schema.fields}
+            # only the column NAMES matter here: read_schema answers
+            # from a footer where it can and never caches a read
             return not expected <= set(
-                publish.read_table(spark, root, name).columns
+                publish.read_schema(spark, root, name).names
             )
 
         if tlast is None or name not in manifest["tables"] or _schema_stale():
@@ -1172,19 +1168,19 @@ def maintain_rowwise_view(
         # analysis error on the empty frame) falls back to the original
         # full-plan check, which remains the source of truth.
         src_schema = publish.table_schema(root, src)
-        dst_schema = publish.table_schema(root, dst)
-        if src_schema is not None and dst_schema is not None:
+        dst_cols = set(publish.read_schema(spark, root, dst).names)
+        if src_schema is not None:
             try:
                 expected = set(
                     build(spark.createDataFrame([], src_schema)).columns
                 )
-                return not expected <= {f.name for f in dst_schema.fields}
+                return not expected <= dst_cols
             except Exception:
                 pass
         expected = set(
             build(publish.read_table_at(spark, root, src, src_version)).columns
         )
-        return not expected <= set(publish.read_table(spark, root, dst).columns)
+        return not expected <= dst_cols
 
     if last is None or dst not in manifest["tables"]:
         mode = _seed()

@@ -50,14 +50,22 @@ registers its DataFrame or concrete RDD id at creation
 plan — no registry diffing).
 
 Module-level memos (parquet plans, stats sidecars, manifest JSON, span
-feeds, pivot values) are ``KeyedCache`` instances with two lifetimes.
-Caches whose values own Spark storage (today only the span feeds) are
-drained by ``release_caches``.  The rest hold driver-side plans and
-parsed documents that stay valid across jobs: every import job and
-stream batch ends in ``release_caches``, and draining them there would
-re-list every data dir and re-parse every manifest on the next one.
-They leave by LRU eviction, by a newer version superseding them, or by
-``invalidate_path`` once vacuum/compact delete the files beneath them.
+feeds, merge-on-read reads, pivot values) are ``KeyedCache`` instances
+with two lifetimes.  Two caches own Spark storage and are drained by
+``release_caches``: the span feeds (``materialize.SPAN_FEED_CACHE``,
+one persisted change feed per version span) and the merge-on-read reads
+(``publish.MOR_READS``, one lazily persisted merged state per table at
+its manifest entry, which every whole-table read at that entry scans).
+Neither needs ``release_caches`` to stay bounded: a newer version of a
+slot supersedes and unpersists the older value, LRU keeps each under its
+cap (span count; on-disk bytes for the reads), and ``invalidate_path``
+drops values once vacuum/compact delete files beneath them — which
+matters because ``stream_into_store`` never calls ``release_caches``
+between micro-batches.  The rest hold driver-side plans and parsed
+documents that stay valid across jobs and leave the same three ways but
+never at ``release_caches``: a driver that ends each import job there
+(bench.py and the benchmark's import loop do) would otherwise re-list
+every data dir and re-parse every manifest on the next job.
 
 The reference's analog is temp-table cleanup on Close
 (src/EcomDestinationWriter.cs:4167-4182): staging state lives for the job,
@@ -249,8 +257,10 @@ class KeyedCache:
     Misses are single-flight: callers of one (slot, version) in flight
     wait for its one result or re-raise its one exception, and a failed
     flight stores nothing.  ``compute`` runs outside the lock.  Past
-    ``cap`` slots the least recently used is evicted.  ``path(slot)``
-    names the directory a value was built over, for ``invalidate_path``.
+    ``cap`` the least recently used slot is evicted; ``cap`` counts
+    slots, or with ``weigh`` the summed ``weigh(value)`` of the stored
+    values (bytes, say).  ``path(slot)`` names the directory a value was
+    built over, for ``invalidate_path``.
     ``release(value)`` frees storage a value owns, exactly once, on
     evict, supersede, invalidate and ``clear``; ``release_caches``
     drains the caches that have one."""
@@ -260,10 +270,13 @@ class KeyedCache:
         cap: int,
         path: Callable[[Hashable], str] | None = None,
         release: Callable[[object], None] | None = None,
+        weigh: Callable[[object], int] | None = None,
     ) -> None:
         self.cap = cap
         self._path = path
         self._release = release
+        self._weigh = weigh or (lambda value: 1)
+        self._weight = 0
         self.owns_storage = release is not None
         self._lock = threading.Lock()
         # slot -> (version, value, realpath(path(slot)) or None), least
@@ -295,10 +308,13 @@ class KeyedCache:
             raise
         with self._lock:
             del self._flights[flight_key]
-            dropped = [self._entries.pop(slot, None)]
+            dropped = [self._pop(slot)]
             self._entries[slot] = (version, value, path)
-            while len(self._entries) > self.cap:
-                dropped.append(self._entries.popitem(last=False)[1])
+            self._weight += self._weigh(value)
+            while self._weight > self.cap:
+                _, lru = self._entries.popitem(last=False)
+                self._weight -= self._weigh(lru[1])
+                dropped.append(lru)
         flight.set_result(value)
         self._release_all(dropped)
         return value
@@ -308,17 +324,31 @@ class KeyedCache:
         contains it, by whole components: dropping /s spares /s2."""
         with self._lock:
             dropped = [
-                self._entries.pop(slot)
+                self._pop(slot)
                 for slot, (_, _, p) in list(self._entries.items())
                 if p and os.path.commonpath([p, real_path]) in (p, real_path)
             ]
+        self._release_all(dropped)
+
+    def discard(self, slot: Hashable) -> None:
+        """Drop ``slot`` whatever version it holds."""
+        with self._lock:
+            dropped = [self._pop(slot)]
         self._release_all(dropped)
 
     def clear(self) -> None:
         with self._lock:
             dropped = list(self._entries.values())
             self._entries.clear()
+            self._weight = 0
         self._release_all(dropped)
+
+    def _pop(self, slot: Hashable):
+        """Remove ``slot`` (caller holds the lock); its entry, or None."""
+        entry = self._entries.pop(slot, None)
+        if entry is not None:
+            self._weight -= self._weigh(entry[1])
+        return entry
 
     def _release_all(self, dropped) -> None:
         for entry in dropped:

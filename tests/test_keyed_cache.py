@@ -167,3 +167,17 @@ def test_concurrent_misses_on_many_slots_stay_under_the_cap():
     assert len(cache) <= 8
     cache.clear()
     assert all(v.releases == 1 for v in made)
+
+
+def test_weighted_cap_evicts_by_summed_weight():
+    cache = runtime.KeyedCache(10, release=lambda v: None, weigh=lambda v: v)
+    cache.get("a", 1, lambda: 4)
+    cache.get("b", 1, lambda: 5)
+    cache.get("a", 1, lambda: 0)  # hit: "a" is now the most recently used
+    cache.get("c", 1, lambda: 3)  # 12 > 10 evicts "b", the least recent
+    assert [slot for slot, _ in cache.keys()] == ["a", "c"]
+    cache.get("a", 2, lambda: 6)  # supersede re-weighs: 6 + 3 fits
+    assert [slot for slot, _ in cache.keys()] == ["c", "a"]
+    cache.discard("c")
+    cache.get("d", 1, lambda: 4)  # 6 + 4 fits once "c" is gone
+    assert [slot for slot, _ in cache.keys()] == ["a", "d"]

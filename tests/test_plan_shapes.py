@@ -247,12 +247,16 @@ def test_unpartitioned_windows_read_bounded_inputs(spark):
     )
 
 
-def test_mor_reconstruction_prunes_columns(spark, tmp_path):
+def test_mor_reconstruction_prunes_columns(spark, tmp_path, monkeypatch):
     """Column pruning must push THROUGH merge-on-read reconstruction
     (anti-join + union): a 2-column projection over a wide MoR table
     reads only those columns from the base scan, and only the key from
     the anti-join's delta-key scan — at 100 TB the difference between
-    reading 2 columns and the whole table."""
+    reading 2 columns and the whole table.  A table that large is over
+    MOR_READ_CACHE_MAX_BYTES, so its reads reconstruct every time; the
+    budget is pinned to 0 to put this small table on that path.  Under
+    the budget the merged state persists whole once, and a projection
+    over it scans only its own columns from memory."""
     from dataintegration_ecomprovider_spark.plans import publish
 
     root = str(tmp_path / "store")
@@ -264,6 +268,11 @@ def test_mor_reconstruction_prunes_columns(spark, tmp_path):
         spark, root, "t",
         spark.range(5).selectExpr("id", "id*7 as a", "id*9 as b", "'x' as s"),
     )
+    cached = _plan(publish.read_table(spark, root, "t").select("id", "a"))
+    memory_scan = [ln for ln in cached.splitlines() if "InMemoryTableScan" in ln]
+    assert len(memory_scan) == 1 and "[id#" in memory_scan[0]
+    assert ", a#" in memory_scan[0] and "b#" not in memory_scan[0]
+    monkeypatch.setattr(publish, "MOR_READ_CACHE_MAX_BYTES", 0)
     plan = (
         publish.read_table(spark, root, "t")
         .select("id", "a")

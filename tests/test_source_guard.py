@@ -11,7 +11,12 @@
 2. Every top-level package definition has a caller outside ``tests/``.
    A path that only its own tests reach is a second path beside a live
    one; it goes, and its tests with it.  The only exemptions are the
-   reference capabilities listed in UNCALLED_REFERENCE_CAPABILITIES."""
+   reference capabilities listed in UNCALLED_REFERENCE_CAPABILITIES.
+
+3. A manifest entry becomes a reader's whole-table frame in one place,
+   ``publish._read_logical``, which serves merge-on-read entries from
+   ``publish.MOR_READS``.  A ``_logical_view(entry, _read_entry(...))``
+   written out anywhere else is a read that skips that cache."""
 
 from __future__ import annotations
 
@@ -90,6 +95,60 @@ def test_guard_flags_both_idioms(tmp_path):
         "pkg/memo.py:3 module-level lock",
         "pkg/memo.py:11 next(iter(...)) eviction",
     ]
+
+
+# --- one whole-table read path ----------------------------------------------
+
+
+def _calls(node: ast.AST, name: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == name
+    )
+
+
+def uncached_read_sites(package: pathlib.Path = PACKAGE) -> list[str]:
+    """`path:line` of every ``_logical_view(..., _read_entry(...))`` call
+    outside the body of ``_read_logical``."""
+    sites = []
+    for path in sorted(package.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
+        helper = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "_read_logical"
+            for n in ast.walk(f)
+        }
+        rel = path.relative_to(package.parent)
+        for node in ast.walk(tree):
+            if (
+                _calls(node, "_logical_view")
+                and id(node) not in helper
+                and any(_calls(a, "_read_entry") for a in node.args)
+            ):
+                sites.append(f"{rel}:{node.lineno}")
+    return sites
+
+
+def test_whole_table_reads_go_through_one_helper():
+    assert uncached_read_sites() == []
+
+
+def test_read_guard_flags_the_pair_outside_the_helper(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "store.py").write_text(
+        "def _read_logical(spark, entry):\n"
+        "    def build():\n"
+        "        return _logical_view(entry, _read_entry(spark, entry))\n"
+        "    return build()\n"
+        "def read_table(spark, entry):\n"
+        "    return _logical_view(entry, _read_entry(spark, entry))\n"
+        "def rename(spark, entry):\n"
+        "    return _logical_view(entry, _scan_entry(spark, entry))\n"
+    )
+    assert uncached_read_sites(pkg) == ["pkg/store.py:6"]
 
 
 # --- reachability -----------------------------------------------------------

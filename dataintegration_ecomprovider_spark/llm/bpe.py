@@ -221,20 +221,6 @@ def train(
     return merges
 
 
-def dropped_word_count(text: Column, lowercase: bool = True) -> Column:
-    """Words of ``text`` that the delimited representation cannot carry
-    (they contain SEP or EOW) and the encode/count path therefore DROPS
-    (clean_words) — surfaced per document so a corpus-accounting run can
-    budget the loss instead of silently under-counting.  This is the
-    documented encode contract: dropped words contribute to NEITHER
-    n_words NOR n_tokens, and this count says how many went."""
-    base = F.lower(text) if lowercase else text
-    raw = F.filter(
-        F.split(F.trim(base), r"[ \t\n\r\f]+"), lambda w: w != ""
-    )
-    return (F.size(raw) - F.size(clean_words(raw))).cast("bigint")
-
-
 def _tokens_udf(
     text: Column,
     merges: list[dict],

@@ -8,9 +8,8 @@ expressions (materialized word array → sequence → slice → posexplode); the
 explode is partition-local, so chunking runs at scan throughput with ZERO
 shuffles at any corpus size — the 100 TB cost is the rewrite itself.
 
-Tokens here are whitespace words (consistent with text.n_words); a real
-tokenizer drops in upstream via text.batched_column_model to precompute a
-token array column and chunk that instead — same plan shape.
+Tokens here are whitespace words (consistent with text.n_words); a
+precomputed token array column chunks the same way — same plan shape.
 
 Reference has no analog (its rows are products, not documents); this is a
 net-new LLM-pipeline operator, DuckDB-oracle-checked (list slicing and

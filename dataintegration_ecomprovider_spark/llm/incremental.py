@@ -155,7 +155,8 @@ def maintain_dedup_index(
 
     def _seed() -> str:
         # corpus-sized input: spread here, NOT inside _build — the delta
-        # branch feeds _build batch-sized CDC frames (ADVICE r13)
+        # branch feeds _build batch-sized CDC frames, where a spread
+        # would add an Exchange for nothing
         from dataintegration_ecomprovider_spark import runtime
 
         sigs, band_rows = _build(

@@ -60,8 +60,8 @@ def token_postings(
     satisfies maintain_rowwise_view's build contract, which is what
     makes the index maintainable from CDC."""
     toks = _tokens(F.col(text_col), min_len)
-    # round-13 note: spreading the scan here (guide §2.5) was measured
-    # and REVERTED — the builder feeds both corpus seeds and tiny CDC
+    # no spread_scan here: spreading the scan was measured and
+    # reverted — the builder feeds both corpus seeds and tiny CDC
     # deltas through this function, and the added Exchange cost the
     # maintenance lifecycles more than the seed gained (within-session
     # A/B: llm_text_search_ranked 6.96 s → 8.03 s with spread)

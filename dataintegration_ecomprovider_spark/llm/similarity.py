@@ -906,9 +906,8 @@ def pq_index(
     )                # pivot-value discovery's driver-side collect
     if not sample:
         raise ValueError("pq_index needs a non-empty embeddings table")
-    # the dimension comes off the sampled rows — the old separate
-    # .first() probe was one more full-plan driver round-trip per index
-    # build (round 14, guide §1.2)
+    # the dimension comes off the sampled rows: a separate .first()
+    # probe would cost one more full-plan driver round-trip per build
     dim = len(sample[0]["v"])
     if dim % m != 0:
         raise ValueError(f"m={m} must divide the embedding dim {dim}")
@@ -1361,7 +1360,7 @@ def pq_refine_codebook(
     members drop out (standard Lloyd); the driver collects the bounded
     m·k×sub means between iterations, like kmeans_refine.
 
-    Driver round-trips per call (round 14, guide §1.2): ONE upfront
+    Driver round-trips per call: ONE upfront
     collect of the bounded starting codebook plus one means collect per
     iteration — the empty-entry COALESCE bookkeeping lives driver-side
     across iterations instead of re-collecting `current` (whose first
@@ -1471,8 +1470,8 @@ def ivfpq_index(
     vector costs.  Returns {"centroids": (cid, cvec), "codebook":
     (j, c, cv), "codes": (id, cid, codes)} — the codes table carries its
     cell id so the serve path (ivfpq_topk) ADC-scans ONLY probed cells,
-    turning the flat-PQ O(corpus codes) scan into O(probed cells):
-    the missing piece VERDICT r9 ranked #1 for a 100 TB serve path.
+    turning the flat-PQ O(corpus codes) scan into O(probed cells),
+    which is what a 100 TB serve path needs.
 
     `residual=False` (default) encodes the unit-normalized vector
     itself — the code table stays IDENTICAL to flat PQ (same
@@ -1487,9 +1486,9 @@ def ivfpq_index(
     Codebook (sample AND Lloyd training) is built over the residuals in
     residual mode.
 
-    Which to pick (both fixtures measured, SCALE.md round-11 + round-12
-    ANN tables): on CLUSTERED embeddings — the organic case, probed on
-    a mixture-of-Gaussians fixture — residual wins on raw-ADC (0.085 vs
+    Which to pick (both fixtures measured, SCALE.md ANN tables): on
+    CLUSTERED embeddings — the organic case, probed on a
+    mixture-of-Gaussians fixture — residual wins on raw-ADC (0.085 vs
     0.060) AND re-ranked (0.980 vs 0.955) recall, exactly faiss's
     rationale; on structureless noise it loses (raw ADC 0.035 vs
     0.155) because the residual has no concentration to exploit.  The
@@ -1501,8 +1500,8 @@ def ivfpq_index(
     `pq_iters` > 0 trains the sub-codebooks with per-subspace Lloyd
     iterations (pq_refine_codebook) instead of the raw hash-rank sample;
     `refine_iters` Lloyd-refines the IVF centroids (kmeans_refine).
-    Persist all three tables with publish_ivfpq_index (cells bucketed on
-    cid) and maintain codes from CDC with maintain_ivfpq_codes."""
+    Once centroids and codebook are persisted, maintain_ivfpq_codes keeps
+    the code table current from CDC."""
     ivf = ivf_index(
         embeddings, n_centroids=n_centroids, id_col=id_col,
         vec_col=vec_col, portable=portable, refine_iters=refine_iters,
@@ -1615,7 +1614,7 @@ def ivfpq_topk(
     ZERO-JOB before Spark submits the probe — without it the geometry
     is re-derived from the codebook via three bounded driver round-trips
     (two 1-row aggregates + one first()), which is correct but costs
-    three Spark jobs per call (the round-10 verdict's watch item).
+    three Spark jobs per call.
 
     `rerank=R` (requires `embeddings`) is the production two-stage form:
     the ADC pass shortlists R candidates per query from codes alone,
@@ -1751,84 +1750,6 @@ def ivfpq_topk(
         .select("query_id", "neighbor_id", "similarity",
                 F.col("rank").cast("int").alias("rank"))
     )
-
-
-def publish_ivfpq_index(
-    spark,
-    root: str,
-    src: str = "embeddings",
-    n_centroids: int = 16,
-    m: int = 4,
-    codebook_size: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    portable: bool = False,
-    refine_iters: int = 0,
-    pq_iters: int = 0,
-    residual: bool = False,
-    centroids_table: str = "ivfpq_centroids",
-    codebook_table: str = "ivfpq_codebook",
-    codes_table: str = "ivfpq_codes",
-    meta_table: str = "ivfpq_meta",
-) -> dict:
-    """Build and PERSIST the full IVFPQ layout from the current `src`
-    table in ONE atomic commit: centroids + codebook (the trained,
-    bounded halves), the seed codes table bucketed on cid — later
-    probe joins read co-located cells with no corpus-side Exchange —
-    and a ONE-ROW meta table (m, k, sub, residual) so a later session
-    can rebuild the serve-path index dict (load_ivfpq_meta) with one
-    tiny read instead of three per-call driver round-trips against the
-    codebook.  Codes then follow the corpus via maintain_ivfpq_codes;
-    re-training centroids/codebook wholesale is a maintenance decision
-    (the recenter_topics pattern)."""
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    emb = publish.read_table(spark, root, src)
-    idx = ivfpq_index(
-        emb, n_centroids=n_centroids, m=m, codebook_size=codebook_size,
-        id_col=id_col, vec_col=vec_col, portable=portable,
-        refine_iters=refine_iters, pq_iters=pq_iters, residual=residual,
-    )
-    meta = spark.createDataFrame(
-        [(int(idx["m"]), int(idx["k"]), int(idx["sub"]), bool(residual))],
-        "m int, k int, sub int, residual boolean",
-    ).repartition(1)
-    manifest = publish.publish_tables(
-        spark,
-        {
-            centroids_table: idx["centroids"].repartition(1),
-            codebook_table: idx["codebook"],
-            codes_table: idx["codes"],
-            meta_table: meta,
-        },
-        root,
-        table_keys={
-            centroids_table: ["cid"],
-            codebook_table: ["j", "c"],
-            codes_table: [id_col],
-            meta_table: ["m"],
-        },
-        bucket_keys={codes_table: ["cid"]},
-        num_buckets=8,
-    )
-    return dict(
-        manifest, m=idx["m"], k=idx["k"], sub=idx["sub"],
-        residual=bool(residual),
-    )
-
-
-def load_ivfpq_meta(spark, root: str, meta_table: str = "ivfpq_meta") -> dict:
-    """The serve-path index dict from a persisted layout: one 1-row read
-    of the meta table published by publish_ivfpq_index — pass the result
-    as ivfpq_topk(index=...) and the probe submits exactly one Spark job
-    chain (no geometry re-derivation)."""
-    from dataintegration_ecomprovider_spark.plans import publish
-
-    row = publish.read_table(spark, root, meta_table).first()
-    return {
-        "m": int(row["m"]), "k": int(row["k"]), "sub": int(row["sub"]),
-        "residual": bool(row["residual"]),
-    }
 
 
 def maintain_ivfpq_codes(

@@ -73,27 +73,6 @@ def lang_guess(text: Column) -> Column:
     return expr
 
 
-# --- pluggable model seam --------------------------------------------------
-# The heuristics above are deterministic, oracle-checkable DEFAULTS.  Real
-# models (a BPE tokenizer, a fastText-style langid, a learned quality
-# scorer) drop in behind the SAME column contracts via this Arrow-batched
-# pandas_udf wrapper — the query shapes (llm_token_counts, llm_lang_id,
-# llm_text_quality) do not change, only the column expression does.  At
-# 100 TB the batch transfer is the Arrow path (vectorized, constant
-# memory per batch), never a row-at-a-time Python UDF.
-
-
-def batched_column_model(fn, return_type: str):
-    """Wrap `fn(pandas.Series) -> pandas.Series` as an Arrow-batched column
-    function.  `return_type` is the DDL type the contract demands (e.g.
-    "bigint" for a token counter matching bpe_token_count, "string" for a
-    language-ID matching lang_guess).  The returned object is used exactly
-    like the heuristic: ``col_fn(F.col("text"))``."""
-    import pandas as pd  # noqa: F401 — documents the fn signature
-
-    return F.pandas_udf(fn, returnType=return_type)
-
-
 def rolling_fingerprint(text: Column, mod: int = 1_000_000_007, base: int = 31) -> Column:
     """Polynomial rolling-hash fingerprint over characters:
     h = (h*base + ascii(c)) mod m.  Bounded intermediate (< 2^63) so the

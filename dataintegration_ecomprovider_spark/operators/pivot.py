@@ -31,12 +31,6 @@ from dataintegration_ecomprovider_spark import runtime
 PIVOT_VALUE_CACHE = runtime.KeyedCache(32)
 
 
-def clear_discovery_cache() -> None:
-    """Drop memoized pivot-value discoveries (tests; or after the
-    underlying table's value domain has changed)."""
-    PIVOT_VALUE_CACHE.clear()
-
-
 def discover_pivot_values(
     df: DataFrame,
     value_expr: Column,
@@ -59,8 +53,8 @@ def discover_pivot_values(
     memoizes the result process-wide, for the 32 most recently used keys:
     the pivot column set is a pure function of the source data, so
     repeated plan builds against the same table skip the scan.  Pass None
-    (default) for uncached discovery; clear with clear_discovery_cache()
-    after the source changes."""
+    (default) for uncached discovery; clear PIVOT_VALUE_CACHE after the
+    source changes."""
 
     def scan() -> list[str]:
         rows = (

@@ -17,10 +17,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from dataintegration_ecomprovider_spark.functions.lists import encode_quoted_list
 
 
 def collect_ordered(value: Column, order_by: Sequence[Column], distinct: bool = False) -> Column:
@@ -36,23 +34,3 @@ def collect_ordered(value: Column, order_by: Sequence[Column], distinct: bool = 
     if distinct:
         out = F.array_distinct(out)
     return out
-
-
-def grouped_string_agg(
-    child: DataFrame,
-    group_keys: Sequence[str],
-    value: Column,
-    order_by: Sequence[Column],
-    out_name: str,
-    distinct: bool = False,
-    quoted: bool = True,
-) -> DataFrame:
-    """child -> one row per group_keys with `out_name` = '"v1","v2"' string.
-
-    `quoted=False` yields a plain comma-joined list (used by the sorting
-    columns, e.g. ShopSorting at src/EcomSourceReader.cs:346-352, which are
-    parallel to the quoted value columns).
-    """
-    arr = collect_ordered(value, order_by, distinct=distinct)
-    encoded = encode_quoted_list(arr) if quoted else F.concat_ws(",", arr)
-    return child.groupBy(*group_keys).agg(encoded.alias(out_name))

@@ -64,7 +64,7 @@ def global_rank(
     # no worse than the sort shuffle itself).  It cannot unpersist inline
     # (the returned plan is lazy and still reads it), so it is TRACKED:
     # callers free it with runtime.release_caches() after consuming the
-    # result (round-2 leak finding).
+    # result, or its blocks stay cached for the life of the session.
     from dataintegration_ecomprovider_spark import runtime
 
     ranged = runtime.track(

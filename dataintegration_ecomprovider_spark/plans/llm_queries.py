@@ -185,21 +185,16 @@ FROM documents
 
 
 # --- token counting per source -------------------------------------------
-def q_token_counts(
-    spark: SparkSession, sf_dir: str, token_count_fn=None
-) -> DataFrame:
-    """`token_count_fn` is the model seam: any drop-in with
-    bpe_token_count's (string column -> bigint column) contract — e.g.
-    ``text_ops.batched_column_model(real_tokenizer_batch, "bigint")`` for
-    an Arrow-batched real tokenizer.  Default stays the heuristic so the
-    DuckDB oracle can verify the query end-to-end
-    (tests/test_text_model_seam.py proves the swap keeps the schema)."""
-    counter = token_count_fn if token_count_fn is not None else text_ops.bpe_token_count
+def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source document, word and token totals; tokens come from the
+    bpe_token_count heuristic so the DuckDB oracle can verify the query
+    end-to-end."""
     docs = Catalog(spark, sf_dir).table("documents")
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("doc_count"),
         F.sum(text_ops.n_words(F.col("text"))).cast("bigint").alias("total_tokens"),
-        F.sum(counter(F.col("text"))).cast("bigint").alias("total_bpe_tokens"),
+        F.sum(text_ops.bpe_token_count(F.col("text")))
+        .cast("bigint").alias("total_bpe_tokens"),
         F.sum(F.length("text")).cast("bigint").alias("total_chars"),
     )
 
@@ -2979,7 +2974,7 @@ def q_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream against the vocabulary (no corpus-side shuffle).  The oracle
     re-derives the vocabulary AND the full encode chain in SQL and joins
     the same way.  Dropped-word contract: words containing SEP/EOW
-    appear in no id sequence (surfaced per doc by dropped_word_count)."""
+    appear in no id sequence."""
     from dataintegration_ecomprovider_spark.llm import bpe
 
     docs = Catalog(spark, sf_dir).table("documents")

@@ -162,8 +162,8 @@ def _hll_alias(c: str) -> str:
 def _nncnt_alias(c: str) -> str:
     """Per-avg-column NON-NULL count: SQL AVG(c) excludes NULLs from both
     numerator and denominator, so avg_<c> = sum_<c> / nncnt_<c>, not
-    sum_<c> / cnt (ADVICE r11 — dividing by COUNT(*) silently diverged
-    from SELECT AVG(c) on nullable columns).  A non-null count is a sum
+    sum_<c> / cnt (dividing by COUNT(*) would silently diverge from
+    SELECT AVG(c) on nullable columns).  A non-null count is a sum
     of 0/1 indicators, so it rides the same ± delta algebra as sums."""
     return f"nncnt_{c}"
 
@@ -215,7 +215,7 @@ def read_aggregate_view(spark: SparkSession, root: str, dst: str) -> DataFrame:
     manifest version: maintain_aggregate commits them atomically (one
     manifest swap), so any single version is internally consistent —
     independent current-version reads could straddle a commit landing
-    between the two plan-time resolutions (ADVICE r12)."""
+    between the two plan-time resolutions."""
     from dataintegration_ecomprovider_spark.plans import publish
 
     spec = declared_views(root).get(dst, {})
@@ -587,7 +587,7 @@ def maintain_aggregate(
     Returns {"dst", "from_version", "to_version", "mode"} — mode is
     "seed" | "delta" | "noop" | "empty".
 
-    Atomicity (ADVICE r12): the parent table and every ``__xd``
+    Atomicity: the parent table and every ``__xd``
     companion are planned against ONE captured manifest and made
     visible in ONE ``publish_tables`` commit — companion-then-parent
     as separate commits let a concurrent reader see cntd_<c> derived
@@ -630,7 +630,7 @@ def maintain_aggregate(
         def _schema_stale() -> bool:
             # a view seeded by an older engine/declaration can lack
             # maintained columns the current code expects (e.g. nncnt_<c>
-            # for AVG, added round 12) — a delta refresh against it would
+            # for AVG) — a delta refresh against it would
             # fail analysis, and a silent pass-through would leave the
             # read side broken.  Force a re-seed instead (schema check is
             # plan-time, no job).  Only avg_cols (nncnt_<c>) and sum_exprs
@@ -666,7 +666,7 @@ def maintain_aggregate(
         # the parent, its __xd companions, AND any other aggregate view
         # of the same source span (ctx counts after bigram counts)
         # consume ONE persisted change feed + count via the module-level
-        # span memo (round 14, guide §1.2): one version diff + one count
+        # span memo: one version diff + one count
         # job per refresh pass instead of one per maintained table.  The
         # refresh plan reads `changes` up to four times (± contributions,
         # insert/retract bookkeeping), each of which would otherwise
@@ -728,7 +728,7 @@ def maintain_aggregate(
     return out
 
 
-# --- join-view maintenance (round 4) ---------------------------------------
+# --- join-view maintenance -------------------------------------------------
 #
 # The aggregate family above maintains GROUP BY views; this maintains the
 # OTHER half of the reference's export surface — the fact-⋈-dimension view
@@ -862,7 +862,7 @@ def apply_join_delta(
     instead of blowing the broadcast limit.  True/False overrides the
     gate in either direction (skipping the persist+count).
 
-    `dim_changed_count` (round 14, guide §1.2): the dim change feed's
+    `dim_changed_count`: the dim change feed's
     row count when the caller already paid for it (maintain_join counts
     both feeds to decide the refresh mode).  Every change row
     contributes at most TWO changed dim keys (its new and its old
@@ -1017,10 +1017,10 @@ def maintain_join(
                 # probes and the refresh plan read the cached delta,
                 # where evaluating each consumer against the lazy diff
                 # would recompute the O(table) version diff per use.
-                # BOTH feeds count in ONE action (round 14, guide §1.2:
-                # the two separate .count() jobs were pure job-launch
-                # overhead — a tagged union materializes both persisted
-                # feeds and returns both counts in one job), and the dim
+                # BOTH feeds count in ONE action (a tagged union
+                # materializes both persisted feeds and returns both
+                # counts in one job; two .count() calls would each pay a
+                # job launch for nothing), and the dim
                 # count feeds apply_join_delta's broadcast byte gate so
                 # the changed-dim-key set needs no persist+count of its
                 # own.
@@ -1120,8 +1120,8 @@ def maintain_rowwise_view(
     data-independent (no pivot-without-values, no inferred-schema
     UDFs): the schema-drift fast path runs build over an empty relation
     and trusts its .columns — a data-dependent column set would make
-    drift detection silently diverge from the full-plan check (ADVICE
-    r13).  `src_key_out` names the build-output/dst column that
+    drift detection silently diverge from the full-plan check.
+    `src_key_out` names the build-output/dst column that
     carries the source key when build renames it (default: same name).
     First call seeds dst from the source at the watermarked version;
     the watermark lives in the store sync-state under `state_key`
@@ -1159,14 +1159,14 @@ def maintain_rowwise_view(
         # against the old table would mismatch schemas.  Detect via
         # plan-time analysis (no job) and force a re-seed.
         #
-        # Fast path (round 13, guide §1.2): both sides of the name-set
-        # comparison come from driver-side footer schemas — `build` runs
-        # over an EMPTY local relation with the source's logical schema,
-        # so the check never constructs (or analyzes) the full MoR read
-        # plan it previously paid ~0.5 s of py4j/Catalyst time for per
-        # refresh.  Any trouble (partitioned entry, footer miss, build
-        # analysis error on the empty frame) falls back to the original
-        # full-plan check, which remains the source of truth.
+        # Fast path: both sides of the name-set comparison come from
+        # driver-side footer schemas — `build` runs over an EMPTY local
+        # relation with the source's logical schema, so the check never
+        # constructs (or analyzes) the full MoR read plan, which costs
+        # ~0.5 s of py4j/Catalyst time per refresh.  Any trouble
+        # (partitioned entry, footer miss, build analysis error on the
+        # empty frame) falls back to the original full-plan check, which
+        # remains the source of truth.
         src_schema = publish.table_schema(root, src)
         dst_cols = set(publish.read_schema(spark, root, dst).names)
         if src_schema is not None:
@@ -1191,7 +1191,7 @@ def maintain_rowwise_view(
                 "mode": "noop"}
     else:
         try:
-            # shared span feed (round 14): a sibling view of the same
+            # shared span feed: a sibling view of the same
             # source span (doc lengths after token postings) reuses this
             # persisted diff + count instead of re-running the O(table)
             # version diff per view
@@ -1288,8 +1288,8 @@ def declare_view(root: str, kind: str, **spec) -> dict:
     ``pq_codes`` (similarity.maintain_pq_codes kwargs — the
     CDC-maintained flat-PQ code table) or ``ivfpq``
     (similarity.maintain_ivfpq_codes kwargs — the CDC-maintained
-    composed IVF+PQ code table, round 10) or ``projection``
-    (maintain_projection kwargs — a per-row selectExpr view, round 10);
+    composed IVF+PQ code table) or ``projection``
+    (maintain_projection kwargs — a per-row selectExpr view);
     `spec` must include ``dst``
     (the view's table name, also its registry key).  Re-declaring a dst
     overwrites its spec.  Returns the full declared-view registry."""

@@ -27,7 +27,7 @@ class QueryDef:
     # twin contract: same schema, fast path still runs)
     retired: bool = False
     # folded_into="<name>" removes a NEAR-DUPLICATE surface from the
-    # driver-facing registry (round-10 governance: the registry is
+    # driver-facing registry (the registry is
     # hard-capped at 150 = 3×50 driver rotation slots, so new operators
     # displace consolidated ones).  Unlike retired fast paths, a folded
     # entry KEEPS its oracle — tests/test_retired_fastpaths.py value-

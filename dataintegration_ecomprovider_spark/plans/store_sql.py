@@ -239,7 +239,7 @@ _MV_AGG_RE = re.compile(
     r"(?:\s+HAVING\s+(?P<having>.+?))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-# star rollup (round 13): fact ⋈ dim THEN GROUP BY — the first view a
+# star rollup: fact ⋈ dim THEN GROUP BY — the first view a
 # warehouse consumer declares.  Composed as an internal join view
 # (<dst>__j, maintain_join) feeding an ordinary aggregate view (dst,
 # maintain_aggregate over the join view's CDC), so the rollup refreshes
@@ -728,7 +728,7 @@ class StoreSQL:
         """Execute one statement.  DML / maintenance statements return the
         engine call's result manifest/summary dict; SELECT (including
         time travel) and DESCRIBE HISTORY return a DataFrame."""
-        # pure-SQL transaction blocks (round 9): the statement trio a
+        # pure-SQL transaction blocks: the statement trio a
         # SQL-only orchestrator uses instead of the Python transaction()
         # context manager — same staging/commit machinery underneath
         m = _BEGIN_RE.match(statement)
@@ -1584,12 +1584,12 @@ class StoreSQL:
                                tables: dict) -> dict:
         """The star-rollup CREATE branch: ``SELECT dim.c, AGG(fact.x)
         FROM fact JOIN dim ON ... [WHERE ...] GROUP BY dim.c [HAVING]``
-        — the first view a warehouse consumer declares (round-12 verdict
-        gap #2).  Composed from the two existing maintainers: an
-        INTERNAL join view ``<target>__j`` (maintain_join: fact ⋈ dim
-        carrying exactly the referenced dim columns, keyed by the fact
-        keys) feeds an ordinary aggregate view ``<target>``
-        (maintain_aggregate over the join view's own CDC).  Refreshes
+        — the first view a warehouse consumer declares.  Composed from
+        the two existing maintainers: an INTERNAL join view
+        ``<target>__j`` (maintain_join: fact ⋈ dim carrying exactly the
+        referenced dim columns, keyed by the fact keys) feeds an
+        ordinary aggregate view ``<target>`` (maintain_aggregate over
+        the join view's own CDC).  Refreshes
         are O(delta) through BOTH source feeds: a fact change flows as
         the join view's delta rows; a dim change re-derives only the
         fact rows referencing it (the join maintainer's affected-key
@@ -1721,7 +1721,7 @@ def _parse_mv_agg_items(cols_text: str, group_cols: list[str]) -> dict:
     max_cols, distinct_cols, avg_cols, sum_exprs, exact_distinct_cols}
     — shared by the plain-aggregate and star-rollup CREATE branches.
     Raises on non-maintainable items, non-canonical aliases, and expr
-    aliases colliding with canonical maintained columns (ADVICE r12)."""
+    aliases colliding with canonical maintained columns."""
     from dataintegration_ecomprovider_spark.plans import materialize
 
     sum_cols: list[str] = []
@@ -1800,7 +1800,7 @@ def _parse_mv_agg_items(cols_text: str, group_cols: list[str]) -> dict:
                 f"column name {canon!r} — alias it as {canon} (or "
                 "re-alias when reading the view)"
             )
-    # CREATE-time expr-alias validation (ADVICE r12): an alias
+    # CREATE-time expr-alias validation: an alias
     # colliding with a canonical maintained column (cnt, sum_/
     # nncnt_/min_/max_/hll_/avg_/cntd_<c>), a group column, or
     # another expression alias would otherwise only surface at

@@ -1,8 +1,8 @@
 """Streaming-surface queries (SURVEY §2.10), exposed through their batch
 equivalents so the driver's DuckDB oracle can check them: the same
 expression trees run under readStream in dataintegration_ecomprovider_spark
-.streaming (exercised in tests/test_streaming.py with watermarks,
-foreachBatch-merge and applyInPandasWithState)."""
+.streaming (exercised in tests/test_streaming.py with watermarks and
+foreachBatch-merge)."""
 
 from __future__ import annotations
 
@@ -43,8 +43,7 @@ FROM events GROUP BY 1, 2, 3
 
 
 def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-minute gap) — the batch form of the
-    applyInPandasWithState stateful operator."""
+    """Gap-based sessionization (30-minute gap)."""
     events = Catalog(spark, sf_dir).table("events")
     out = sessionize_batch(events, gap_seconds=1800)
     return out.select(
@@ -83,8 +82,8 @@ FROM numbered GROUP BY user_id, session_seq
 def q_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch form of the watermark-bounded stream dedup: one row per
     (user_id, event_type), first by (ts, event_id) — the deterministic
-    contract the streaming dropDuplicatesWithinWatermark form approximates
-    by first-arrival (streaming/windows.py::dedup_within_watermark)."""
+    contract a streaming dropDuplicatesWithinWatermark would approximate
+    by first-arrival."""
     from dataintegration_ecomprovider_spark.operators.dedup import first_wins
 
     events = Catalog(spark, sf_dir).table("events")
@@ -226,7 +225,7 @@ def q_store_to_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes it through the SAME sink closure the stream ran
     (replay_store_to_store), instead of paying a second ~1.9 s
     structured-streaming engine start for merges that are manifest-level
-    no-ops (round 14, guide §1.2); the engine-level fresh-checkpoint
+    no-ops; the engine-level fresh-checkpoint
     replay stays pinned in tests/test_txn.py.  The oracle restates the
     composed semantics: downstream = transform(final upstream
     snapshot)."""

@@ -39,8 +39,8 @@ def get_spark(app_name: str = "dataintegration-ecomprovider-spark") -> SparkSess
         # scripts/ diagnostics read per-job callsites from the REST API.
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # guide §3.1: preferSortMergeJoin=false (shuffled-hash joins) was
-        # TRIED and REVERTED in round 13 — an initial 8-query A/B showed
+        # preferSortMergeJoin stays at Spark's default: false (shuffled-hash
+        # joins) was tried and reverted — an initial 8-query A/B showed
         # −9%, but four alternating re-runs and a suite-level bench could
         # not reproduce it (the original delta was window drift on this
         # shared VM; OPTIMIZATION_r13.md wave 4 records all the numbers).

@@ -6,7 +6,7 @@ src/EcomSourceReader.cs:151-226).  The Spark engine generalizes that to a
 small `Source` hierarchy: every source yields a DataFrame and pushes
 projection + predicates down to the format's native scan.
 
-- ParquetSource / CsvSource / JsonSource: file scans; Catalyst pushes
+- FileSource(path, fmt) / CsvSource: file scans; Catalyst pushes
   filters into the format reader (parquet row-group pruning, csv/json
   column pruning).
 - JdbcSource: the direct analog of the reference — `spark.read.jdbc` with
@@ -51,32 +51,9 @@ class FileSource:
         return df
 
 
-def ParquetSource(path: str, **kw) -> FileSource:
-    return FileSource(path, "parquet", **kw)
-
-
 def CsvSource(path: str, **kw) -> FileSource:
     kw.setdefault("options", {"header": "true"})
     return FileSource(path, "csv", **kw)
-
-
-def JsonSource(path: str, **kw) -> FileSource:
-    return FileSource(path, "json", **kw)
-
-
-def OrcSource(path: str, **kw) -> FileSource:
-    return FileSource(path, "orc", **kw)
-
-
-def XmlSource(path: str, row_tag: str = "row", **kw) -> FileSource:
-    """XML feed source (Spark 4 native `xml` format, the spark-xml lineage):
-    one DataFrame row per `row_tag` element, schema inferred or supplied.
-    The wider DataIntegration suite the reference ships in reads XML product
-    feeds as a first-class provider; projection/predicates compose the same
-    way as every FileSource."""
-    opts = dict(kw.pop("options", {}))
-    opts.setdefault("rowTag", row_tag)
-    return FileSource(path, "xml", options=opts, **kw)
 
 
 @dataclass(frozen=True)

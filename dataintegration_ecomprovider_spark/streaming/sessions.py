@@ -1,40 +1,18 @@
 """Sessionization — gap-based user sessions (SURVEY §2.10 stretch surface).
 
-Two implementations with identical semantics (a session breaks when the gap
-since the previous event of the same user exceeds `gap`):
+A session breaks when the gap since the previous event of the same user
+exceeds `gap`.  `sessionize_batch` computes that with lag + cumulative-sum
+windows — pure Catalyst, oracle-checkable in any SQL engine, and the
+scalable backfill path (one shuffle on user_id, no Python).
 
-- `sessionize_batch`: lag + cumulative-sum windows — pure Catalyst,
-  oracle-checkable in any SQL engine, and the scalable backfill path
-  (one shuffle on user_id, no Python).
-- `sessionize_stream`: applyInPandasWithState over a stream — the custom
-  stateful operator path for live data, with processing-time timeouts
-  closing idle sessions.
-
-Scale: both partition by user_id.  The batch form is two window passes over
-the same partitioning (Catalyst executes them in one shuffle); the stream
-form keeps per-user state bounded by the timeout.
+Scale: both window passes share the user_id partitioning, so Catalyst
+executes them in one shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType, LongType, StructField, StructType, TimestampType,
-)
-
-SESSION_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("session_seq", LongType()),
-    StructField("n_events", LongType()),
-    StructField("session_start", TimestampType()),
-    StructField("session_end", TimestampType()),
-    StructField("total_value", DoubleType()),
-])
 
 
 def sessionize_batch(
@@ -68,70 +46,4 @@ def sessionize_batch(
         F.min(ts_col).alias("session_start"),
         F.max(ts_col).alias("session_end"),
         F.round(F.sum(value_col), 2).alias("total_value"),
-    )
-
-
-def sessionize_stream(
-    events: DataFrame,
-    gap_seconds: int,
-    timeout_ms: int = 30_000,
-) -> DataFrame:
-    """Streaming sessionization with applyInPandasWithState: per-user state
-    carries the open session; a batch's events extend or close it, and the
-    processing-time timeout flushes idle sessions."""
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                seq, n, start, end, total = state.get
-                state.remove()
-                yield pd.DataFrame([{
-                    "user_id": user_id, "session_seq": seq, "n_events": n,
-                    "session_start": pd.Timestamp(start, unit="us"),
-                    "session_end": pd.Timestamp(end, unit="us"),
-                    "total_value": round(total, 2),
-                }])
-            return
-
-        rows = pd.concat(list(pdfs)).sort_values("ts")
-        seq, n, start, end, total = state.get if state.exists else (1, 0, None, None, 0.0)
-        closed = []
-        for _, r in rows.iterrows():
-            ts_us = int(r["ts"].value // 1_000)
-            if n > 0 and ts_us - end > gap_seconds * 1_000_000:
-                closed.append((seq, n, start, end, total))
-                seq, n, start, end, total = seq + 1, 0, None, None, 0.0
-            if n == 0:
-                start = ts_us
-            n += 1
-            end = ts_us
-            total += float(r["value"])
-        state.update((seq, n, start, end, total))
-        state.setTimeoutDuration(timeout_ms)
-        if closed:
-            yield pd.DataFrame([{
-                "user_id": user_id, "session_seq": s, "n_events": c,
-                "session_start": pd.Timestamp(st, unit="us"),
-                "session_end": pd.Timestamp(en, unit="us"),
-                "total_value": round(t, 2),
-            } for s, c, st, en, t in closed])
-
-    state_schema = StructType([
-        StructField("session_seq", LongType()),
-        StructField("n_events", LongType()),
-        StructField("session_start", LongType()),
-        StructField("session_end", LongType()),
-        StructField("total_value", DoubleType()),
-    ])
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )

@@ -19,29 +19,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming per-key dedup with bounded state:
-    `dropDuplicatesWithinWatermark` keeps the first ARRIVAL per key and
-    expires key state once the watermark passes — at stream scale the
-    state holds only keys younger than the horizon, where an unbounded
-    `dropDuplicates` would accumulate every key ever seen.
-
-    The batch form of this surface (plans/stream_queries.py::
-    q_dedup_watermark) defines "first" by event time + id tie-break
-    (dedup.first_wins), which is the deterministic contract; the streaming
-    form keeps first-arrival, which equals first-event-time whenever the
-    source replays in time order (tests assert key-set equality and
-    one-row-per-key on an ordered replay)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-
-
 def tumbling_agg(
     events: DataFrame,
     ts_col: str,

@@ -253,24 +253,6 @@ def test_token_id_rows_unknown_token_maps_to_unk(spark):
     assert ids[0] == by_tok["a"]
 
 
-def test_dropped_word_count_surfaces_the_contract(spark):
-    docs = spark.createDataFrame(
-        [(1, f"good {SEP}bad also{EOW}bad fine"), (2, "all clean"), (3, None)],
-        "doc_id bigint, text string",
-    )
-    got = {
-        r["doc_id"]: (r["nd"], r["nw"])
-        for r in docs.select(
-            "doc_id",
-            bpe.dropped_word_count(F.col("text")).alias("nd"),
-            F.size(bpe.word_tokens(F.col("text"))).cast("bigint").alias("nw"),
-        ).collect()
-    }
-    assert got[1] == (2, 2)
-    assert got[2] == (0, 2)
-    assert got[3][0] in (0, None) or got[3][0] == 0
-
-
 def test_encode_ids_registry_query_matches_oracle(spark, oracle):
     from dataintegration_ecomprovider_spark.plans.registry import all_queries
 

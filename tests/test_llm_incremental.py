@@ -1256,6 +1256,15 @@ def test_ivfpq_index_serves_probed_cells_and_recall(spark):
     n = emb.count()
     assert all(t["cands"] < n for t in touched)  # never the full corpus
 
+    # the index dict's geometry serves exactly what re-deriving it from
+    # the codebook serves
+    few = (queries.filter(F.col("vec_id") < 5), idx["centroids"],
+           idx["codebook"], idx["codes"])
+    with_index = similarity.ivfpq_topk(*few, k=3, n_probe=4, index=idx)
+    derived = similarity.ivfpq_topk(*few, k=3, n_probe=4)
+    assert sorted(map(tuple, with_index.collect())) == \
+        sorted(map(tuple, derived.collect()))
+
 
 def test_pq_refined_codebook_improves_raw_adc_recall(spark):
     """Lloyd-trained sub-codebooks (pq_refine_codebook) beat the
@@ -1290,6 +1299,23 @@ def test_pq_refined_codebook_improves_raw_adc_recall(spark):
     assert raw_recall(trained) > raw_recall(idx["codebook"])
 
 
+def _publish_ivfpq_geometry(spark, root, **index_kw):
+    """Persist the centroids + codebook of an ivfpq_index over the
+    store's embeddings; the code table is left to the maintainer."""
+    from dataintegration_ecomprovider_spark.llm import similarity
+
+    idx = similarity.ivfpq_index(
+        publish.read_table(spark, root, "embeddings"), **index_kw
+    )
+    publish.publish_tables(
+        spark,
+        {"ivfpq_centroids": idx["centroids"].repartition(1),
+         "ivfpq_codebook": idx["codebook"]},
+        root,
+        table_keys={"ivfpq_centroids": ["cid"], "ivfpq_codebook": ["j", "c"]},
+    )
+
+
 def test_maintain_ivfpq_codes_follows_corpus(spark, tmp_path):
     """Round 10: the IVFPQ code table (vec_id, cid, codes) is a
     CDC-driven view — seed, O(batch) delta refresh, delete retraction,
@@ -1305,10 +1331,8 @@ def test_maintain_ivfpq_codes_follows_corpus(spark, tmp_path):
         spark, {"embeddings": emb.filter(F.col("vec_id") % 2 == 0)}, root,
         table_keys={"embeddings": ["vec_id"]},
     )
-    similarity.publish_ivfpq_index(spark, root, n_centroids=8, m=4,
-                                   codebook_size=8, pq_iters=1)
-    # the atomic publish seeded codes for the corpus as-of-build; the
-    # maintainer takes over from its watermark
+    _publish_ivfpq_geometry(spark, root, n_centroids=8, m=4,
+                            codebook_size=8, pq_iters=1)
     assert similarity.maintain_ivfpq_codes(spark, root)["mode"] == "seed"
 
     publish.merge_into_mor(
@@ -1390,8 +1414,7 @@ def test_declared_ivfpq_view_refreshes_with_store(spark, tmp_path):
         spark, {"embeddings": emb.filter(F.col("vec_id") % 2 == 0)}, root,
         table_keys={"embeddings": ["vec_id"]},
     )
-    similarity.publish_ivfpq_index(spark, root, n_centroids=8, m=4,
-                                   codebook_size=8)
+    _publish_ivfpq_geometry(spark, root, n_centroids=8, m=4, codebook_size=8)
     materialize.declare_view(root, "ivfpq", dst="ivfpq_codes")
     r1 = materialize.refresh_declared_views(spark, root)
     assert not r1["errors"] and r1["views"]["ivfpq_codes"]["mode"] == "seed"
@@ -1407,42 +1430,3 @@ def test_declared_ivfpq_view_refreshes_with_store(spark, tmp_path):
     live = {r["vec_id"] for r in
             publish.read_table(spark, root, "embeddings").collect()}
     assert got == live
-
-
-def test_ivfpq_meta_round_trip_and_zero_job_serve(spark, tmp_path):
-    """Round 11: publish_ivfpq_index persists a 1-row meta table in the
-    SAME commit; load_ivfpq_meta rebuilds the serve-path index dict, and
-    ivfpq_topk(index=...) returns exactly what the derive-from-codebook
-    fallback returns (with zero geometry round-trips before the probe)."""
-    from dataintegration_ecomprovider_spark.catalog import Catalog
-    from dataintegration_ecomprovider_spark.llm import similarity
-    from tests.conftest import SF_DIR
-
-    root = str(tmp_path / "store")
-    emb = Catalog(spark, SF_DIR).table("embeddings")
-    publish.publish_tables(
-        spark, {"embeddings": emb}, root, table_keys={"embeddings": ["vec_id"]}
-    )
-    rep = similarity.publish_ivfpq_index(
-        spark, root, n_centroids=8, m=4, codebook_size=8, pq_iters=1
-    )
-    # one atomic commit carries all four tables + the metadata echo
-    assert {"ivfpq_centroids", "ivfpq_codebook", "ivfpq_codes",
-            "ivfpq_meta"} <= set(rep["tables"])
-    assert (rep["m"], rep["k"], rep["residual"]) == (4, 8, False)
-    meta = similarity.load_ivfpq_meta(spark, root)
-    assert meta == {"m": 4, "k": 8, "sub": rep["sub"], "residual": False}
-
-    cents = publish.read_table(spark, root, "ivfpq_centroids")
-    codebook = publish.read_table(spark, root, "ivfpq_codebook")
-    codes = publish.read_table(spark, root, "ivfpq_codes")
-    queries = emb.filter(F.col("vec_id") < 5)
-    with_meta = similarity.ivfpq_topk(
-        queries, cents, codebook, codes, k=3, n_probe=4, index=meta
-    ).collect()
-    derived = similarity.ivfpq_topk(
-        queries, cents, codebook, codes, k=3, n_probe=4
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted(map(tuple, with_meta)) == sorted(map(tuple, derived))
-    assert sorted(with_meta, key=key) == sorted(derived, key=key)

@@ -56,12 +56,10 @@ def test_discovery_cardinality_guard(spark):
 def test_discovery_memoized_per_cache_key(spark):
     """With a cache_key the distinct-scan runs once per key: a second build
     returns the memoized list without touching the (changed) source, and a
-    different key re-scans.  clear_discovery_cache() resets."""
-    from dataintegration_ecomprovider_spark.operators.pivot import (
-        clear_discovery_cache,
-    )
+    different key re-scans.  PIVOT_VALUE_CACHE.clear() resets."""
+    from dataintegration_ecomprovider_spark.operators import pivot
 
-    clear_discovery_cache()
+    pivot.PIVOT_VALUE_CACHE.clear()
     try:
         eav1 = spark.createDataFrame([("a",), ("b",)], "k string")
         eav2 = spark.createDataFrame([("z",)], "k string")
@@ -73,10 +71,10 @@ def test_discovery_memoized_per_cache_key(spark):
         assert discover_pivot_values(eav2, F.col("k"), cache_key=("test", "k2")) == ["z"]
         # no key: never cached
         assert discover_pivot_values(eav2, F.col("k")) == ["z"]
-        clear_discovery_cache()
+        pivot.PIVOT_VALUE_CACHE.clear()
         assert discover_pivot_values(eav2, F.col("k"), cache_key=key) == ["z"]
     finally:
-        clear_discovery_cache()
+        pivot.PIVOT_VALUE_CACHE.clear()
 
 
 class _CountingFrame:
@@ -107,7 +105,7 @@ def test_discovery_cache_is_bounded(spark):
     the cache's cap of them: the least recently used key re-scans."""
     from dataintegration_ecomprovider_spark.operators import pivot
 
-    pivot.clear_discovery_cache()
+    pivot.PIVOT_VALUE_CACHE.clear()
     try:
         src = _CountingFrame(["a"])
         n_keys = 64  # past the cap
@@ -120,18 +118,16 @@ def test_discovery_cache_is_bounded(spark):
         assert src.scans == n_keys + 1  # the oldest was evicted
         assert len(pivot.PIVOT_VALUE_CACHE) <= pivot.PIVOT_VALUE_CACHE.cap
     finally:
-        pivot.clear_discovery_cache()
+        pivot.PIVOT_VALUE_CACHE.clear()
 
 
 def test_concurrent_discovery_of_one_key_scans_once(spark):
     """Four pivot builds asking for one key at once share one
     distinct-scan and each get their own copy of its values."""
     from dataintegration_ecomprovider_spark import runtime
-    from dataintegration_ecomprovider_spark.operators.pivot import (
-        clear_discovery_cache,
-    )
+    from dataintegration_ecomprovider_spark.operators import pivot
 
-    clear_discovery_cache()
+    pivot.PIVOT_VALUE_CACHE.clear()
     try:
         src = _CountingFrame(["a", "b"], delay=0.3)
         got = runtime.map_concurrently(
@@ -144,4 +140,4 @@ def test_concurrent_discovery_of_one_key_scans_once(spark):
         assert got == [["a", "b"]] * 4
         assert len({id(values) for values in got}) == 4
     finally:
-        clear_discovery_cache()
+        pivot.PIVOT_VALUE_CACHE.clear()

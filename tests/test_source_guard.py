@@ -10,8 +10,13 @@
 
 2. Every top-level package definition has a caller outside ``tests/``.
    A path that only its own tests reach is a second path beside a live
-   one; it goes, and its tests with it.  The only exemptions are the
-   reference capabilities listed in UNCALLED_REFERENCE_CAPABILITIES.
+   one; it goes, and its tests with it.  A caller is code: a string
+   counts only when the whole string is a name or a dotted name (what
+   ``getattr`` and attribute-path lookups take), so a docstring, comment
+   or message that mentions a definition keeps nothing alive.  The only
+   exemptions are listed in EXEMPT_DEFINITIONS, each value opening with
+   its reason class: test oracle, test seam, fault surface or reference
+   capability.
 
 3. A manifest entry becomes a reader's whole-table frame in one place,
    ``publish._read_logical``, which serves merge-on-read entries from
@@ -152,44 +157,65 @@ def test_read_guard_flags_the_pair_outside_the_helper(tmp_path):
 
 
 # --- reachability -----------------------------------------------------------
-# Reference capabilities that have no caller in the package, scripts or
-# benchmark yet.  Each stays until a query or job gives it one; the value
-# cites the reference behaviour it reproduces.
-UNCALLED_REFERENCE_CAPABILITIES = {
+# Definitions kept with no caller in the package, scripts or benchmark.
+# Each value opens with its reason class (EXEMPT_CLASSES): a test oracle
+# or test seam that tests compare against or substitute through, a fault
+# surface that reports or resets recorded failures, or a reference
+# capability that stays until a query or job gives it a caller.
+EXEMPT_CLASSES = (
+    "test oracle", "test seam", "fault surface", "reference capability",
+)
+EXEMPT_DEFINITIONS = {
+    "llm/dedup.py::_mix": "test oracle: the per-hash Column form that "
+    "test_llm compares _min_mix_sql against",
+    "operators/merge.py::upsert_two_pass": "test oracle: the two-pass "
+    "cross-check for upsert",
+    "plans/commit_protocol.py::InMemoryCasProtocol": "test seam: an "
+    "in-memory compare-and-swap store for commit races",
+    "plans/commit_protocol.py::set_protocol": "test seam: installs a "
+    "commit protocol such as InMemoryCasProtocol",
+    "plans/materialize.py::view_refresh_errors": "fault surface: the "
+    "recorded declared-view refresh failures",
+    "plans/materialize.py::clear_view_errors": "fault surface: resets the "
+    "recorded declared-view refresh failures",
+    "plans/publish.py::last_txn": "fault surface: the highest committed "
+    "txn id of an application, read to resume after a crash",
+    "sources/readers.py::JdbcSource": "reference capability: SQL Server "
+    "read, LoadReaderFromDatabase, src/EcomSourceReader.cs:151-226",
+    "sources/writers.py::JdbcSink": "reference capability: SQL Server "
+    "bulk staging + upsert, src/EcomDestinationWriter.cs:60,3027,3280",
+    "operators/bucketing.py::drop_staging_tables": "reference capability: "
+    "temp-table drop, src/EcomDestinationWriter.cs:4167-4182",
     **{
-        f"plans/jobspec.py::{name}": "job persistence: SaveAsXml, "
-        "src/EcomProvider.cs:706-732"
+        f"plans/jobspec.py::{name}": "reference capability: job "
+        "persistence, SaveAsXml, src/EcomProvider.cs:706-732"
         for name in (
             "save_job", "load_job", "job_to_json", "job_from_json",
             "mapping_to_dict", "mapping_from_dict", "rule_to_dict",
             "rule_from_dict", "_column_sql",
         )
     },
-    "operators/resolve.py::fail_on_missing": "FailOnMissingGroups, "
-    "src/EcomProvider.cs:1002-1005",
-    "operators/resolve.py::MissingReferencesError": "FailOnMissingGroups, "
-    "src/EcomProvider.cs:1002-1005",
-    "operators/pivot.py::category_field_columns": "ProductCategory|cat|field "
-    "column naming, src/EcomSourceReader.cs:271-272",
-    "sources/readers.py::XmlSource": "XML feed provider of the "
-    "DataIntegration suite (COVERAGE.md, XML + ORC sources)",
-    "sources/readers.py::OrcSource": "XML + ORC sources (COVERAGE.md)",
-    "operators/string_agg.py::grouped_string_agg": "A1 ordered string-agg, "
-    "src/EcomSourceReader.cs:336-352",
-    "operators/metrics.py::with_row_metrics": "A7 progress metrics, "
-    "src/EcomDestinationWriter.cs:1196-1204",
-    "streaming/incremental.py::merge_each_batch": "re-run-the-job "
-    "incremental import, src/EcomProvider.cs:937-966",
+    "operators/resolve.py::fail_on_missing": "reference capability: "
+    "FailOnMissingGroups, src/EcomProvider.cs:1002-1005",
+    "operators/resolve.py::MissingReferencesError": "reference capability: "
+    "FailOnMissingGroups, src/EcomProvider.cs:1002-1005",
+    "operators/pivot.py::category_field_columns": "reference capability: "
+    "ProductCategory|cat|field column naming, "
+    "src/EcomSourceReader.cs:271-272",
+    "streaming/incremental.py::merge_each_batch": "reference capability: "
+    "re-run-the-job incremental import, src/EcomProvider.cs:937-966",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+_DOTTED_NAME = re.compile(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*")
 
 
 def _names(nodes) -> set[str]:
     """Every name the nodes mention: identifiers, attribute names,
-    imported names, and identifier-shaped words inside string literals
-    (registries and scripts look functions up by name)."""
+    imported names, and string literals that are wholly a name or a
+    dotted name, split at the dots (registries and scripts look functions
+    up by name: ``getattr(mod, "fn")``, ``"Catalog.table"``).  Prose —
+    docstrings, comments, messages — names nothing."""
     out: set[str] = set()
     for node in nodes:
         for sub in ast.walk(node):
@@ -199,8 +225,12 @@ def _names(nodes) -> set[str]:
                 out.add(sub.attr)
             elif isinstance(sub, ast.alias):
                 out.add(sub.name.rsplit(".", 1)[-1])
-            elif isinstance(sub, ast.Constant) and isinstance(sub.value, str):
-                out.update(_WORD.findall(sub.value))
+            elif (
+                isinstance(sub, ast.Constant)
+                and isinstance(sub.value, str)
+                and _DOTTED_NAME.fullmatch(sub.value)
+            ):
+                out.update(sub.value.split("."))
     return out
 
 
@@ -262,9 +292,13 @@ def unreached_definitions(
 
 def test_every_package_definition_has_a_caller_outside_tests():
     unreached = unreached_definitions()
-    assert sorted(set(unreached) - set(UNCALLED_REFERENCE_CAPABILITIES)) == []
+    assert sorted(set(unreached) - set(EXEMPT_DEFINITIONS)) == []
     # an exemption whose definition gained a caller (or went) is stale
-    assert sorted(set(UNCALLED_REFERENCE_CAPABILITIES) - set(unreached)) == []
+    assert sorted(set(EXEMPT_DEFINITIONS) - set(unreached)) == []
+    assert [
+        key for key, why in EXEMPT_DEFINITIONS.items()
+        if not why.startswith(tuple(f"{c}: " for c in EXEMPT_CLASSES))
+    ] == []
 
 
 def test_reachability_follows_registries_imports_and_strings(tmp_path):
@@ -279,10 +313,18 @@ def test_reachability_follows_registries_imports_and_strings(tmp_path):
         "def _test_helper():\n    return 4\n"
         "class Base:\n    pass\n"
         "class Child(Base):\n    pass\n"
+        "def documented():\n    return 5\n"
+        "def in_message():\n    return 6\n"
+        "class Holder:\n    def method(self):\n        return 7\n"
     )
     (pkg / "registry.py").write_text(
         "from pkg import ops\n"
         "QUERIES = {'q': ops.live}\n"
+        "def describe():\n"
+        '    """Like documented, but cheaper."""\n'
+        "    raise ValueError('no plan; see in_message for one')\n"
+        "HELP = describe\n"
+        "WRAPPED = ['Holder.method']\n"
     )
     (pkg / "__init__.py").write_text("from pkg.ops import reexported\n")
     script = tmp_path / "script.py"
@@ -291,6 +333,10 @@ def test_reachability_follows_registries_imports_and_strings(tmp_path):
         "getattr(pkg.ops, 'by_name')()\n"
         "pkg.ops.Child()\n"
     )
+    # prose names nothing: a docstring or a longer message string
+    # mentioning a definition leaves it unreached, while the dotted
+    # attribute path reaches Holder
     assert unreached_definitions(pkg, [script]) == [
-        "ops.py::_test_helper", "ops.py::test_only",
+        "ops.py::_test_helper", "ops.py::documented", "ops.py::in_message",
+        "ops.py::test_only",
     ]

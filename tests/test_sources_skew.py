@@ -6,25 +6,27 @@ import pytest
 
 from dataintegration_ecomprovider_spark.catalog import Catalog
 from dataintegration_ecomprovider_spark.sources.readers import (
-    CsvSource, JdbcSource, JsonSource, ParquetSource,
+    CsvSource, FileSource, JdbcSource,
 )
 from tests.conftest import SF_DIR
 
 
 def test_file_sources_round_trip(spark, tmp_path):
     region = Catalog(spark, SF_DIR).table("region")
-    for fmt, src_cls in [("parquet", ParquetSource), ("csv", CsvSource), ("json", JsonSource)]:
+    for fmt in ("parquet", "csv", "json"):
         path = str(tmp_path / fmt)
         w = region.write.format(fmt)
         if fmt == "csv":
             w = w.option("header", "true")
         w.save(path)
-        loaded = src_cls(path).load(spark)
+        src = CsvSource(path) if fmt == "csv" else FileSource(path, fmt)
+        loaded = src.load(spark)
         assert loaded.count() == region.count()
 
     # projection + predicate pushdown reach the scan
-    pruned = ParquetSource(
-        str(tmp_path / "parquet"), columns=["r_name"], predicate="r_regionkey < 3"
+    pruned = FileSource(
+        str(tmp_path / "parquet"), "parquet",
+        columns=["r_name"], predicate="r_regionkey < 3",
     ).load(spark)
     assert pruned.columns == ["r_name"]
     assert pruned.count() == 3
@@ -52,27 +54,3 @@ def test_jdbc_source_options():
 
     with pytest.raises(ValueError):
         JdbcSource(url="u", table="t", partition_column="c").reader_options()
-
-
-def test_orc_and_xml_sources_round_trip(spark, tmp_path):
-    """OrcSource (columnar alternate) and XmlSource (Spark 4 native xml —
-    the DataIntegration suite's XML-feed provider role) load, project, and
-    filter like every FileSource."""
-    from dataintegration_ecomprovider_spark.sources.readers import OrcSource, XmlSource
-
-    region = Catalog(spark, SF_DIR).table("region")
-
-    orc_path = str(tmp_path / "orc")
-    region.write.format("orc").save(orc_path)
-    assert OrcSource(orc_path).load(spark).count() == region.count()
-
-    xml_path = str(tmp_path / "xml")
-    region.selectExpr(
-        "r_regionkey", "r_name"
-    ).coalesce(1).write.format("xml").option("rowTag", "region").save(xml_path)
-    loaded = XmlSource(
-        xml_path, row_tag="region",
-        columns=["r_name"], predicate="r_regionkey < 3",
-    ).load(spark)
-    assert loaded.columns == ["r_name"]
-    assert loaded.count() == 3

@@ -1,6 +1,6 @@
 """Structured Streaming tests: the true streaming forms of the batch
 queries in plans/stream_queries.py — file source, watermarked windowed agg,
-foreachBatch incremental merge, applyInPandasWithState sessionization."""
+foreachBatch incremental merge."""
 
 from __future__ import annotations
 
@@ -9,9 +9,6 @@ from pyspark.sql import functions as F
 
 from dataintegration_ecomprovider_spark.catalog import Catalog
 from dataintegration_ecomprovider_spark.streaming import incremental
-from dataintegration_ecomprovider_spark.streaming.sessions import (
-    sessionize_batch, sessionize_stream,
-)
 from dataintegration_ecomprovider_spark.streaming.windows import tumbling_agg
 from tests.conftest import SF_DIR
 
@@ -93,80 +90,6 @@ def test_foreachbatch_merge_converges_to_batch_upsert(spark, events_batch, event
     want = want.sort_values("event_id").reset_index(drop=True)
     assert len(got) == len(want)
     assert (got["value"].round(2).values == want["value"].round(2).values).all()
-
-
-def test_dedup_within_watermark_stream(spark, events_batch, tmp_path):
-    """dropDuplicatesWithinWatermark emits exactly one row per key; on a
-    time-ordered replay the kept row is the batch first_wins row."""
-    from dataintegration_ecomprovider_spark.operators.dedup import first_wins
-    from dataintegration_ecomprovider_spark.streaming.windows import (
-        dedup_within_watermark,
-    )
-
-    path = str(tmp_path / "events_sorted")
-    small = events_batch.filter(F.col("user_id") < 50)
-    # single time-ordered file => arrival order == event-time order
-    small.orderBy("ts", "event_id").coalesce(1).write.parquet(path)
-    stream = incremental.file_stream(spark, path, events_batch.schema)
-    deduped = dedup_within_watermark(
-        stream, ["user_id", "event_type"], ts_col="ts", watermark="10 minutes"
-    )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("dedup_stream").toPandas()
-    want = first_wins(
-        small, ["user_id", "event_type"], [F.col("ts"), F.col("event_id")]
-    ).toPandas()
-    assert len(got) == len(want)  # exactly one row per key
-    key = ["user_id", "event_type"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert got[key].equals(want[key])  # same key set
-    # ordered replay => first arrival IS the earliest (ts, event_id) row
-    assert got["event_id"].equals(want["event_id"])
-
-
-def test_stateful_sessionization_stream_matches_batch(spark, events_batch, tmp_path):
-    """applyInPandasWithState sessions (closed by end-of-stream timeout;
-    single batch so no session spans micro-batches) match the batch window
-    implementation for users whose sessions all closed."""
-    # single-file source => one micro-batch; all sessions close via timeout
-    path = str(tmp_path / "events_one")
-    small = events_batch.filter(F.col("user_id") < 50)
-    small.coalesce(1).write.parquet(path)
-    stream = incremental.file_stream(spark, path, events_batch.schema, max_files_per_trigger=10)
-    sessions = sessionize_stream(stream, gap_seconds=1800, timeout_ms=2_000)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sessions_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    import time
-
-    deadline = time.time() + 120
-    want = sessionize_batch(small, gap_seconds=1800).toPandas()
-    while time.time() < deadline:
-        got = spark.table("sessions_stream").toPandas()
-        if len(got) >= len(want):
-            break
-        time.sleep(2)
-    q.stop()
-    assert len(got) == len(want)
-    key = ["user_id", "session_seq"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert got["n_events"].equals(want["n_events"])
-    assert (got["total_value"].round(2).values == want["total_value"].round(2).values).all()
 
 
 def test_stream_into_store_versions_per_batch(spark, tmp_path):

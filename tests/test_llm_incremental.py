@@ -1256,15 +1256,6 @@ def test_ivfpq_index_serves_probed_cells_and_recall(spark):
     n = emb.count()
     assert all(t["cands"] < n for t in touched)  # never the full corpus
 
-    # the index dict's geometry serves exactly what re-deriving it from
-    # the codebook serves
-    few = (queries.filter(F.col("vec_id") < 5), idx["centroids"],
-           idx["codebook"], idx["codes"])
-    with_index = similarity.ivfpq_topk(*few, k=3, n_probe=4, index=idx)
-    derived = similarity.ivfpq_topk(*few, k=3, n_probe=4)
-    assert sorted(map(tuple, with_index.collect())) == \
-        sorted(map(tuple, derived.collect()))
-
 
 def test_pq_refined_codebook_improves_raw_adc_recall(spark):
     """Lloyd-trained sub-codebooks (pq_refine_codebook) beat the
@@ -1297,6 +1288,62 @@ def test_pq_refined_codebook_improves_raw_adc_recall(spark):
     grid = {(r["j"], r["c"]) for r in trained.collect()}
     assert grid == {(j, c) for j in range(4) for c in range(16)}
     assert raw_recall(trained) > raw_recall(idx["codebook"])
+
+
+def test_ivfpq_meta_round_trip_and_zero_job_serve(spark, tmp_path):
+    """The four IVFPQ tables round-trip through the store in one commit;
+    ivfpq_topk over the read-back tables with the ivfpq_index metadata
+    dict ({"m", "k", "sub", "residual"}) submits no Spark job before the
+    probe and returns exactly what the derive-from-codebook path
+    returns."""
+    from dataintegration_ecomprovider_spark.catalog import Catalog
+    from dataintegration_ecomprovider_spark.llm import similarity
+    from tests.conftest import SF_DIR
+
+    root = str(tmp_path / "store")
+    emb = Catalog(spark, SF_DIR).table("embeddings")
+    idx = similarity.ivfpq_index(
+        emb, n_centroids=8, m=4, codebook_size=8, pq_iters=1
+    )
+    meta = {key: idx[key] for key in ("m", "k", "sub", "residual")}
+    assert (meta["m"], meta["k"], meta["residual"]) == (4, 8, False)
+    rep = publish.publish_tables(
+        spark,
+        {"embeddings": emb,
+         "ivfpq_centroids": idx["centroids"].repartition(1),
+         "ivfpq_codebook": idx["codebook"],
+         "ivfpq_codes": idx["codes"]},
+        root,
+        table_keys={"embeddings": ["vec_id"], "ivfpq_centroids": ["cid"],
+                    "ivfpq_codebook": ["j", "c"], "ivfpq_codes": ["vec_id"]},
+    )
+    assert {"ivfpq_centroids", "ivfpq_codebook",
+            "ivfpq_codes"} <= set(publish.current_manifest(root)["tables"])
+    assert rep["version"] == publish.current_manifest(root)["version"]
+
+    cents = publish.read_table(spark, root, "ivfpq_centroids")
+    codebook = publish.read_table(spark, root, "ivfpq_codebook")
+    codes = publish.read_table(spark, root, "ivfpq_codes")
+    queries = emb.filter(F.col("vec_id") < 5)
+
+    sc = spark.sparkContext
+    group = "ivfpq-zero-job-serve"
+    sc.setJobGroup(group, group)
+    try:
+        served = similarity.ivfpq_topk(
+            queries, cents, codebook, codes, k=3, n_probe=4, index=meta
+        )
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        with_meta = served.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    derived = similarity.ivfpq_topk(
+        queries, cents, codebook, codes, k=3, n_probe=4
+    ).collect()
+    key = lambda r: (r["query_id"], r["rank"])
+    assert sorted(map(tuple, with_meta)) == sorted(map(tuple, derived))
+    assert sorted(with_meta, key=key) == sorted(derived, key=key)
 
 
 def _publish_ivfpq_geometry(spark, root, **index_kw):
